@@ -5,10 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: one warmup pass at sf0.001 (JIT + codegen compile +
   * parquet footer caches), then three timed passes per query at the target
   * scale factor (median reported; min/max spread retained), in sorted name
-  * order for run-to-run stability. Stream sections run five interleaved
-  * reps (their per-rep walls are seconds long, so a 3-rep median was one
-  * stall away from poisoned); stress passes are JIT-storm-tagged and
-  * publish the clean-pass median.
+  * order for run-to-run stability. Stress passes are JIT-storm-tagged
+  * and publish the clean-pass median. The streaming pipeline is measured
+  * by `streambench/` (the shipped `MovingStatsJob`/`ZScoreJob` and the
+  * bucketed dedup ingest), not here.
   *
   * Output contract (driver-parseable): the JSON metric line is
   *   1. written to `bench_out.json` next to the repo root,
@@ -67,7 +67,7 @@ object Bench {
     * margin on both sides. */
   val StormJitMs = 5000L
 
-  /** Composite storm rule shared by the stress and stream sections: a
+  /** Composite storm rule for the stress section's passes: a
     * pass is a storm when EITHER its JIT delta exceeds [[StormJitMs]] OR
     * its wall excess over the section's fastest pass is large and NOT
     * accounted for by GC — the in-session deopt signature measured
@@ -142,13 +142,9 @@ object Bench {
     // bench_out.json and stderr; an error string in the byte-budgeted
     // slim line could itself overflow the tail and unscore the round.
     // The 196-query registry sits near the STRUCTURAL cap of the
-    // driver's 2,000-char tail (~10 chars/query floor). The stream
-    // section moved to the full JSON ONLY in r16 (it was the last
-    // non-contract field with real width): stream throughput evidence
-    // lives in bench_out.json, committed every round as
-    // BENCH_r*_full.json. A future round that adds many queries must
-    // find budget here first — BenchContractSpec fails loudly when it
-    // runs out.
+    // 2,000-char output tail (~10 chars/query floor). A future round
+    // that adds many queries must find budget here first —
+    // BenchContractSpec fails loudly when it runs out.
     val vn =
       if (sentinelSec <= 0) "-1"
       else msSlim(total * sentinelAnchorSec / sentinelSec)
@@ -205,8 +201,7 @@ object Bench {
       // is a multi-second STW compaction landing on one unlucky rep
       // (measured: single-rep ratios of 20-29x on sub-second queries);
       // at 30s each sweep is small — worst main-section rep ratio fell
-      // to 2.0x, total 106->91 s, and every stream section sped up
-      // (two-phase 5.9k->11.3k rows/s). Env-overridable for re-runs.
+      // to 2.0x, total 106->91 s. Env-overridable for re-runs.
       .config("spark.cleaner.periodicGC.interval",
         sys.env.getOrElse("SPARK_GRAFT_CLEANER_GC", "30s"))
       // hold the WHOLE registry's generated classes (default 100 entries
@@ -350,113 +345,6 @@ object Bench {
         "null"
       }
 
-    // End-to-end streaming throughput: events replayed through the full
-    // parse → 6-sliding-window moving-stats pipeline in micro-batch mode
-    // (the reference's own design point is ~10 msg/s; this measures ours).
-    // Median-of-5, interleaved like the batch section — round-1→2 showed
-    // single-run stream numbers wobble 1.7× on unchanged code, and the
-    // five r13 runs still showed ~1.9× CROSS-run swing on two_phase at 3
-    // reps (VERDICT r13 item 3): a stream rep is seconds long, so one GC
-    // sweep or host stall lands on a third of the sample. Five reps
-    // tolerate two poisoned ones; the extra wall (~25 s) is outside the
-    // headline total, which sums only the main-section query medians.
-    val StreamReps = 5
-    val stream = try {
-      // single_window: the reference-fidelity one-window topology.
-      // six_windows_union: output-identical to the reference's 6-agg
-      // union, executed as ONE stateful aggregation over the constant
-      // (tag, end-offset) explode (slidingStatsMulti) — each tick fans to
-      // its 669 window instances through codegen'd explode + map-side
-      // partial agg instead of the interpreted 669-branch window()
-      // Expand the union topology planned (77 rows/s in round 5; the
-      // same rows, ~an order of magnitude faster).
-      // Scale path (two_phase): tumbling pre-aggregate, then re-window the
-      // partials — the reference's own chained-stateful topology (H1), 2
-      // orders of magnitude fewer rows through the wide Expand.
-      val cfgs = Seq(
-        ("single_window", graft.operators.TickOps.defaultWindows.take(1), 100000, "union"),
-        ("six_windows_union", graft.operators.TickOps.defaultWindows, 40000, "multi"),
-        ("six_windows_two_phase", graft.operators.TickOps.defaultWindows, 40000, "two_phase"))
-      // INTERLEAVED like the batch section: a machine stall poisons one
-      // rep of each config, not 2/3 reps of one config's median.
-      // STORM-TAGGED like the stress section (VERDICT r14 item 5): each
-      // rep brackets JIT/GC deltas and the published median is the
-      // clean-rep lower median, with per-rep wall/jit/gc arrays + storm
-      // count in the full JSON so the committed stream numbers carry the
-      // same attribution story as the stress passes.
-      val rowsBy = scala.collection.mutable.Map[String, Long]()
-      val allCfgs = cfgs.map(_._1) :+ "kafka_roundtrip"
-      val timesBy = allCfgs.map(_ -> Array.fill(StreamReps)(0.0)).toMap
-      val jitBy = allCfgs.map(_ -> Array.fill(StreamReps)(0L)).toMap
-      val gcBy = allCfgs.map(_ -> Array.fill(StreamReps)(0L)).toMap
-      val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-      val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      def gcTotalMs: Long = {
-        var s = 0L
-        gcBeans.forEach(b => s += math.max(b.getCollectionTime, 0L))
-        s
-      }
-      (0 until StreamReps).foreach { rep =>
-        cfgs.foreach { case (name, ws, cap, topology) =>
-          val j0 = jitBean.getTotalCompilationTime
-          val g0 = gcTotalMs
-          val t0 = System.nanoTime()
-          rowsBy(name) = streamThroughput(spark, sfDir, ws, cap, topology)
-          timesBy(name)(rep) = (System.nanoTime() - t0) / 1e9
-          jitBy(name)(rep) = jitBean.getTotalCompilationTime - j0
-          gcBy(name)(rep) = gcTotalMs - g0
-        }
-        // the executed-Kafka path: source offsets + sink publish through
-        // the fakekafka DSv2 double, single-window stats in between.
-        // kafkaRoundtrip times ONLY its streaming section and brackets
-        // its jit/gc deltas around that SAME region — whole-call
-        // bracketing let prep GC exceed half an in-section storm's
-        // excess and un-tag it (see kafkaRoundtrip's scaladoc)
-        val (rtRows, rtSec, rtJit, rtGc) = kafkaRoundtrip(spark, sfDir, 20000)
-        rowsBy("kafka_roundtrip") = rtRows
-        timesBy("kafka_roundtrip")(rep) = rtSec
-        jitBy("kafka_roundtrip")(rep) = rtJit
-        gcBy("kafka_roundtrip")(rep) = rtGc
-      }
-      def stormsOf(name: String): IndexedSeq[Boolean] = {
-        val walls = timesBy(name)
-        val minWall = walls.min
-        (0 until StreamReps).map(i =>
-          isStormPass(walls(i), jitBy(name)(i), gcBy(name)(i), minWall))
-      }
-      def medOf(name: String): Double = {
-        val storms = stormsOf(name)
-        val walls = timesBy(name).toSeq
-        cleanMedian(
-          walls.zip(storms).collect { case (w, false) => w }, walls)
-      }
-      def wrap(nameOf: String => String)(render: (String, Long, Double) => String) =
-        allCfgs.map { name =>
-          "\"" + nameOf(name) + "\":" + render(name, rowsBy(name), medOf(name))
-        }.mkString("{", ",", "}")
-      // slim uses abbreviated section/field names (w/u/t/k, bare rps) —
-      // FULL JSON ONLY since r16: the stream section was the last
-      // non-contract field with real width in the byte-budgeted slim
-      // line, and the 193-query registry needed its ~45 chars (r15 had
-      // already cut the per-field objects to bare rps). Stream
-      // throughput evidence lives in bench_out.json, committed per
-      // round as BENCH_r*_full.json.
-      val full = wrap(identity) { (name, rows, med) =>
-        val walls = timesBy(name).toSeq
-        s"""{"input_rows":$rows,"sec":${j3(med)},"rows_per_sec":${(rows / med).toLong},""" +
-          s""""spread":[${j3(walls.min)},${j3(walls.max)}],""" +
-          s""""storm_reps":${stormsOf(name).count(identity)},""" +
-          s""""wall":[${walls.map(j3).mkString(",")}],""" +
-          s""""jit_ms":[${jitBy(name).mkString(",")}],""" +
-          s""""gc_ms":[${gcBy(name).mkString(",")}]}"""
-      }
-      full
-    } catch { case e: Throwable =>
-      errors("stream_throughput") = s"${e.getClass.getName}: ${e.getMessage}"
-      System.err.println(s"[bench] stream_throughput FAILED: ${e.getClass.getName}: ${e.getMessage}")
-      "null"
-    }
-
     // ---- 10× scale-stress section (full JSON only) ----
     // The sf0.1 reps run in a fixed-overhead regime that hides
     // super-linear shuffle/skew costs. The scale-sensitive
@@ -587,28 +475,12 @@ object Bench {
       ("null", "null", "null")
     }
 
-    // ---- ingest-loop soak (full JSON only) ----
-    // The hybrid streaming ingest's LONGEVITY curve (the 50×-corpus
-    // price point said one trigger is cheap; this says trigger 60 still
-    // is): 60 triggers of 30-doc batches through
-    // streamingIngestDedupBucketed against a documents-table corpus,
-    // compactTail every 20 triggers, per-trigger wall published raw so
-    // the round report can show slope ~ 0. IngestSoakSpec runs the
-    // scaled-down CI version with exact-admission asserts.
-    val soakJson = try soakIngest(spark, sfDir, triggers = 60, batchDocs = 30,
-      compactEvery = 20)
-    catch { case e: Throwable =>
-      errors("soak") = s"${e.getClass.getName}: ${e.getMessage}"
-      System.err.println(s"[bench] soak FAILED: ${e.getClass.getName}: ${e.getMessage}")
-      "null"
-    }
-
     val errJson = errors.map { case (k, v) =>
       "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
         .replaceAll("[\\x00-\\x1f]", " ") + "\""
     }.mkString("{", ",", "}")
-    // Two renderings of the same measurements: the FULL json (per-query and
-    // per-stream min/max spread) goes to bench_out.json; the SLIM line (no
+    // Two renderings of the same measurements: the FULL json (per-query
+    // min/max spread) goes to bench_out.json; the SLIM line (no
     // spread maps) goes to stdout and the shutdown hook. The driver parses
     // a 2,000-char tail of process output — round 2's full line was 3,133
     // chars and truncated to unparseable; the slim line measures ~1,500.
@@ -632,7 +504,7 @@ object Bench {
       .map { case (rep, qi, sec) => s"[$rep,$qi,${j3(sec)}]" }
       .mkString("[", ",", "]")
     val jsonFull =
-      s"""{"metric":"total","value":$total,"unit":"sec","run_id":"$runId","sentinel_pre":${j3(sentinelPreSec)},"sentinel_post":${j3(sentinelPostSec)},"sentinel_sections":$sectionSentinelsJson,"queries":$qs,"spread":$spread,"ann_build":$annBuildSec,"dedup_build":$dedupBuildSec,"ann_sweep":$annSweepJson,"stress10x":$stressJson,"stress10x_spread":$stressSpreadJson,"stress10x_storms":$stressStormsJson,"soak":$soakJson,"errors":$errJson,"stream":$stream,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","run_id":"$runId","sentinel_pre":${j3(sentinelPreSec)},"sentinel_post":${j3(sentinelPostSec)},"sentinel_sections":$sectionSentinelsJson,"queries":$qs,"spread":$spread,"ann_build":$annBuildSec,"dedup_build":$dedupBuildSec,"ann_sweep":$annSweepJson,"stress10x":$stressJson,"stress10x_spread":$stressSpreadJson,"stress10x_storms":$stressStormsJson,"errors":$errJson,"sf":"$sfDir"}"""
     val json = renderSlim(
       results.map { case (k, t) => k -> t(Reps / 2) }, total, errors.size,
       sfDir, sentinelSec)
@@ -648,258 +520,5 @@ object Bench {
       System.out.flush()
     }))
     spark.stop()
-  }
-
-  /** The ingest-loop soak: `triggers` micro-batches of `batchDocs` real
-    * documents (id-shifted per trigger so every batch is fresh) through
-    * the hybrid bucketed ingest, [[graft.operators.DedupIndexStore.compactTail]]
-    * every `compactEvery` triggers. Returns a JSON object with the raw
-    * per-trigger seconds plus first/last-decile medians — the longevity
-    * evidence (slope ~ 0) the 100 TB claim needs. */
-  private[graft] def soakIngest(
-      spark: SparkSession,
-      sfDir: String,
-      triggers: Int,
-      batchDocs: Int,
-      compactEvery: Int): String = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    import graft.operators.DedupIndexStore
-    val docs = graft.util.SparkUtil.table(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"))
-    val idSpan = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
-    // corpus = even ids; batches = odd ids, id-shifted per trigger — every
-    // trigger carries REAL text (the signing cost the loop pays in
-    // production) that is genuinely fresh, so admissions land, the tail
-    // grows, and the compactions fold real rows. If the table is small
-    // enough that slices cycle, the salted re-use near-dups its EARLIER
-    // admitted incarnation and is dropped through the store — realistic
-    // dedup work either way.
-    val slices = docs.filter(col("doc_id") % 2 === 1)
-      .limit(batchDocs * triggers)
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    require(slices.length >= batchDocs,
-      s"documents table too small for a $batchDocs-doc soak batch")
-    val tail = java.nio.file.Files.createTempDirectory("graft-soak-tail").toString
-    graft.util.SparkUtil.deleteDirOnExit(tail)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-soak-ckpt").toString
-    graft.util.SparkUtil.deleteDirOnExit(ckpt)
-    Seq("bands", "shingles", "meta").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_soak_idx_$t"))
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      DedupIndexStore.buildBucketed(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        "graft_soak_idx", 8)
-      DedupIndexStore.initEmpty(spark, tail, k = 3, numHashes = 32, bands = 8)
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](spark)
-      val q = graft.streaming.StreamOps.streamingIngestDedupBucketed(
-        in.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        "graft_soak_idx", tail, ckpt,
-        (df, _) => { df.count(); () })
-      val wall = Array.fill(triggers)(0.0)
-      val compactSec = scala.collection.mutable.ArrayBuffer.empty[Double]
-      try {
-        (0 until triggers).foreach { t =>
-          val batch = (0 until batchDocs).map { j =>
-            val (id, text) = slices((t * batchDocs + j) % slices.length)
-            // fresh identity AND fresh content per trigger: a unique salt
-            // token keeps replayed slices from near-dupping their earlier
-            // incarnations, so every batch pays full admission work
-            (id + (t + 1) * idSpan, s"$text soaksalt${t}x$j")
-          }
-          val t0 = System.nanoTime()
-          in.addData(batch: _*)
-          q.processAllAvailable()
-          wall(t) = (System.nanoTime() - t0) / 1e9
-          if ((t + 1) % compactEvery == 0 && t + 1 < triggers) {
-            val c0 = System.nanoTime()
-            DedupIndexStore.compactTail(spark, "graft_soak_idx", tail, 8)
-            compactSec += (System.nanoTime() - c0) / 1e9
-          }
-        }
-      } finally q.stop()
-      // a tiny standalone soak (Probe's soak:1/soak:2) has empty decile
-      // windows; med on an empty Seq threw IndexOutOfBounds (ADVICE r13)
-      // — degrade to JSON null instead of failing the whole section
-      def med(xs: Seq[Double]): Option[Double] =
-        if (xs.isEmpty) None else Some(xs.sorted.apply(xs.size / 2))
-      def orNull(o: Option[Double]): String = o.map(_.toString).getOrElse("null")
-      val firstMed = med(wall.slice(2, 12).toSeq)
-      val lastMed = med(wall.takeRight(10).toSeq)
-      s"""{"triggers":$triggers,"batch_docs":$batchDocs,""" +
-        s""""per_trigger":[${wall.map(j3).mkString(",")}],""" +
-        s""""first10_med":${orNull(firstMed)},"last10_med":${orNull(lastMed)},""" +
-        s""""compact_sec":[${compactSec.map(j3).mkString(",")}]}"""
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      Seq("bands", "shingles", "meta").foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS graft_soak_idx_$t"))
-    }
-  }
-
-  /** Kafka-to-Kafka throughput through the fakekafka DSv2 double: JSON
-    * frames pre-published to a broker topic, KafkaIO source (earliest) →
-    * parse → single sliding window → KafkaIO sink — the executed form of
-    * the reference's deployment topology, measuring source offset
-    * planning + binary column decode + sink publish on top of the same
-    * windowed aggregation single_window measures from files.
-    *
-    * Returns (input rows, measured-section seconds, JIT delta ms, GC
-    * delta ms). The clock covers ONLY the streaming query — frame
-    * rendering and broker publish are setup, not the measurement — and
-    * the JVM deltas bracket EXACTLY that same timed section, so the
-    * storm tagger judges the region the published wall covers.
-    * Bracketing the whole call instead let heavy GC in the untimed prep
-    * exceed half of a genuine in-section deopt storm's excess and UN-tag
-    * it (the excess rule reads "not explained by GC"), putting the storm
-    * wall into the clean median. */
-  private[graft] def kafkaRoundtrip(
-      spark: SparkSession, sfDir: String, cap: Int): (Long, Double, Long, Long) = {
-    import org.apache.spark.sql.functions._
-    val inTopic = s"bench-rt-in-${System.nanoTime()}"
-    val outTopic = s"bench-rt-out-${System.nanoTime()}"
-    graft.streaming.fake.FakeBroker.createTopic(inTopic)
-    graft.streaming.fake.FakeBroker.createTopic(outTopic)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-rt").toFile
-    val ev = graft.util.SparkUtil.table(spark, sfDir, "events").limit(cap)
-    val frames = ev.select(
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("ts"), col("event_id"))).as("rn"),
-      col("event_type"), col("value"))
-      .select(to_json(struct(
-        col("event_type").as("symbol"),
-        col("value").as("price"),
-        date_format(timestamp_millis(lit(1704067200000L) + col("rn") * 100L),
-          "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").as("event_time"))).as("value"))
-      .collect()
-    frames.foreach(r => graft.streaming.fake.FakeBroker.publish(
-      inTopic, null, r.getString(0).getBytes("UTF-8")))
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    var streamSec = 0.0
-    var jitDelta = 0L
-    var gcDelta = 0L
-    try {
-      val raw = graft.streaming.KafkaIO.source(
-        spark, "bench:9092", inTopic, "earliest", "fakekafka")
-      val stats = graft.operators.TickOps.movingStatsUnion(
-        graft.operators.TickOps.parseTicks(raw)
-          .withWatermark("event_time", "10 seconds"),
-        graft.operators.TickOps.defaultWindows.take(1))
-      val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-      val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      def gcTotalMs: Long = {
-        var s = 0L
-        gcBeans.forEach(b => s += math.max(b.getCollectionTime, 0L))
-        s
-      }
-      val j0 = jit.getTotalCompilationTime
-      val g0 = gcTotalMs
-      val t0 = System.nanoTime()
-      val q = graft.streaming.KafkaIO.sink(
-        graft.operators.TickOps.toKafkaJson(stats,
-          Seq("window_timestamp", "symbol", "window", "avg_price", "std_price")),
-        "bench:9092", outTopic, ckpt.getAbsolutePath, "update",
-        "0 seconds", "fakekafka").start()
-      q.processAllAvailable()
-      q.stop()
-      streamSec = (System.nanoTime() - t0) / 1e9
-      jitDelta = jit.getTotalCompilationTime - j0
-      gcDelta = gcTotalMs - g0
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      graft.streaming.fake.FakeBroker.deleteTopic(inTopic)
-      graft.streaming.fake.FakeBroker.deleteTopic(outTopic)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(ckpt)
-    }
-    (frames.length.toLong, streamSec, jitDelta, gcDelta)
-  }
-
-  private[graft] def streamThroughput(
-      spark: SparkSession,
-      sfDir: String,
-      cfgs: Seq[graft.operators.TickOps.WindowConfig],
-      cap: Int,
-      topology: String): Long = {
-    import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toFile
-    // Replay events as the producer would emit them: one tick per 100 ms
-    // of event time (reference cadence, main.py:11), as pre-rendered JSON
-    // frames split into several files → several micro-batches. Sparse
-    // month-wide raw timestamps would instead measure worst-case state
-    // materialization, not pipeline throughput.
-    val ev = graft.util.SparkUtil.table(spark, sfDir, "events").limit(cap)
-    val n = ev.count()
-    ev.select(col("event_type"), col("value"),
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("ts"), col("event_id"))).as("rn"))
-      .select(col("rn"), to_json(struct(
-        col("event_type").as("symbol"),
-        col("value").as("price"),
-        date_format(timestamp_millis(lit(1704067200000L) + col("rn") * 100L),
-          "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").as("event_time"))).as("value"))
-      // range-partition by arrival order so part files (consumed in name
-      // order by the file source) replay time-ordered — a round-robin
-      // split would put the stream's max event time in batch 1 and the
-      // watermark would discard most later rows as late
-      .repartitionByRange(8, col("rn"))
-      .sortWithinPartitions(col("rn"))
-      .select(col("value"))
-      .write.mode("overwrite").text(tmp.getAbsolutePath)
-    val raw = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", "2")
-      .text(tmp.getAbsolutePath)
-    // Stateful streaming cost is dominated by per-batch state-store
-    // commits: one per stateful operator per shuffle partition. 32
-    // partitions × 6 window aggs = 192 commits/batch of pure fixed
-    // overhead at this state size — size partitions to the state, not
-    // the CPU count (the same knob a real cluster job would set).
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    if (topology == "two_phase")
-      spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    // window()-based multi-window plans put 360+ branches through Spark's
-    // Expand; whole-stage codegen for that span cannot compile (janino
-    // method-split bug on huge switch-cases) and Spark falls back to
-    // interpreted after a failed multi-second compile that also spews an
-    // ERROR stack trace into the bench output. Skip the doomed attempt up
-    // front: identical execution path (interpreted Expand), no wasted
-    // compile, clean output. The "multi" explode topology has no wide
-    // Expand — it keeps codegen ON (that is the point of it) — and since
-    // two_phase adopted the same constant-offset explode for its second
-    // phase, only the union-of-window()s topology still needs the opt-out.
-    if (cfgs.size > 1 && topology == "union")
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val ticks = graft.operators.TickOps.parseTicks(raw)
-        .withWatermark("event_time", "10 seconds")
-      val stats = topology match {
-        case "two_phase" => graft.operators.TickOps.slidingStatsTwoPhase(ticks, cfgs)
-        case "multi" => graft.operators.TickOps.slidingStatsMulti(ticks, cfgs)
-        case _ => graft.operators.TickOps.movingStatsUnion(ticks, cfgs)
-      }
-      val q = stats.writeStream.format("noop").outputMode("update").start()
-      q.processAllAvailable()
-      q.stop()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      // deleteOnExit can't remove non-empty dirs; clean up the replay files
-      tmp.listFiles().foreach(_.delete())
-      tmp.delete()
-    }
-    n
   }
 }

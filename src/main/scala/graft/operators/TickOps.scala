@@ -212,76 +212,6 @@ object TickOps {
       ExactAgg.dstddev0FromPartials(col("s"), col("q"), col("n")).as("std_price"))
   }
 
-  /** Streaming-native scale path for multi-window stats: phase 1 tumbles
-    * ticks into slide-sized buckets (1-branch Expand, tiny watermark-
-    * evicted state), phase 2 fans the *bucket partials* (count/sum/sumsq)
-    * into each containing sliding window via the constant-offset explode
-    * — the wide fan-out runs over one row per (bucket × symbol) instead
-    * of one per tick, ~rate×slide fewer rows, and keeps whole-stage
-    * codegen (no window() Expand).
-    *
-    * This chains two stateful aggregations, the exact topology the
-    * reference accepts by disabling Spark's correctness check
-    * (SURVEY.md §4 H1) — callers must set
-    * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled=false`
-    * for streaming use; in batch it is just a two-level aggregation.
-    * Sample stddev is reconstructed exactly from the merged partials.
-    *
-    * State shape, honestly: phase 1 evicts via the watermark; phase 2 is
-    * keyed on the integer window end, which Spark cannot tie back to the
-    * watermark column (the event-time metadata does not survive derived
-    * arithmetic), so its per-(end, window, symbol) rows are not evicted —
-    * the same contract as [[slidingStatsMulti]]'s single aggregate, at
-    * ~1/(rate×slide) the update traffic. Where unbounded retention is
-    * unacceptable, run the reference's own chained-jobs topology (phase 1
-    * → sink → separate phase-2 query) and let each job bound its state.
-    */
-  def slidingStatsTwoPhase(
-      ticks: DataFrame,
-      cfgs: Seq[WindowConfig] = defaultWindows): DataFrame = {
-    require(cfgs.map(_.slideMs).distinct.size == 1, "uniform slide required")
-    val slide = cfgs.head.slide
-    val slideMs = cfgs.head.slideMs
-    // Phase 1: ONE watermark-evicted tumbling aggregate over raw ticks.
-    // (An earlier revision re-derived this subtree once per window config
-    // — six copies of the same stateful operator in one streaming plan,
-    // because streaming plans share no subplans. 12 state stores' worth
-    // of per-trigger commits dominated the runtime; this shape commits 2.)
-    val partial = ticks
-      .groupBy(window(col("event_time"), slide, slide).as("w10"), col("symbol"))
-      .agg(
-        count(col("price")).as("pn"),
-        sum(col("price")).as("ps"),
-        sum(col("price") * col("price")).as("pq"))
-    // Phase 2: the slidingStatsMulti explode, but over BUCKET PARTIALS —
-    // the constant (tag, end-offset) literal fans each partial into every
-    // sliding window containing it (~rate×slide fewer rows through the
-    // wide fan-out than exploding raw ticks), and ONE aggregate merges
-    // the (n, s, q) partials per (end, window, symbol). No window()
-    // Expand anywhere, so whole-stage codegen survives — unlike the
-    // union-of-window()s topology this replaces.
-    val offsets = array(cfgs.flatMap { c =>
-      (0 until (c.durationMs / c.slideMs).toInt).map(k =>
-        struct(lit(c.name).as("_1"), lit(c.durationMs - k * c.slideMs).as("_2")))
-    }: _*)
-    val merged = partial
-      .select(col("symbol"), col("pn"), col("ps"), col("pq"),
-        unix_millis(col("w10.start")).as("bucket_ms"),
-        explode(offsets).as("w"))
-      .groupBy((col("bucket_ms") + col("w._2")).as("end_ms"),
-        col("w._1").as("window"), col("symbol"))
-      .agg(sum(col("pn")).as("n"), sum(col("ps")).as("s"), sum(col("pq")).as("q"))
-    val variance = (col("q") - col("s") * col("s") / col("n")) / (col("n") - lit(1))
-    val sd = when(col("n") === 1, lit(0.0))
-      .otherwise(sqrt(greatest(variance, lit(0.0))))
-    merged.select(
-      timestamp_millis(col("end_ms")).as("window_timestamp"),
-      col("symbol"),
-      col("window"),
-      coalesce(col("s") / col("n"), lit(0.0)).as("avg_price"),
-      when(sd.isNull || isnan(sd), lit(0.0)).otherwise(sd).as("std_price"))
-  }
-
   /** Re-nest flat per-window rows into one record per (timestamp, symbol)
     * with an array of per-window stats (reference moving_statistic.py:100-113).
     * Array order is collect_list arrival order — nondeterministic, exactly

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
 /** Kafka source/sink builders with the reference's operational options
@@ -52,19 +52,4 @@ object KafkaIO {
       .option("checkpointLocation", checkpointDir)
       .outputMode(outputMode)
       .trigger(Trigger.ProcessingTime(triggerInterval))
-
-  /** Console monitoring sink: 3 rows, untruncated, 10 s cadence
-    * (reference moving_statistic.py:134-141). */
-  def consoleSink(
-      df: DataFrame,
-      outputMode: String,
-      numRows: Int = 3,
-      triggerInterval: String = "10 seconds"): StreamingQuery =
-    df.writeStream
-      .format("console")
-      .option("numRows", numRows)
-      .option("truncate", value = false)
-      .outputMode(outputMode)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
 }

@@ -9,28 +9,22 @@ import graft.operators.TickOps
   * avg/stddev branches → re-nested per (window end, symbol) →
   * `btc-price-moving` (reference src/Tranforms/moving_statistic.py).
   *
-  * The re-nest (collect_list after windowed aggregation) chains two
+  * The re-nest (collect_list after windowed aggregation) would chain two
   * stateful operators — the reference silences Spark's correctness check
-  * to allow it (SURVEY.md §4 H1). We support both strategies:
-  *
-  *  - [[H1Mode.ForeachBatch]] (default, correct): the windowed aggregation
-  *    is the only stateful streaming operator; the re-nest runs as a plain
-  *    batch aggregation inside each micro-batch via foreachBatch. Output
-  *    matches the reference per-batch without disabling any checks.
-  *  - [[H1Mode.Chained]] (fidelity): exactly the reference topology with
-  *    `spark.sql.streaming.statefulOperator.checkCorrectness.enabled=false`,
-  *    accepting the same possible watermark-related drops the reference
-  *    accepts.
+  * to allow it (SURVEY.md §4 H1). Here the windowed aggregation is the
+  * only stateful streaming operator; the re-nest runs as a plain batch
+  * aggregation inside each micro-batch via foreachBatch, so output
+  * matches the reference per-batch without disabling any checks.
   */
 object MovingStatsJob {
 
+  // Single-valued; kept, with both jobs' `mode` parameter, because streambench passes it positionally.
   sealed trait H1Mode
   object H1Mode {
     case object ForeachBatch extends H1Mode
-    case object Chained extends H1Mode
   }
 
-  /** parse → watermark → per-window stats; shared by both modes. */
+  /** parse → watermark → per-window stats. */
   def statsStream(raw: DataFrame): DataFrame =
     TickOps.movingStatsUnion(
       TickOps.parseTicks(raw).withWatermark("event_time", "10 seconds"))
@@ -49,27 +43,18 @@ object MovingStatsJob {
       startingOffsets: String = "latest",
       triggerInterval: String = "5 seconds"): StreamingQuery = {
     val raw = KafkaIO.source(spark, brokers, inTopic, startingOffsets, format)
-    val flat = statsStream(raw)
-    mode match {
-      case H1Mode.ForeachBatch =>
-        flat.writeStream
-          .outputMode("update")
-          .option("checkpointLocation", checkpointDir)
-          .trigger(Trigger.ProcessingTime(triggerInterval))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            nested(batch).write
-              .mode("append") // DSv2 rejects the default ErrorIfExists
-              .format(format)
-              .option("kafka.bootstrap.servers", brokers)
-              .option("topic", outTopic)
-              .save()
-          }
-          .start()
-      case H1Mode.Chained =>
-        spark.conf.set(
-          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-        KafkaIO.sink(nested(flat), brokers, outTopic, checkpointDir, "update",
-          triggerInterval, format).start()
-    }
+    statsStream(raw).writeStream
+      .outputMode("update")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.ProcessingTime(triggerInterval))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        nested(batch).write
+          .mode("append") // DSv2 rejects the default ErrorIfExists
+          .format(format)
+          .option("kafka.bootstrap.servers", brokers)
+          .option("topic", outTopic)
+          .save()
+      }
+      .start()
   }
 }

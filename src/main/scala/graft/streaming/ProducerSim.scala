@@ -62,7 +62,6 @@ object ProducerSim {
     var price: Option[Double] = None
     var lastUpdateMs: Long = Long.MinValue
     var counter = 0
-    var lastPrice: Option[Double] = None
     val out = Seq.newBuilder[Frame]
 
     events.foreach {
@@ -72,11 +71,11 @@ object ProducerSim {
           counter >= forceAfterRepeats ||
           (now - lastUpdateMs) > forceAfterMs
         if (updateNeeded) {
-          price = Some(p); lastUpdateMs = now; counter = 0; lastPrice = Some(p)
+          price = Some(p); lastUpdateMs = now; counter = 0
         } else counter += 1
       case (_, _, Some(_)) => () // failed fetch: no cell update (main.py:66)
       case (now, _, None) =>
-        price.orElse(lastPrice).foreach { p =>
+        price.foreach { p =>
           out += Frame(symbol, p, now, math.max(0L, now - lastUpdateMs))
         }
     }

@@ -54,27 +54,18 @@ object ZScoreJob {
       KafkaIO.source(spark, brokers, priceTopic, startingOffsets, format))
     val moving = parseMoving(
       KafkaIO.source(spark, brokers, movingTopic, startingOffsets, format))
-    val flat = zscores(ticks, moving)
-    mode match {
-      case MovingStatsJob.H1Mode.ForeachBatch =>
-        flat.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", checkpointDir)
-          .trigger(Trigger.ProcessingTime(triggerInterval))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            nested(batch).write
-              .mode("append") // DSv2 rejects the default ErrorIfExists
-              .format(format)
-              .option("kafka.bootstrap.servers", brokers)
-              .option("topic", outTopic)
-              .save()
-          }
-          .start()
-      case MovingStatsJob.H1Mode.Chained =>
-        spark.conf.set(
-          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-        KafkaIO.sink(nested(flat), brokers, outTopic, checkpointDir, "append",
-          triggerInterval, format).start()
-    }
+    zscores(ticks, moving).writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.ProcessingTime(triggerInterval))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        nested(batch).write
+          .mode("append") // DSv2 rejects the default ErrorIfExists
+          .format(format)
+          .option("kafka.bootstrap.servers", brokers)
+          .option("topic", outTopic)
+          .save()
+      }
+      .start()
   }
 }

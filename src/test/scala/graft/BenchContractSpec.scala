@@ -39,9 +39,8 @@ class BenchContractSpec extends AnyFunSuite {
       val it = node.fieldNames(); val b = Seq.newBuilder[String]
       while (it.hasNext) b += it.next(); b.result().toSet
     }
-    // NO "stream" since r16: the last non-contract field with real
-    // width moved to the full JSON (committed as BENCH_r*_full.json)
-    // when the 193-query registry outgrew the tail again. "sent" -> "vn"
+    // NO "stream": graft.Bench has no streaming section (streambench
+    // measures the streaming pipeline). "sent" -> "vn"
     // in r17 (VERDICT r16 item 7): the sentinel-NORMALIZED total
     // replaced the raw sentinel (recoverable as anchor·value/vn; exact
     // pre/post medians live in the full JSON).
@@ -92,15 +91,6 @@ class BenchContractSpec extends AnyFunSuite {
       queries.TimeSeriesQueries.queries)
     assert(SparkEntry.queries.size == perFile.map(_.size).sum,
       "query-name collision across per-file registries (++ silently dropped one)")
-  }
-
-  test("kafka_roundtrip bench path runs end-to-end and returns the input count") {
-    val (n, sec, jitMs, gcMs) =
-      Bench.kafkaRoundtrip(TestSpark.spark, "/root/testdata/sf0.001", 500)
-    assert(n == 500, s"roundtrip must report the replayed row count, got $n")
-    assert(sec > 0.0, "streaming section must be timed")
-    assert(jitMs >= 0L && gcMs >= 0L,
-      "jit/gc deltas bracket the measured section and can never be negative")
   }
 
   test("cleanMedian takes the fast-side middle on even clean counts") {

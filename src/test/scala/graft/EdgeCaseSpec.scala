@@ -25,7 +25,6 @@ class EdgeCaseSpec extends SparkSpec {
     val e = emptyTicks
     assert(TickOps.slidingStats(e, WindowConfig("30s", "30 seconds"), exact = true).count() == 0)
     assert(TickOps.slidingStatsMulti(e, TickOps.defaultWindows, exact = true).count() == 0)
-    assert(TickOps.slidingStatsTwoPhase(e).count() == 0)
     val stats = TickOps.slidingStats(e, WindowConfig("30s", "30 seconds"))
     assert(TickOps.zscore(TickOps.joinTicksToStats(e, stats)).count() == 0)
     assert(TickOps.explodeWindows(TickOps.nestWindows(stats)).count() == 0)

@@ -10,9 +10,9 @@ import graft.streaming.StreamOps
   * says the THOUSANDTH trigger is still cheap — per-trigger wall must not
   * creep as the index accumulates ingests and compactions fold them, and
   * the on-disk footprint must stay bounded by the compaction cadence, not
-  * the stream's lifetime. CI runs the scaled-down version (30+ triggers,
-  * 2 mid-stream compactions); Bench's `soak` section runs the full-size
-  * one and publishes the per-trigger curve. */
+  * the stream's lifetime. This spec asserts it at a CI-sized scale (30
+  * triggers, 2 mid-stream compactions); `streambench`'s `docs_ingest`
+  * workload drives the same ingest loop under timing. */
 class IngestSoakSpec extends SparkSpec {
   import spark.implicits._
 

@@ -49,10 +49,10 @@ class StreamingSpec extends SparkSpec {
   } }
 
   test("six-window explode topology streams the exact union-topology rows") {
-    // the bench's six_windows_union runs slidingStatsMulti as ONE
-    // update-mode stateful aggregation (codegen'd explode, no 669-branch
-    // Expand); its final streamed rows must equal the reference-fidelity
-    // 6-agg union computed in batch on the same ticks
+    // slidingStatsMulti streams as ONE update-mode stateful aggregation
+    // (codegen'd explode, no 669-branch Expand); its final streamed rows
+    // must equal the reference-fidelity 6-agg union computed in batch on
+    // the same ticks
     val in = MemoryStream[PriceTick](spark)
     val cfgs = TickOps.defaultWindows
     // exact=true on both sides: the decimal-exact stats are accumulation-
@@ -181,23 +181,6 @@ class StreamingSpec extends SparkSpec {
       assert(expired.length == 1 && expired.head.getAs[Double]("seconds_until") == 20.0)
     } finally q.stop()
   }
-
-  test("chained H1 mode plans with correctness check disabled (reference fidelity)") { noWideExpandCodegen {
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    try {
-      val in = MemoryStream[String](spark)
-      val nested = TickOps.nestWindows(MovingStatsJob.statsStream(in.toDF()))
-      val q = TickOps.toKafkaJson(nested, Seq("timestamp", "symbol", "windows"))
-        .writeStream.format("memory").queryName("chained_out")
-        .outputMode(OutputMode.Update).start()
-      try {
-        in.addData(tickJson("BTCUSDT", 100.0, "2024-01-01T00:00:02.000Z"))
-        q.processAllAvailable()
-        assert(spark.table("chained_out").count() >= 0) // topology accepted
-      } finally q.stop()
-    } finally spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-  } }
 
   test("price alerts via transformWithState (RocksDB state store)") {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")

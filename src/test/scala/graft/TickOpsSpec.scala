@@ -176,27 +176,4 @@ class TickOpsSpec extends SparkSpec {
       assert(x.getDouble(4) == y.getDouble(4), s"std not bit-equal: $x vs $y")
     }
   }
-
-  test("slidingStatsTwoPhase equals single-phase on batch data") {
-    val t = ticksDf(
-      ("BTC", 100.0, "2024-01-01 00:00:02"),
-      ("ETH", 55.0, "2024-01-01 00:01:07"),
-      ("BTC", 130.0, "2024-01-01 00:02:33"),
-      ("BTC", 90.0, "2024-01-01 00:02:39"))
-    // see slidingStatsMulti test: 360-branch Expand can't codegen anyway
-    val (a, b) = noWideExpandCodegen {
-      val one = TickOps.movingStatsUnion(t, TickOps.defaultWindows, exact = false)
-      val two = TickOps.slidingStatsTwoPhase(t, TickOps.defaultWindows)
-      // same groups; stats equal within fp reconstruction tolerance
-      (one.orderBy("window_timestamp", "symbol", "window").collect(),
-        two.orderBy("window_timestamp", "symbol", "window").collect())
-    }
-    assert(a.length == b.length)
-    a.zip(b).foreach { case (x, y) =>
-      assert(x.getTimestamp(0) == y.getTimestamp(0) && x.getString(1) == y.getString(1)
-        && x.getString(2) == y.getString(2))
-      assert(math.abs(x.getDouble(3) - y.getDouble(3)) < 1e-9)
-      assert(math.abs(x.getDouble(4) - y.getDouble(4)) < 1e-6)
-    }
-  }
 }

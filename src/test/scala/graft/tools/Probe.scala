@@ -425,14 +425,6 @@ object Probe {
         (1 to 3).foreach { i =>
           step(s"full$i")(graft.SparkEntry.queries("q55_clean_chunks")(spark, dir).count())
         }
-      case w if w.startsWith("soak") =>
-        // soak[:triggers[:batchDocs[:compactEvery]]] — the bench's
-        // ingest-loop longevity section, runnable standalone
-        val parts = w.split(":")
-        val tr = if (parts.length > 1) parts(1).toInt else 20
-        val bd = if (parts.length > 2) parts(2).toInt else 20
-        val ce = if (parts.length > 3) parts(3).toInt else 8
-        println("PROBE soak " + graft.Bench.soakIngest(spark, dir, tr, bd, ce))
       case "stress_build" =>
         // materialize the bench's 10× stress tables at a FIXED path so
         // diag/x3 runs can measure the stressed queries in a cold JVM
