@@ -99,20 +99,84 @@ object TickOps {
 
   /** Bag-semantics union fold — the reference's topology: one windowed agg
     * per config, folded with union (reference moving_statistic.py:93-97).
-    * N configs ⇒ N shuffles of the full input. Kept for fidelity and for
-    * streaming (each agg is an independent stateful operator); batch
-    * callers that care about scale should prefer [[slidingStatsMulti]]. */
+    * N configs ⇒ N shuffles of the full input, and each sliding `window()`
+    * plans an Expand with duration/slide branches (360 for 1h/10s) too
+    * wide for whole-stage codegen. Kept only as the reference-fidelity
+    * batch operator (q02, and the reference the tests check the streamed
+    * and scale paths against); [[slidingStatsMulti]] computes the same
+    * rows in one aggregation, and the streaming job uses its two steps. */
   def unionAll(dfs: Seq[DataFrame]): DataFrame = dfs.reduce(_ union _)
 
   def movingStatsUnion(ticks: DataFrame, cfgs: Seq[WindowConfig] = defaultWindows, exact: Boolean = false): DataFrame =
     unionAll(cfgs.map(slidingStats(ticks, _, exact)))
 
+  private def uniformSlideMs(cfgs: Seq[WindowConfig]): Long = {
+    require(cfgs.map(_.slideMs).distinct.size == 1, "uniform slide required")
+    cfgs.head.slideMs
+  }
+
+  /** Start of the slide bucket holding `event_time`, in epoch ms. Floor
+    * semantics (`ms − pmod(ms, slide)`), so a pre-1970 tick lands in the
+    * bucket below it like `window()` puts it; integer `div` truncates
+    * toward zero and would shift it one slide up. */
+  private def bucketMs(slideMs: Long): Column = {
+    val ms = unix_millis(col("event_time"))
+    (ms - pmod(ms, lit(slideMs))).as("bucket_ms")
+  }
+
+  /** Window ends containing a tick: bucket + dur − k·slide, k ∈ [0, dur/slide).
+    * The (tag, end-offset) pairs are a CONSTANT array — one literal,
+    * exploded per row with trivial arithmetic after it — rather than a
+    * per-row array-of-structs construction (which costs an allocation per
+    * row×instance and overwhelms whole-stage codegen at 6 configs).
+    * Pure lit/struct literal array (constant-folded once by Catalyst);
+    * deliberately NOT typedlit, whose runtime encoder derivation breaks
+    * under REPL-style layered classloaders. */
+  private def windowOffsets(cfgs: Seq[WindowConfig]): Column =
+    array(cfgs.flatMap { c =>
+      (0 until (c.durationMs / c.slideMs).toInt).map(k =>
+        struct(lit(c.name).as("_1"), lit(c.durationMs - k * c.slideMs).as("_2")))
+    }: _*)
+
+  /** Every (sliding window instance × tick) membership: each tick is
+    * exploded over the constant (tag, end-offset) array. Output:
+    * window_timestamp (window END), window tag, symbol, price. Requires a
+    * uniform slide across configs (true of the reference's six). */
+  def windowInstances(ticks: DataFrame, cfgs: Seq[WindowConfig] = defaultWindows): DataFrame = {
+    val slideMs = uniformSlideMs(cfgs)
+    ticks
+      .select(col("symbol"), col("price"), bucketMs(slideMs),
+        explode(windowOffsets(cfgs)).as("w"))
+      .select(
+        timestamp_millis(col("bucket_ms") + col("w._2")).as("window_timestamp"),
+        col("w._1").as("window"),
+        col("symbol"),
+        col("price"))
+  }
+
+  /** Mean and sample stddev per (window end, tag, symbol) of
+    * [[windowInstances]] rows, with the same coercions and output columns
+    * as [[slidingStats]]. One aggregation for every window config, so a
+    * stream runs it as ONE stateful operator. */
+  def windowStats(instances: DataFrame, exact: Boolean = false): DataFrame = {
+    val (a, s) = avgStd(exact)
+    instances
+      .groupBy(col("window_timestamp"), col("window"), col("symbol"))
+      .agg(a, s)
+      .select(
+        col("window_timestamp"),
+        col("symbol"),
+        col("window"),
+        col("avg_price"),
+        col("std_price"))
+  }
+
   /** Scale-optimized equivalent of [[movingStatsUnion]]: instead of one
     * shuffle per window config, explode each row into its window-instance
-    * memberships (window tag + window end) and aggregate once — a single
-    * shuffle keyed by (window end, tag, symbol) regardless of how many
-    * window configs exist. At 100 TB this turns 6 full-input shuffles into
-    * 1 (the exploded rows partial-aggregate map-side before shuffling, so
+    * memberships and aggregate once — a single shuffle keyed by
+    * (window end, tag, symbol) regardless of how many window configs
+    * exist. At 100 TB this turns 6 full-input shuffles into 1 (the
+    * exploded rows partial-aggregate map-side before shuffling, so
     * shuffled bytes are bounded by group cardinality, not by the ×46
     * explode fan-out).
     *
@@ -121,37 +185,8 @@ object TickOps {
   def slidingStatsMulti(
       ticks: DataFrame,
       cfgs: Seq[WindowConfig] = defaultWindows,
-      exact: Boolean = false): DataFrame = {
-    require(cfgs.map(_.slideMs).distinct.size == 1, "uniform slide required")
-    val slideMs = cfgs.head.slideMs
-    // Window ends containing a tick: bucket + dur − k·slide, k ∈ [0, dur/slide).
-    // The (tag, end-offset) pairs are a CONSTANT array — one literal,
-    // exploded per row with trivial arithmetic after it — rather than a
-    // per-row array-of-structs construction (which costs an allocation per
-    // row×instance and overwhelms whole-stage codegen at 6 configs).
-    // pure lit/struct literal array (constant-folded once by Catalyst);
-    // deliberately NOT typedlit, whose runtime encoder derivation breaks
-    // under REPL-style layered classloaders
-    val offsets = array(cfgs.flatMap { c =>
-      (0 until (c.durationMs / c.slideMs).toInt).map(k =>
-        struct(lit(c.name).as("_1"), lit(c.durationMs - k * c.slideMs).as("_2")))
-    }: _*)
-    val (a, s) = avgStd(exact)
-    ticks
-      .select(col("symbol"), col("price"),
-        (expr(s"unix_millis(event_time) div ${slideMs}L") * slideMs).as("bucket_ms"))
-      .select(col("symbol"), col("price"), col("bucket_ms"),
-        explode(offsets).as("w"))
-      .groupBy((col("bucket_ms") + col("w._2")).as("end_ms"),
-        col("w._1").as("window"), col("symbol"))
-      .agg(a, s)
-      .select(
-        timestamp_millis(col("end_ms")).as("window_timestamp"),
-        col("symbol"),
-        col("window"),
-        col("avg_price"),
-        col("std_price"))
-  }
+      exact: Boolean = false): DataFrame =
+    windowStats(windowInstances(ticks, cfgs), exact)
 
   /** Batch scale path for EXACT multi-window stats: the slidingStatsMulti
     * explode, but run over per-(slide-bucket, symbol) DECIMAL partials
@@ -165,20 +200,14 @@ object TickOps {
   def slidingStatsMultiTwoPhaseExact(
       ticks: DataFrame,
       cfgs: Seq[WindowConfig] = defaultWindows): DataFrame = {
-    require(cfgs.map(_.slideMs).distinct.size == 1, "uniform slide required")
-    val slideMs = cfgs.head.slideMs
+    val slideMs = uniformSlideMs(cfgs)
     val partial = ticks
-      .select(col("symbol"), col("price"),
-        (expr(s"unix_millis(event_time) div ${slideMs}L") * slideMs).as("bucket_ms"))
+      .select(col("symbol"), col("price"), bucketMs(slideMs))
       .groupBy(col("bucket_ms"), col("symbol"))
       .agg(
         count(col("price")).as("pn"),
         ExactAgg.dsumPartial(col("price")).as("ps"),
         ExactAgg.dsumsqPartial(col("price")).as("pq"))
-    val offsets = array(cfgs.flatMap { c =>
-      (0 until (c.durationMs / c.slideMs).toInt).map(k =>
-        struct(lit(c.name).as("_1"), lit(c.durationMs - k * c.slideMs).as("_2")))
-    }: _*)
     // The partials are tiny (one decimal row per bucket × symbol), so
     // AQE coalesces the phase-1 shuffle down to 1-2 partitions — and the
     // 360-offset explode below, FUSED onto those partitions, would then
@@ -200,7 +229,7 @@ object TickOps {
       expr(s"bucket_ms div ${chunkMs}L"))
     val merged = spread
       .select(col("symbol"), col("pn"), col("ps"), col("pq"), col("bucket_ms"),
-        explode(offsets).as("w"))
+        explode(windowOffsets(cfgs)).as("w"))
       .groupBy((col("bucket_ms") + col("w._2")).as("end_ms"),
         col("w._1").as("window"), col("symbol"))
       .agg(sum(col("pn")).as("n"), sum(col("ps")).as("s"), sum(col("pq")).as("q"))

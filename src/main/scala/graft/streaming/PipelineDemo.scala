@@ -19,11 +19,6 @@ object PipelineDemo {
     val dir = args.headOption.getOrElse("/tmp/stream_in")
     val spark = SparkUtil.newLocalSession("graft-pipeline-demo", "4")
     val schema = spark.read.parquet(dir).schema
-    // Every stage here runs the six-window union: its window() Expand has
-    // too many branches for whole-stage codegen (janino method-split bug)
-    // and Spark would fall back to interpreted after a failed multi-second
-    // compile + ERROR stack trace per query. Skip the doomed attempt.
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
 
     // Stage 0a (producer fidelity, reference main.py semantics): event
     // values play the role of fetched Binance prices; ProducerSim applies

@@ -167,12 +167,10 @@ class FakeKafkaSpec extends SparkSpec {
       s"""{"symbol":"BTCUSDT","price":${100.0 + (i % 7)},"event_time":"$ts"}"""
     }
     publish(in, ticks)
-    noWideExpandCodegen {
-      val q = MovingStatsJob.run(spark, "fake:9092", in, out, ckpt(),
-        MovingStatsJob.H1Mode.ForeachBatch, format = "fakekafka",
-        startingOffsets = "earliest", triggerInterval = "0 seconds")
-      q.processAllAvailable(); q.stop()
-    }
+    val q = MovingStatsJob.run(spark, "fake:9092", in, out, ckpt(),
+      MovingStatsJob.H1Mode.ForeachBatch, format = "fakekafka",
+      startingOffsets = "earliest", triggerInterval = "0 seconds")
+    q.processAllAvailable(); q.stop()
     val outVals = topicValues(out)
     assert(outVals.nonEmpty, "moving-stats records should land on the out topic")
     import spark.implicits._
@@ -222,12 +220,10 @@ class FakeKafkaSpec extends SparkSpec {
     Seq(price, moving, zout).foreach(FakeBroker.createTopic(_))
     publish(price, graft.streaming.ProducerSim.toJson(frames))
 
-    noWideExpandCodegen {
-      val q1 = MovingStatsJob.run(spark, "fake:9092", price, moving, ckpt(),
-        MovingStatsJob.H1Mode.ForeachBatch, format = "fakekafka",
-        startingOffsets = "earliest", triggerInterval = "0 seconds")
-      q1.processAllAvailable(); q1.stop()
-    }
+    val q1 = MovingStatsJob.run(spark, "fake:9092", price, moving, ckpt(),
+      MovingStatsJob.H1Mode.ForeachBatch, format = "fakekafka",
+      startingOffsets = "earliest", triggerInterval = "0 seconds")
+    q1.processAllAvailable(); q1.stop()
     assert(topicValues(moving).nonEmpty, "stage 2 must publish moving stats")
 
     val q2 = graft.streaming.ZScoreJob.run(spark, "fake:9092", price, moving,

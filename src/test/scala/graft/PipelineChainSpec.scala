@@ -20,7 +20,7 @@ class PipelineChainSpec extends SparkSpec {
   private def tickJson(symbol: String, price: Double, iso: String): String =
     s"""{"symbol":"$symbol","price":$price,"event_time":"$iso"}"""
 
-  test("EP1 streaming output feeds EP2 streaming join through the topic boundary") { noWideExpandCodegen {
+  test("EP1 streaming output feeds EP2 streaming join through the topic boundary") {
     val topicDir = Files.createTempDirectory("graft-topic").toFile
 
     // EP1: ticks → six-window stats → nested JSON records on the "topic"
@@ -65,5 +65,5 @@ class PipelineChainSpec extends SparkSpec {
       assert(rows.exists(r => r.getAs[Double]("avg_price") == 100.0 &&
         math.abs(r.getAs[Double]("zscore_price") - 20.0 / math.sqrt(200.0)) < 1e-9))
     } finally q2.stop()
-  } }
+  }
 }

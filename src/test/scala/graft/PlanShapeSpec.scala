@@ -152,6 +152,27 @@ class PlanShapeSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("statsStream runs all six windows as one stateful aggregation with no Expand") {
+    // One state store for every window instance; a per-window window()
+    // topology would plan six StateStoreSaveExecs and six wide Expands
+    // that fall out of whole-stage codegen on every trigger.
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import spark.implicits._
+    val in = MemoryStream[String](spark)
+    val q = graft.streaming.MovingStatsJob.statsStream(in.toDF()).writeStream
+      .format("memory").queryName("stats_plan_shape").outputMode("update").start()
+    try {
+      in.addData("""{"symbol":"BTC","price":1.0,"event_time":"2024-01-01T00:00:02Z"}""")
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(plan.collect { case s: StateStoreSaveExec => s }.length == 1, plan)
+      assert(plan.collect { case e: ExpandExec => e }.isEmpty, plan)
+      assert(q.lastProgress.stateOperators.length == 1)
+    } finally q.stop()
+  }
+
   test("q199 composes the whole ladder as ONE lazy plan with its Generate boundaries") {
     // VERDICT r16 item 4: the web→training-sequences ladder must stay a
     // single registered plan — no driver materialization between stages

@@ -56,7 +56,7 @@ class ProducerSimSpec extends SparkSpec {
     assert(frames.map(_.dataAgeMs) == Seq(50L, 150L, 250L, 350L, 450L, 550L, 50L, 150L))
   }
 
-  test("duplicate ticks flow through the window aggregation individually") { noWideExpandCodegen {
+  test("duplicate ticks flow through the window aggregation individually") {
     // price moves once, late: 15 frames re-publish 100.0, 5 frames carry
     // 110.0. If re-published duplicates were collapsed the window average
     // would be 105; counting every frame individually it is 102.5.
@@ -81,5 +81,5 @@ class ProducerSimSpec extends SparkSpec {
       assert(w30.length == 1)
       assert(w30.head.getAs[Double]("avg_price") == 102.5)
     } finally q.stop()
-  } }
+  }
 }

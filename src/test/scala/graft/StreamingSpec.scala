@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.model.Models.PriceTick
 import graft.operators.TickOps
@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
   private def tickJson(symbol: String, price: Double, iso: String): String =
     s"""{"symbol":"$symbol","price":$price,"event_time":"$iso","data_age_ms":1}"""
 
-  test("moving stats streaming: windowed update-mode emission via MemoryStream") { noWideExpandCodegen {
+  test("moving stats streaming: windowed update-mode emission via MemoryStream") {
     val in = MemoryStream[String](spark)
     val raw = in.toDF().withColumnRenamed("value", "value")
     val flat = MovingStatsJob.statsStream(raw)
@@ -46,7 +46,7 @@ class StreamingSpec extends SparkSpec {
         .groupBy("window_timestamp").agg(max("avg_price").as("a")).collect()
       assert(w30b.forall(_.getAs[Double]("a") == 110.0)) // (100+110+120)/3
     } finally q.stop()
-  } }
+  }
 
   test("six-window explode topology streams the exact union-topology rows") {
     // slidingStatsMulti streams as ONE update-mode stateful aggregation
@@ -87,6 +87,69 @@ class StreamingSpec extends SparkSpec {
         s"group sets differ: ${streamed.keySet.size} vs ${batch.keySet.size}")
       streamed.foreach { case (k, v) => assert(v == batch(k), s"at $k") }
     } finally q.stop()
+  }
+
+  test("statsStream emits the six-window() union's update rows batch by batch and evicts the same state") {
+    // The reference topology: one window() aggregation per config,
+    // watermarked on event_time. statsStream watermarks the derived window
+    // end instead; both must emit the same rows in every batch and hold
+    // the same state rows, which pins its watermark delay.
+    //
+    // One source each: a MemoryStream drops what its first reader commits
+    val (refIn, gotIn) = (MemoryStream[String](spark), MemoryStream[String](spark))
+    val reference = TickOps.movingStatsUnion(
+      TickOps.parseTicks(refIn.toDF()).withWatermark("event_time", "10 seconds"))
+    type Out = (Long, String, String, Double, Double)
+    def start(df: DataFrame, name: String) = {
+      val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Out])]
+      val q = df.writeStream.queryName(name).outputMode(OutputMode.Update)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          val rows = b.collect().toSeq.map(r => (r.getTimestamp(0).getTime, r.getString(1),
+            r.getString(2), r.getDouble(3), r.getDouble(4))).sortBy(r => (r._1, r._2, r._3))
+          batches.synchronized { batches += id -> rows }
+          ()
+        }.start()
+      (q, batches)
+    }
+    // a started query keeps the session conf it started with
+    val (ref, refOut) = noWideExpandCodegen(start(reference, "parity_ref"))
+    val (got, gotOut) = start(MovingStatsJob.statsStream(gotIn.toDF()), "parity_got")
+    def stateRows(q: StreamingQuery): Long =
+      q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    def step(ticks: (String, Double, String)*): (Seq[(Long, Seq[Out])], Long) = {
+      val json = ticks.map { case (sym, p, iso) => tickJson(sym, p, iso) }
+      refIn.addData(json); gotIn.addData(json)
+      ref.processAllAvailable()
+      got.processAllAvailable()
+      val emitted = gotOut.synchronized(gotOut.toList)
+      val expected = refOut.synchronized(refOut.toList)
+      assert(emitted.map(_._1) == expected.map(_._1), "batch ids differ")
+      emitted.zip(expected).foreach { case ((id, a), (_, b)) =>
+        assert(a == b, s"batch $id: only streamed ${a.diff(b).take(5)}; only reference ${b.diff(a).take(5)}")
+      }
+      assert(stateRows(got) == stateRows(ref))
+      gotOut.synchronized(gotOut.clear()); refOut.synchronized(refOut.clear())
+      (emitted, stateRows(got))
+    }
+    try {
+      // in order
+      val (first, _) = step(("BTC", 100.0, "2024-01-01T00:00:02Z"), ("ETH", 50.0, "2024-01-01T00:00:05Z"),
+        ("BTC", 110.0, "2024-01-01T00:00:07Z"), ("BTC", 120.0, "2024-01-01T00:00:15Z"))
+      assert(first.flatMap(_._2).nonEmpty)
+      // watermark → 00:00:50
+      step(("BTC", 130.0, "2024-01-01T00:01:00Z"))
+      // late for every 30 s window (ends :20–:40), not for 1m (:60, :70) or 1h
+      val (late, beforeJump) = step(("BTC", 140.0, "2024-01-01T00:00:12Z"))
+      val lateWindows = late.flatMap(_._2).map(_._3).toSet
+      assert(!lateWindows("30s") && lateWindows("1m") && lateWindows("1h"))
+      // jump: watermark → 01:09:50 passes every earlier window end (≤ 01:01:00)
+      val (_, afterJump) = step(("BTC", 150.0, "2024-01-01T01:10:00Z"))
+      assert(afterJump < beforeJump)
+      assert(afterJump == 669) // 3+6+30+90+180+360 instances of the 01:10:00 tick
+      // older than every window: its last 1h window ends 01:05:00 ≤ watermark
+      val (old, _) = step(("ETH", 60.0, "2024-01-01T00:05:00Z"))
+      assert(old.flatMap(_._2).isEmpty)
+    } finally { ref.stop(); got.stop() }
   }
 
   test("watermark: late data beyond 10s is dropped from append-mode windows") {
@@ -137,7 +200,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("H1 foreachBatch re-nest: nested JSON output without chained stateful aggs") { noWideExpandCodegen {
+  test("H1 foreachBatch re-nest: nested JSON output without chained stateful aggs") {
     val in = MemoryStream[String](spark)
     val flat = MovingStatsJob.statsStream(in.toDF())
     val seen = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -155,7 +218,7 @@ class StreamingSpec extends SparkSpec {
       val js = seen.find(_.contains(""""window":"30s"""")).get
       assert(js.contains(""""symbol":"BTCUSDT"""") && js.contains(""""windows":["""))
     } finally q.stop()
-  } }
+  }
 
   test("price alerts: time-until-higher/lower with horizon expiry") {
     val in = MemoryStream[PriceTick](spark)

@@ -79,6 +79,31 @@ class TickOpsSpec extends SparkSpec {
     }
   }
 
+  test("pre-epoch ticks bucket with floor semantics, like window()") {
+    // −15 s lies in the slide bucket [−20 s, −10 s): its 30 s windows end
+    // at −10 s, 0 s and +10 s. Truncating division would bucket it at
+    // −10 s and shift every window end one slide up.
+    val t = ticksDf(
+      ("BTC", 100.0, "1969-12-31 23:59:45"),
+      ("BTC", 110.0, "1969-12-31 23:59:50"),
+      ("ETH", 55.0, "1969-12-31 23:58:01"),
+      ("BTC", 90.0, "1970-01-01 00:00:03"))
+    val w30 = TickOps.slidingStatsMulti(ticksDf(("BTC", 100.0, "1969-12-31 23:59:45")),
+        Seq(WindowConfig("30s", "30 seconds")))
+      .collect().map(_.getAs[Timestamp]("window_timestamp")).toSet
+    assert(w30 == Set(ts("1969-12-31 23:59:50"), ts("1970-01-01 00:00:00"),
+      ts("1970-01-01 00:00:10")))
+    val cfgs = TickOps.defaultWindows
+    noWideExpandCodegen {
+      val union = TickOps.movingStatsUnion(t, cfgs, exact = true)
+      for (multi <- Seq(TickOps.slidingStatsMulti(t, cfgs, exact = true),
+          TickOps.slidingStatsMultiTwoPhaseExact(t, cfgs))) {
+        assert(multi.count() == union.count())
+        assert(multi.exceptAll(union).isEmpty && union.exceptAll(multi).isEmpty)
+      }
+    }
+  }
+
   test("nestWindows/explodeWindows roundtrip preserves the bag") {
     val t = ticksDf(
       ("BTC", 100.0, "2024-01-01 00:00:02"),
@@ -162,12 +187,10 @@ class TickOpsSpec extends SparkSpec {
     // not within a tolerance
     val ev = graft.util.SparkUtil.events(spark, sf()).limit(2000)
       .selectExpr("event_type AS symbol", "value AS price", "ts AS event_time")
-    val (a, b) = noWideExpandCodegen {
-      (TickOps.slidingStatsMulti(ev, TickOps.defaultWindows, exact = true)
-         .orderBy("window_timestamp", "symbol", "window").collect(),
-       TickOps.slidingStatsMultiTwoPhaseExact(ev, TickOps.defaultWindows)
-         .orderBy("window_timestamp", "symbol", "window").collect())
-    }
+    val a = TickOps.slidingStatsMulti(ev, TickOps.defaultWindows, exact = true)
+      .orderBy("window_timestamp", "symbol", "window").collect()
+    val b = TickOps.slidingStatsMultiTwoPhaseExact(ev, TickOps.defaultWindows)
+      .orderBy("window_timestamp", "symbol", "window").collect()
     assert(a.length == b.length && a.nonEmpty)
     a.zip(b).foreach { case (x, y) =>
       assert(x.getTimestamp(0) == y.getTimestamp(0) && x.getString(1) == y.getString(1)
