@@ -15,8 +15,15 @@ import graft.operators.TickOps
   * The join is a stream-stream inner equi-join on
   * (event_time == window end, symbol) — equality, not a range: only ticks
   * landing exactly on a 10 s slide boundary match, by reference design
-  * (SURVEY.md §2.7). Both sides carry a 10 s watermark, which bounds the
-  * symmetric-hash join state.
+  * (SURVEY.md §2.7). Both sides carry a 10 s watermark, and the join
+  * evicts a row once the query watermark (the minimum of the two: newest
+  * tick − 10 s) passes its event time. That keeps about 10 s of ticks,
+  * but not 10 s of moving stats: a moving row's time is its window END,
+  * up to 1 h after its ticks, and the moving job re-emits an open window
+  * on every batch that changes it. Every re-emitted version stays in the
+  * join state until the watermark passes that end, so the moving side
+  * holds up to an hour of re-emissions (82,134 join rows after three live
+  * batches of 40 symbols at 10 ticks/s).
   */
 object ZScoreJob {
 

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -155,6 +156,22 @@ object SparkUtil {
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
   }
 
+  /** A `local[cores]` session whose checkpoint I/O forks no processes.
+    *
+    * Without Hadoop's native library, the default checkpoint manager's
+    * `FileContext.rename` forks `readlink` several times per committed
+    * file (data file and `.crc`), and the local filesystem forks `chmod`
+    * for every file it creates. With a state-store delta per instance plus
+    * offset- and commit-log entries on every trigger, that was over 2,000
+    * processes in one 6 s streaming benchmark run. Here the checkpoint
+    * manager is Spark's `FileSystem`-based one (same temp-file-and-rename
+    * commit, no link-status lookups) and `file:` is
+    * [[NoForkLocalFileSystem]] (same `.crc` sidecars and mode bits, set
+    * without `chmod`). Checksums and `checkCorrectness` stay on.
+    *
+    * Hadoop caches filesystems by scheme, not by configuration: a `file:`
+    * filesystem created in this JVM before the session keeps Hadoop's
+    * forking class. */
   def newLocalSession(appName: String, cores: String): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -168,6 +185,9 @@ object SparkUtil {
       // 100 entries churns in any session that runs many queries, and an
       // evicted class's JIT profile dies with it
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     configure(spark)

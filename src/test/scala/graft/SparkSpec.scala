@@ -4,17 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run
-  * in the same forked JVM). */
+  * in the same forked JVM), built by the shipped session factory so every
+  * streaming test checkpoints through the same file manager and
+  * filesystem as the program. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.util.SparkUtil.newLocalSession("graft-test", "4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
