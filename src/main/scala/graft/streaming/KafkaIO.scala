@@ -35,10 +35,15 @@ object KafkaIO {
       .option("failOnDataLoss", "false")
       .load()
 
-  /** Kafka sink writer: 5 s processing-time trigger, explicit checkpoint
-    * (reference moving_statistic.py:123-131). Caller picks output mode. */
+  /** The Kafka writer of both jobs: 5 s processing-time trigger, explicit
+    * checkpoint (reference moving_statistic.py:123-131). Each micro-batch
+    * is encoded to Kafka rows (a `value` column, optionally `key`) and
+    * appended to `topic` by a batch write inside `foreachBatch`, so
+    * `encode` may run batch-only operators such as the jobs' re-nesting
+    * aggregation (SURVEY.md §4 H1). Caller picks output mode. */
   def sink(
       df: DataFrame,
+      encode: DataFrame => DataFrame,
       brokers: String,
       topic: String,
       checkpointDir: String,
@@ -46,10 +51,15 @@ object KafkaIO {
       triggerInterval: String = "5 seconds",
       format: String = "kafka"): DataStreamWriter[Row] =
     df.writeStream
-      .format(format)
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpointDir)
       .outputMode(outputMode)
+      .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerInterval))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        encode(batch).write
+          .mode("append") // DSv2 rejects the default ErrorIfExists
+          .format(format)
+          .option("kafka.bootstrap.servers", brokers)
+          .option("topic", topic)
+          .save()
+      }
 }

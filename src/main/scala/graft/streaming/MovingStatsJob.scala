@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TickOps
 
@@ -68,18 +68,7 @@ object MovingStatsJob {
       startingOffsets: String = "latest",
       triggerInterval: String = "5 seconds"): StreamingQuery = {
     val raw = KafkaIO.source(spark, brokers, inTopic, startingOffsets, format)
-    statsStream(raw).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        nested(batch).write
-          .mode("append") // DSv2 rejects the default ErrorIfExists
-          .format(format)
-          .option("kafka.bootstrap.servers", brokers)
-          .option("topic", outTopic)
-          .save()
-      }
-      .start()
+    KafkaIO.sink(statsStream(raw), nested, brokers, outTopic, checkpointDir,
+      "update", triggerInterval, format).start()
   }
 }

@@ -17,7 +17,9 @@ import graft.model.Models.PriceTick
   * Implemented with `flatMapGroupsWithState` — per-symbol state holds the
   * ticks still awaiting resolution; event-time timeout + watermark bound
   * the state size, so state is O(ticks within horizon) per symbol
-  * regardless of stream length.
+  * regardless of stream length. It runs on whichever state store the
+  * session selects (`spark.sql.streaming.stateStore.providerClass`: the
+  * default HDFS-backed one or RocksDB).
   */
 object PriceAlerts {
 
@@ -86,6 +88,8 @@ object PriceAlerts {
       ticks: Dataset[PriceTick],
       direction: Int,
       horizonSec: Double = 20.0)(implicit spark: SparkSession): Dataset[Alert] = {
+    require(direction == 1 || direction == -1, s"direction must be +1 or -1, got $direction")
+    require(horizonSec > 0, s"horizonSec must be positive, got $horizonSec")
     import spark.implicits._
     ticks
       .groupByKey(_.symbol)

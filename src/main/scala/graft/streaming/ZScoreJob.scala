@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StringType
 
 import graft.model.Models
@@ -61,18 +61,7 @@ object ZScoreJob {
       KafkaIO.source(spark, brokers, priceTopic, startingOffsets, format))
     val moving = parseMoving(
       KafkaIO.source(spark, brokers, movingTopic, startingOffsets, format))
-    zscores(ticks, moving).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        nested(batch).write
-          .mode("append") // DSv2 rejects the default ErrorIfExists
-          .format(format)
-          .option("kafka.bootstrap.servers", brokers)
-          .option("topic", outTopic)
-          .save()
-      }
-      .start()
+    KafkaIO.sink(zscores(ticks, moving), nested, brokers, outTopic, checkpointDir,
+      "append", triggerInterval, format).start()
   }
 }

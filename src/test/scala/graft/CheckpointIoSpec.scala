@@ -6,11 +6,12 @@ import java.time.Instant
 import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
+import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.state.StateStore
 
 import graft.streaming.{MovingStatsJob, ZScoreJob}
 import graft.streaming.fake.FakeBroker
@@ -67,6 +68,9 @@ class CheckpointIoSpec extends SparkSpec {
     // metrics (first executor heartbeat) run `getconf`
     FileSystem.get(new java.net.URI("file:///"), hadoopConf)
     Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
+    // state stores of earlier suites close now, not while recording (a
+    // RocksDB store deletes its local directory with a forked `rm -rf`)
+    StateStore.stop()
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     val dump = Paths.get(tmp("graft-ckio-jfr"), "rec.jfr")
@@ -95,13 +99,24 @@ class CheckpointIoSpec extends SparkSpec {
       s"need three micro-batches of each job, got ${batches(qm)} and ${batches(qz)}")
     assert(qz.recentProgress.exists(_.stateOperators.exists(_.numRowsTotal > 0)),
       "the z-score join should have committed state")
+    def frames(e: RecordedEvent): Seq[String] =
+      Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala
+        .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))
+    // Spark's temp-directory cleanup (`JavaUtils.deleteRecursively` forks
+    // `rm -rf`) of earlier suites' sessions may run on a GC cleaner thread
+    // at any time; it is not checkpoint I/O. A spawn is excused only if
+    // its whole stack is recorded, runs through that cleanup, and touches
+    // neither streaming execution nor Hadoop's filesystem.
+    def tempDirCleanup(e: RecordedEvent): Boolean = {
+      val fs = frames(e)
+      Option(e.getStackTrace).exists(!_.isTruncated) &&
+        fs.exists(_.startsWith("org.apache.spark.network.util.JavaUtils.deleteRecursively")) &&
+        !fs.exists(f => f.startsWith("org.apache.spark.sql.execution.streaming.") ||
+          f.startsWith("org.apache.hadoop.fs."))
+    }
     val spawned = RecordingFile.readAllEvents(dump).asScala
-      .filter(_.getEventType.getName == "jdk.ProcessStart")
-      .map { e =>
-        val frames = Option(e.getStackTrace).map(_.getFrames.asScala.take(12)
-          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}").mkString(" <- "))
-        s"${e.getString("command")} at ${frames.getOrElse("?")}"
-      }
+      .filter(e => e.getEventType.getName == "jdk.ProcessStart" && !tempDirCleanup(e))
+      .map(e => s"${e.getString("command")} at ${frames(e).take(12).mkString(" <- ")}")
     assert(spawned.isEmpty,
       s"${spawned.size} processes spawned during micro-batches: ${spawned.take(5).mkString("; ")}")
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.model.Models
-import graft.streaming.{KafkaIO, MovingStatsJob}
+import graft.streaming.{KafkaIO, MovingStatsJob, ZScoreJob}
 import graft.streaming.fake.FakeBroker
 
 /** The Kafka runtime surface, executed: KafkaIO's plans driven end-to-end
@@ -43,7 +43,7 @@ class FakeKafkaSpec extends SparkSpec {
       inTopic: String, outTopic: String, checkpointDir: String,
       startingOffsets: String = "earliest") = {
     val src = KafkaIO.source(spark, "fake:9092", inTopic, startingOffsets, "fakekafka")
-    KafkaIO.sink(src.select(col("key"), col("value")), "fake:9092", outTopic,
+    KafkaIO.sink(src.select(col("key"), col("value")), identity, "fake:9092", outTopic,
       checkpointDir, "append", "0 seconds", "fakekafka").start()
   }
 
@@ -183,6 +183,37 @@ class FakeKafkaSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSet
     assert(windowTags == Set("30s", "1m", "5m", "15m", "30m", "1h"),
       s"all six reference windows should be present, got $windowTags")
+  }
+
+  test("K5 fan-out: a memory sink and KafkaIO.sink run concurrently over one moving-stats lineage") {
+    val (in, out) = ("fk-fanout-price", "fk-fanout-moving")
+    FakeBroker.createTopic(in); FakeBroker.createTopic(out)
+    publish(in, for (sym <- Seq("BTCUSDT", "ETHUSDT"); i <- 0 until 120) yield {
+      val ts = java.time.Instant.ofEpochSecond(1704067200L + i)
+      s"""{"symbol":"$sym","price":${100.0 + (i % 7)},"event_time":"$ts"}"""
+    })
+    val stats = MovingStatsJob.statsStream(
+      KafkaIO.source(spark, "fake:9092", in, "earliest", "fakekafka"))
+    val qFlat = stats.writeStream.format("memory").queryName("fk_fanout_flat")
+      .outputMode("update").start()
+    val qTopic = KafkaIO.sink(stats, MovingStatsJob.nested, "fake:9092", out, ckpt(),
+      "update", "0 seconds", "fakekafka").start()
+    try {
+      qFlat.processAllAvailable(); qTopic.processAllAvailable()
+    } finally {
+      qFlat.stop(); qTopic.stop()
+    }
+    import spark.implicits._
+    val flat = spark.table("fk_fanout_flat")
+    val groups = flat.select("window_timestamp", "symbol").distinct().count()
+    val msgs = topicValues(out)
+    assert(groups > 0 && msgs.size == groups,
+      s"one message per (window end, symbol): ${msgs.size} messages, $groups groups")
+    // the nested messages carry exactly the flat table's window rows
+    val keys = Seq("window_timestamp", "symbol", "window").map(col)
+    val fromTopic = ZScoreJob.parseMoving(msgs.toDF("value")).select(keys: _*)
+    val fromFlat = flat.select(keys: _*)
+    assert(fromTopic.exceptAll(fromFlat).isEmpty && fromFlat.exceptAll(fromTopic).isEmpty)
   }
 
   test("maxOffsetsPerTrigger: backlog replays as bounded batches, split across partitions") {

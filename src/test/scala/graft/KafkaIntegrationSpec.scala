@@ -61,13 +61,13 @@ class KafkaIntegrationSpec extends SparkSpec {
         .select(col("value").cast("string"))
         .collect().map(_.getString(0)).toSeq
 
-    // KafkaIO's production builders, default format — the deploy path
+    // KafkaIO's builders, as the jobs use them, on the default format
     val cp = Files.createTempDirectory("graft-kafka-it-ckpt").toString
     def run(): Unit = {
       val q = KafkaIO.sink(
         KafkaIO.source(spark, bs, in, "earliest")
           .select(col("key"), col("value")),
-        bs, out, cp, "append", "0 seconds").start()
+        identity, bs, out, cp, "append", "0 seconds").start()
       q.processAllAvailable()
       q.stop()
     }
