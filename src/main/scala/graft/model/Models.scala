@@ -30,9 +30,6 @@ object Models {
   /** Nested z-score record (topic `btc-price-zscore`). */
   final case class ZScoreRecord(timestamp: String, symbol: String, zscores: Seq[ZScoreEntry])
 
-  /** A document arriving on a live ingest stream (streaming curation ops). */
-  final case class StreamDoc(doc_id: Long, text: String, event_time: Timestamp)
-
   /** JSON reader schema for raw ticks; `event_time` arrives as an ISO8601
     * string and is parsed separately (reference moving_statistic.py:45). */
   val tickSchema: StructType = StructType(Seq(

@@ -97,12 +97,10 @@ object AnnIndexStore {
     * PartitionFilters in AnnIndexStoreSpec). Encoding runs ONCE per
     * corpus snapshot, next to the centroid/codebook training.
     *
-    * Layout: `path/ingest=base/cell=N/…` — the outer `ingest=`
-    * directory level makes the store APPEND-ONLY maintainable
-    * ([[appendCodes]]) with the same idempotent-retry contract as
-    * [[DedupIndexStore.append]]; `cell` stays a partition column at the
-    * second level, so probed-cells pruning is unaffected (it prunes
-    * across every ingest). */
+    * Layout: `path/ingest=base/cell=N/…` — the same outer `ingest=`
+    * level as [[DedupIndexStore]]'s path layout; `cell` is a partition
+    * column at the second level, so probed-cells pruning prunes under
+    * it. */
   def buildCodes(
       corpus: DataFrame,
       idCol: String,
@@ -110,175 +108,21 @@ object AnnIndexStore {
       coarseCentroids: Array[Array[Float]],
       pqCentroids: Array[Array[Array[Float]]],
       path: String): Unit = {
-    // a rebuild is a NEW corpus snapshot: clear every prior ingest too —
-    // overwriting only ingest=base would leave stale appended batches
-    // coded in the OLD geometry
+    // a rebuild is a NEW corpus snapshot: clear the whole store, so no
+    // file coded in the OLD geometry survives
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
       .delete(p, true)
-    writeCodes(corpus, idCol, vecCol, coarseCentroids, pqCentroids,
-      s"$path/ingest=base")
-  }
-
-  /** Add an admitted batch to the coded corpus at `path`: its PQ codes
-    * land under `ingest=<ingestId>`, cell-partitioned like the base.
-    * IDEMPOTENT per ingestId (a replayed streaming batch overwrites its
-    * own ingest partition) — the exactly-once property the composed
-    * ingest loop ([[graft.streaming.StreamOps.streamingIngestDedupWithAnn]])
-    * needs. The centroids/codebook are the STORE's trained artifacts
-    * (load them via [[loadIvf]]/[[loadPq]]); appended vectors are coded
-    * in the existing geometry — retraining on ingest would silently
-    * re-cell the standing corpus. */
-  def appendCodes(
-      batch: DataFrame,
-      idCol: String,
-      vecCol: String,
-      coarseCentroids: Array[Array[Float]],
-      pqCentroids: Array[Array[Array[Float]]],
-      path: String,
-      ingestId: String): Unit = {
-    require(ingestId.nonEmpty && ingestId != "base" && !ingestId.contains("/"),
-      s"ingestId must be a non-empty path segment other than 'base': '$ingestId'")
-    require(!ingestId.startsWith("gen-"),
-      s"'gen-' is reserved for [[compactCodes]] generation dirs: '$ingestId'")
-    // FOLD-AWARE idempotence: a replayed batch whose first attempt was
-    // already folded into a generation dir by [[compactCodes]] must NOT
-    // re-append — its vectors already stand (admissions are
-    // deterministic, pinned in StreamingIngestDedupSpec), and a second
-    // copy would put the same neighbor_id twice into every top-k heap
-    // that probes its cell. The manifest read is a tiny driver-side file.
-    if (DedupIndexStore.readManifest(batch.sparkSession, path, "codes")
-        .contains(ingestId)) return
-    writeCodes(batch, idCol, vecCol, coarseCentroids, pqCentroids,
-      s"$path/ingest=$ingestId")
-  }
-
-  /** Fold the accumulated per-batch `ingest=` partitions into ONE
-    * consolidated generation dir — the maintenance step that keeps a
-    * STREAM-MAINTAINED coded corpus searchable at production scale. The
-    * composed ingest loop
-    * ([[graft.streaming.StreamOps.streamingIngestDedupWithAnn]]) appends
-    * one `ingest=<id>/cell=N/` tree per micro-batch; after 10^4 triggers
-    * a probed cell's code rows are scattered over 10^4 directories of
-    * tiny files, and search I/O degrades with STREAM LIFETIME (listing +
-    * per-file open cost), not corpus size. Folding rewrites only PQ
-    * codes — 16 B/vector, never the raw vectors — cell-partitioned like
-    * the base, so probed-cell partition pruning is unchanged and the
-    * steady-state layout is `base + one gen dir per compaction + the
-    * since-last-compaction tail`. Generations are bounded by compaction
-    * cadence (e.g. daily), not trigger count; a full [[buildCodes]]
-    * re-bases everything when re-training anyway.
-    *
-    * Folded rows keep their source ingest id in a `src` column — the
-    * dedup-store lineage discipline ([[DedupIndexStore.compactTail]]):
-    * it is what lets crash recovery reconstruct ground truth without
-    * guessing.
-    *
-    * CRASH-SAFE with the same manifest + `_inflight` fence as the dedup
-    * tail (shared helpers — same format, same max-id-per-namespace
-    * pruning): the marker is created before the fold write and removed
-    * after the source deletes, so a kill anywhere leaves it behind and
-    * the next run recovers — it deletes partially-written generation
-    * dirs (no `_SUCCESS`), audits the surviving generations' `src`
-    * lineage for ground truth, folds only what is genuinely unfolded,
-    * and deletes sources only once their rows demonstrably stand. A
-    * replayed batch re-appending an already-folded id is prevented at
-    * the source ([[appendCodes]]'s manifest check), so no duplicate-
-    * neighbor window exists at all on the serial-writer path. Run it
-    * quiesced or between triggers, like every OPTIMIZE-style job here. */
-  def compactCodes(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return
-    def listIngests(): Seq[String] =
-      fs.listStatus(root).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.startsWith("ingest="))
-        .map(_.stripPrefix("ingest="))
-    val inflight = new Path(s"$path/_folded/_inflight")
-    val manifest = DedupIndexStore.readManifest(spark, path, "codes")
-    val recover = fs.exists(inflight) ||
-      (manifest.isEmpty && listIngests().exists(_.startsWith("gen-")))
-    if (recover)
-      // a generation dir without _SUCCESS is the crashed run's partial
-      // write: its sources were never deleted (deletes happen after the
-      // manifest write, which happens after the fold), so dropping it
-      // loses nothing and keeps the src audit from counting half-folded
-      // ids as folded
-      listIngests().filter(_.startsWith("gen-"))
-        .filterNot(g => fs.exists(new Path(s"$path/ingest=$g/_SUCCESS")))
-        .foreach(g => fs.delete(new Path(s"$path/ingest=$g"), true))
-    val gens = listIngests().filter(_.startsWith("gen-"))
-    val sources = listIngests()
-      .filterNot(id => id == "base" || id.startsWith("gen-"))
-    if (sources.isEmpty) {
-      // empty sources with a lingering fence = a prior run crashed
-      // between its final source delete and the fence delete (the
-      // manifest was already committed — deletes happen after it).
-      // Recovery is complete at this point (partial gens dropped, no
-      // sources left to fold), so clear the fence here: otherwise every
-      // subsequent call re-enters recovery and pays the full generation
-      // src-lineage scan until a run with fresh sources completes —
-      // indefinitely, if the stream is stopped
-      if (fs.exists(inflight)) fs.delete(inflight, false)
-      return
-    }
-    val folded: Set[String] =
-      if (!recover) manifest
-      else if (gens.isEmpty) Set.empty
-      else spark.read.option("basePath", path)
-        .parquet(gens.map(g => s"$path/ingest=$g"): _*)
-        .select(col("src")).distinct()
-        .collect().map(_.getString(0)).toSet
-    fs.mkdirs(inflight.getParent)
-    fs.create(inflight, true).close()
-    val fresh = sources.filterNot(folded)
-    if (fresh.nonEmpty) {
-      val nextGen = (gens.map(_.stripPrefix("gen-"))
-        .flatMap(s => scala.util.Try(s.toLong).toOption) :+ 0L).max + 1
-      // basePath recovers the ingest partition value per source dir; it
-      // rides into the consolidated files as the plain `src` column
-      spark.read.option("basePath", path)
-        .parquet(fresh.map(id => s"$path/ingest=$id"): _*)
-        .select(col("neighbor_id"), col("cell").cast("int").as("cell"),
-          col("codes"), col("ingest").cast("string").as("src"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/ingest=gen-$nextGen")
-      // the completeness marker is OUR recovery contract, not a Hadoop
-      // default: a deployment with marksuccessfuljobs disabled must not
-      // have recovery mistake every complete generation for a partial
-      // one (it deletes partials, and their sources may be gone)
-      val done = new Path(s"$path/ingest=gen-$nextGen/_SUCCESS")
-      if (!fs.exists(done)) fs.create(done, true).close()
-    }
-    DedupIndexStore.writeManifest(spark, path, "codes", folded ++ fresh)
-    sources.foreach { id =>
-      val p = new Path(s"$path/ingest=$id")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    fs.delete(inflight, false)
-  }
-
-
-  private def writeCodes(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      coarseCentroids: Array[Array[Float]],
-      pqCentroids: Array[Array[Array[Float]]],
-      dir: String): Unit =
     Similarity.pqEncode(
         corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v")),
         "v", pqCentroids)
       .withColumn("cell", Similarity.nearestCell(col("v"), coarseCentroids))
       .select(col("neighbor_id"), col("cell"), col("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(dir)
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/ingest=base")
+  }
 
   /** The coded corpus back as (neighbor_id, cell, codes); `cell` is a
-    * partition column (under every `ingest=` level), so filters on it
-    * prune directories across the base and all appended batches. */
+    * partition column, so filters on it prune directories. */
   def loadCodes(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
       .select(col("neighbor_id"), col("cell").cast("int").as("cell"), col("codes"))

@@ -85,12 +85,12 @@ object Dedup {
     * [[bandedSignatures]] output, `shingles` is
     * [[shingleHashTable]](docs, …, "doc_id") output. For callers that
     * consume the SAME batch signatures more than once per job — the
-    * streaming admission loop pairs within the batch AND probes one or
-    * two persisted indexes every trigger, and signing is the dominant
-    * batch-side CPU — so it signs once, persists for the trigger, and
-    * routes every consumer through the signed variants
-    * ([[graft.streaming.StreamOps]]). Identical output to
-    * [[minhashPairs]]. */
+    * streaming admission loop pairs within the batch AND probes the
+    * bucketed standing index and the ingest tail every trigger, and
+    * signing is the dominant batch-side CPU — so it signs once, persists
+    * for the trigger, and routes every consumer through the signed
+    * variants ([[graft.streaming.StreamOps.streamingIngestDedupBucketed]]).
+    * Identical output to [[minhashPairs]]. */
   private[graft] def minhashPairsFromSigned(
       banded: DataFrame,
       shingles: DataFrame,

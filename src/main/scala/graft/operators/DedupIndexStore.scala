@@ -88,9 +88,9 @@ object DedupIndexStore {
     * IDEMPOTENT per ingestId: re-running the same ingest OVERWRITES its
     * own partition instead of duplicating rows — the property a
     * streaming foreachBatch replay needs for exactly-once index
-    * maintenance ([[graft.streaming.StreamOps.streamingIngestDedup]]
-    * passes the checkpointed batchId). Distinct ingests must use
-    * distinct ids; `base` is reserved for [[build]]. */
+    * maintenance ([[graft.streaming.StreamOps.streamingIngestDedupBucketed]]
+    * passes an id derived from the checkpointed batchId). Distinct
+    * ingests must use distinct ids; `base` is reserved for [[build]]. */
   def append(
       batch: DataFrame,
       idCol: String,
@@ -448,10 +448,10 @@ object DedupIndexStore {
       .map(_.stripPrefix("ingest="))
   }
 
-  /** Metadata-cheap test for the folded-copy replay guard
-    * ([[graft.streaming.StreamOps]] — VERDICT r14 item 2): could rows
-    * with ingest lineage `id` stand in the bucketed table because a
-    * [[compactTail]] folded them there? TRUE when the tail's bands fold
+  /** Metadata-cheap test for the folded-copy replay guard of
+    * [[graft.streaming.StreamOps.streamingIngestDedupBucketed]] (VERDICT
+    * r14 item 2): could rows with ingest lineage `id` stand in the
+    * bucketed table because a [[compactTail]] folded them there? TRUE when the tail's bands fold
     * manifest names the id (a bare `b<N>` never parses as
     * `<ns>_b<number>`, so [[writeManifest]]'s pruning keeps it FOREVER —
     * the manifest is a reliable witness for exactly the bare-id case the
@@ -473,10 +473,7 @@ object DedupIndexStore {
   private def manifestPath(tailPath: String, table: String) =
     new org.apache.hadoop.fs.Path(s"$tailPath/_folded/$table.txt")
 
-  /** private[operators]: [[AnnIndexStore.compactCodes]] shares the
-    * manifest format (same fence, same pruning discipline) rather than
-    * growing a second, subtly different one. */
-  private[operators] def readManifest(
+  private def readManifest(
       spark: SparkSession, tailPath: String, table: String): Set[String] = {
     val p = manifestPath(tailPath, table)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -495,7 +492,7 @@ object DedupIndexStore {
     * `<ns>_bN` can never replay into the tail and its manifest entry is
     * dead weight. Ids that don't parse as `<ns>_b<number>` are kept —
     * correctness over compactness for foreign id schemes. */
-  private[operators] def writeManifest(
+  private def writeManifest(
       spark: SparkSession, tailPath: String, table: String, ids: Set[String]): Unit = {
     val IdForm = "(.*)_b([0-9]+)".r
     val (parsed, opaque) = ids.partition {

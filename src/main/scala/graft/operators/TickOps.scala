@@ -110,9 +110,16 @@ object TickOps {
   def movingStatsUnion(ticks: DataFrame, cfgs: Seq[WindowConfig] = defaultWindows, exact: Boolean = false): DataFrame =
     unionAll(cfgs.map(slidingStats(ticks, _, exact)))
 
+  /** The one slide of `cfgs`. Every duration must be a multiple of it:
+    * [[windowOffsets]] emits `duration / slide` ends per tick, so a
+    * remainder would silently drop the windows `window()` starts inside
+    * the first slide. */
   private def uniformSlideMs(cfgs: Seq[WindowConfig]): Long = {
     require(cfgs.map(_.slideMs).distinct.size == 1, "uniform slide required")
-    cfgs.head.slideMs
+    val slideMs = cfgs.head.slideMs
+    cfgs.foreach(c => require(c.durationMs % slideMs == 0,
+      s"window ${c.name}: duration ${c.duration} is not a multiple of the slide ${c.slide}"))
+    slideMs
   }
 
   /** Start of the slide bucket holding `event_time`, in epoch ms. Floor

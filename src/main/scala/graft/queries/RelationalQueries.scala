@@ -532,7 +532,7 @@ object RelationalQueries {
     }),
 
     // Gap-based sessionization (1 h inactivity splits): the batch analog
-    // of the streaming session window (q37/StreamOps). One window over
+    // of a session window (q37's session_window). One window over
     // the HIGH-cardinality user key (no funnel — parallelism is the user
     // count), integer epoch-micro arithmetic end to end: a null lag
     // (first event) falls through the CASE to 0, the running sum of

@@ -10,8 +10,9 @@ import org.apache.spark.sql.Row
   *
   * Format is addressed by name ("kafka") so the engine compiles without the
   * connector on the classpath; at deploy time add
-  * `spark-sql-kafka-0-10_2.13` to the session. Tests drive the same
-  * transforms through MemoryStream instead.
+  * `spark-sql-kafka-0-10_2.13` to the session. Tests and the benchmark
+  * run the same builders with `format = "fakekafka"`, the in-JVM broker
+  * double ([[graft.streaming.fake.FakeKafkaProvider]]).
   */
 object KafkaIO {
 

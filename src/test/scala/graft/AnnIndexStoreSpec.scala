@@ -68,188 +68,6 @@ class AnnIndexStoreSpec extends SparkSpec {
     } finally rmrf(dir)
   }
 
-  test("appendCodes: idempotent per ingest; appended store == encode-inline over the full corpus") {
-    val e = graft.util.SparkUtil.table(spark, sf(), "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ann-store-append").toFile
-    try {
-      val cc = Similarity.trainIvfCentroids(e, "vec_id", "embedding", 16, 3)
-      val pc = Similarity.trainPq(e, "vec_id", "embedding", m = 16, k = 16)
-      val path = s"${dir.getAbsolutePath}/codes"
-      val base = e.filter(col("vec_id") % 5 =!= 0)
-      val day1 = e.filter(col("vec_id") % 5 === 0)
-      AnnIndexStore.buildCodes(base, "vec_id", "embedding", cc, pc, path)
-      AnnIndexStore.appendCodes(day1, "vec_id", "embedding", cc, pc, path, "day1")
-      // a replayed ingest must OVERWRITE its own partition, not duplicate
-      AnnIndexStore.appendCodes(day1, "vec_id", "embedding", cc, pc, path, "day1")
-      val codes = AnnIndexStore.loadCodes(spark, path)
-      assert(codes.count() == e.count(), "replay duplicated coded rows")
-
-      val q = e.filter(col("vec_id") < 3)
-      val fromStore = Similarity.ivfPqTopKFromCodes(
-        codes, q, "vec_id", "embedding",
-        k = 5, nprobe = 4, cc, pc, rerank = 20,
-        corpusForRerank = Some(e.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("cv"))))
-      val inline = Similarity.ivfPqTopK(e, "vec_id", "embedding",
-        q, "vec_id", "embedding", 5,
-        nlist = 16, nprobe = 4, m = 16, rerank = 20,
-        coarseCentroids = Some(cc), pqCentroids = Some(pc))
-      assert(fromStore.collect().map(_.toSeq).toSet ==
-        inline.collect().map(_.toSeq).toSet,
-        "search over base+appended store must equal full-corpus inline search")
-
-      // cell pruning must survive the two-level (ingest=, cell=) layout
-      val plan = fromStore.queryExecution.executedPlan.toString
-      val pf = "PartitionFilters: \\[[^\\]]*cell".r
-      assert(pf.findFirstIn(plan).isDefined,
-        s"no partition filter on cell in the appended codes scan:\n$plan")
-    } finally rmrf(dir)
-  }
-
-  test("compactCodes folds per-batch ingests into one generation; search identical, pruning intact") {
-    val e = graft.util.SparkUtil.table(spark, sf(), "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ann-store-compact").toFile
-    try {
-      val cc = Similarity.trainIvfCentroids(e, "vec_id", "embedding", 16, 3)
-      val pc = Similarity.trainPq(e, "vec_id", "embedding", m = 16, k = 16)
-      val path = s"${dir.getAbsolutePath}/codes"
-      val base = e.filter(col("vec_id") % 5 =!= 0)
-      AnnIndexStore.buildCodes(base, "vec_id", "embedding", cc, pc, path)
-      (0 until 3).foreach { b =>
-        AnnIndexStore.appendCodes(
-          e.filter(col("vec_id") % 5 === 0 && col("vec_id") % 3 === b),
-          "vec_id", "embedding", cc, pc, path, s"cafe_b$b")
-      }
-      val q = e.filter(col("vec_id") < 3)
-      def search() = Similarity.ivfPqTopKFromCodes(
-        AnnIndexStore.loadCodes(spark, path), q, "vec_id", "embedding",
-        k = 5, nprobe = 4, cc, pc, rerank = 20,
-        corpusForRerank = Some(e.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("cv"))))
-      val before = search().collect().map(_.toSeq).toSet
-      val rowsBefore = AnnIndexStore.loadCodes(spark, path).count()
-
-      AnnIndexStore.compactCodes(spark, path)
-
-      def ingestDirs(): Set[String] =
-        Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-          .filter(_.isDirectory).map(_.getName)
-          .filter(_.startsWith("ingest=")).map(_.stripPrefix("ingest=")).toSet
-      assert(ingestDirs() == Set("base", "gen-1"),
-        s"fold must leave base + one generation, got ${ingestDirs()}")
-      assert(AnnIndexStore.loadCodes(spark, path).count() == rowsBefore,
-        "fold must preserve every coded row exactly once")
-      val after = search()
-      assert(after.collect().map(_.toSeq).toSet == before,
-        "search over the folded store must equal the pre-fold search")
-      // probed-cell partition pruning survives the generation layout
-      val plan = after.queryExecution.executedPlan.toString
-      assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined,
-        s"no partition filter on cell after compaction:\n$plan")
-
-      // a REPLAYED already-folded ingest must NOT re-append (its rows
-      // stand in gen-1): no duplicate-neighbor window, counts unchanged.
-      // Only the MAX id per namespace can legitimately replay (a serial
-      // foreachBatch writer commits b_N before starting b_N+1), which is
-      // exactly what the pruned manifest retains.
-      AnnIndexStore.appendCodes(
-        e.filter(col("vec_id") % 5 === 0 && col("vec_id") % 3 === 2),
-        "vec_id", "embedding", cc, pc, path, "cafe_b2")
-      assert(ingestDirs() == Set("base", "gen-1"),
-        "a folded ingest's replay must be a no-op append")
-      assert(AnnIndexStore.loadCodes(spark, path).count() == rowsBefore)
-
-      // a genuinely NEW ingest still appends and the next compaction
-      // folds it into gen-2 without touching gen-1's rows
-      AnnIndexStore.appendCodes(
-        e.filter(col("vec_id") % 5 === 0 && col("vec_id") % 3 === 2)
-          .withColumn("vec_id", col("vec_id") + 100000L),
-        "vec_id", "embedding", cc, pc, path, "cafe_b3")
-      AnnIndexStore.compactCodes(spark, path)
-      assert(ingestDirs() == Set("base", "gen-1", "gen-2"),
-        s"second fold must add gen-2, got ${ingestDirs()}")
-      assert(search().collect().map(_.toSeq).toSet == before,
-        "original queries' results must be unchanged by later folds")
-    } finally rmrf(dir)
-  }
-
-  test("compactCodes killed mid-fold recovers: partial generation dropped, nothing lost or doubled") {
-    val e = graft.util.SparkUtil.table(spark, sf(), "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ann-store-crash").toFile
-    try {
-      val cc = Similarity.trainIvfCentroids(e, "vec_id", "embedding", 8, 3)
-      val pc = Similarity.trainPq(e, "vec_id", "embedding", m = 8, k = 8)
-      val path = s"${dir.getAbsolutePath}/codes"
-      AnnIndexStore.buildCodes(
-        e.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", cc, pc, path)
-      val day1 = e.filter(col("vec_id") % 5 === 0)
-      AnnIndexStore.appendCodes(day1, "vec_id", "embedding", cc, pc, path, "feed_b0")
-      val total = AnnIndexStore.loadCodes(spark, path).count()
-
-      // CRASH SHAPE 1 — killed mid-write: a partial generation exists
-      // (no _SUCCESS), sources intact, _inflight behind. Recovery must
-      // drop the partial gen and fold the sources for real.
-      AnnIndexStore.compactCodes(spark, path)
-      // restore the killed-run state from the completed fold: re-create
-      // the source dir, strip gen-1's _SUCCESS, delete the manifest,
-      // leave the fence
-      AnnIndexStore.appendCodes(day1, "vec_id", "embedding", cc, pc, path, "feed_b0")
-      // (appendCodes skips folded ids via the manifest — simulate the
-      // pre-fold state by removing the manifest FIRST, then re-appending)
-      new java.io.File(s"$path/_folded/codes.txt").delete()
-      AnnIndexStore.appendCodes(day1, "vec_id", "embedding", cc, pc, path, "feed_b0")
-      assert(new java.io.File(s"$path/ingest=gen-1/_SUCCESS").delete(),
-        "test setup: gen-1 must have had a _SUCCESS marker to strip")
-      new java.io.File(s"$path/_folded/_inflight").createNewFile()
-      AnnIndexStore.compactCodes(spark, path)
-      // the partial generation was dropped and the surviving sources
-      // re-folded into a fresh, COMPLETE gen-1 (numbering restarts after
-      // the partial's delete)
-      assert(new java.io.File(s"$path/ingest=gen-1/_SUCCESS").exists,
-        "recovery must replace the partial generation with a complete one")
-      assert(!new java.io.File(s"$path/ingest=feed_b0").exists,
-        "recovery must clear the re-folded source dir")
-      assert(AnnIndexStore.loadCodes(spark, path).count() == total,
-        "crash recovery lost or doubled coded rows")
-      assert(!new java.io.File(s"$path/_folded/_inflight").exists)
-
-      // CRASH SHAPE 2 — killed after the fold write but before the
-      // manifest write and source deletes: complete gen, sources still
-      // present, manifest stale, fence behind. Recovery must audit the
-      // gen's src lineage, fold nothing, and delete the sources.
-      AnnIndexStore.appendCodes(
-        day1.withColumn("vec_id", col("vec_id") + 200000L),
-        "vec_id", "embedding", cc, pc, path, "feed_b1")
-      AnnIndexStore.compactCodes(spark, path) // folds feed_b1 -> gen-2
-      val total3 = AnnIndexStore.loadCodes(spark, path).count()
-      new java.io.File(s"$path/_folded/codes.txt").delete()
-      AnnIndexStore.appendCodes(
-        day1.withColumn("vec_id", col("vec_id") + 200000L),
-        "vec_id", "embedding", cc, pc, path, "feed_b1")
-      new java.io.File(s"$path/_folded/_inflight").createNewFile()
-      AnnIndexStore.compactCodes(spark, path)
-      assert(AnnIndexStore.loadCodes(spark, path).count() == total3,
-        "recovery after a post-fold crash must not re-fold the sources")
-      assert(!new java.io.File(s"$path/ingest=feed_b1").exists,
-        "recovery must delete the already-folded source dir")
-      assert(!new java.io.File(s"$path/ingest=gen-3").exists,
-        "recovery must not mint a new generation for already-folded rows")
-
-      // CRASH SHAPE 3 — killed between the FINAL source delete and the
-      // fence delete: sources gone, manifest committed, fence behind.
-      // Recovery has nothing to do, so the next call must CLEAR the
-      // stale fence instead of leaving every subsequent maintenance run
-      // re-entering recovery and paying the full generation src-lineage
-      // scan until fresh sources arrive (ADVICE r14).
-      new java.io.File(s"$path/_folded/_inflight").createNewFile()
-      AnnIndexStore.compactCodes(spark, path)
-      assert(!new java.io.File(s"$path/_folded/_inflight").exists,
-        "an empty-sources run must clear the stale fence, not persist it")
-      assert(AnnIndexStore.loadCodes(spark, path).count() == total3,
-        "the fence-clearing no-op run must not touch any rows")
-    } finally rmrf(dir)
-  }
-
   test("buildAnnIndexes writes both artifacts and the registered ANN queries run probe-only") {
     val dir = java.nio.file.Files.createTempDirectory("ann-build").toFile
     try {

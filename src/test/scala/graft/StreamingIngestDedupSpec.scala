@@ -12,6 +12,50 @@ import graft.streaming.StreamOps
 class StreamingIngestDedupSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A bucketed standing index `tableBase` holding `corpusText` as doc
+    * 100, and an empty ingest tail with the same parameters; returns the
+    * tail path. Drop the tables with [[dropIndex]]. */
+  private def bucketedIndex(tableBase: String): String = {
+    val tail = java.nio.file.Files.createTempDirectory(s"graft_${tableBase}_tail").toString
+    DedupIndexStore.buildBucketed(
+      Seq((100L, corpusText)).toDF("doc_id", "text"),
+      "doc_id", "text", tableBase, 4, k = 2, numHashes = 32, bands = 16)
+    DedupIndexStore.initEmpty(spark, tail, k = 2, numHashes = 32, bands = 16)
+    tail
+  }
+
+  private def dropIndex(tableBase: String): Unit =
+    Seq("bands", "shingles", "meta").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$t"))
+
+  /** Starts the ingest loop over (doc_id, text) `docs` with a fresh
+    * checkpoint; every admitted (batchId, doc_id) is added to `admitted`. */
+  private def startIngest(
+      docs: org.apache.spark.sql.DataFrame,
+      tableBase: String,
+      tail: String,
+      admitted: scala.collection.mutable.ArrayBuffer[(Long, Long)])
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${tableBase}_ckpt").toFile
+    ckpt.deleteOnExit()
+    StreamOps.streamingIngestDedupBucketed(
+      docs, "doc_id", "text", tableBase, tail, ckpt.getAbsolutePath,
+      (df, bid) => admitted.synchronized {
+        admitted ++= df.select("doc_id").collect().map(r => (bid, r.getLong(0)))
+      },
+      threshold = 0.2)
+  }
+
+  /** Ids of the indexed docs (standing corpus or tail) that `text` near-dups. */
+  private def indexHits(tableBase: String, tail: String, text: String): Set[Long] = {
+    val probe = Seq((9L, text)).toDF("doc_id", "text")
+    (DedupIndexStore.probeBucketed(spark, probe, "doc_id", "text", tableBase,
+      threshold = 0.2).select("id_corpus").collect() ++
+      DedupIndexStore.probe(spark, probe, "doc_id", "text", tail, threshold = 0.2)
+        .select("id_corpus").collect())
+      .map(_.getLong(0)).toSet
+  }
+
   private val corpusText = "alpha beta gamma delta epsilon zeta eta theta " +
     "iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
   private val freshText = "spark catalyst tungsten codegen shuffle exchange " +
@@ -20,53 +64,6 @@ class StreamingIngestDedupSpec extends SparkSpec {
   private val otherText = "entirely different document discussing parquet " +
     "footers column chunks dictionary encoding page headers statistics " +
     "bloom filters row groups compression codecs"
-
-  test("first-wins across batches with all dedup state in the index") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_sid_idx").toString
-    DedupIndexStore.build(
-      Seq((100L, corpusText)).toDF("doc_id", "text"),
-      "doc_id", "text", idx, k = 2, numHashes = 32, bands = 16)
-
-    val in = MemoryStream[(Long, String)](spark)
-    val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sid_ckpt").toFile
-    ckpt.deleteOnExit()
-    val q = StreamOps.streamingIngestDedup(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx,
-      ckpt.getAbsolutePath,
-      (df, bid) => admitted.synchronized {
-        admitted ++= df.select("doc_id").collect().map(r => (bid, r.getLong(0)))
-      },
-      threshold = 0.2)
-    try {
-      // batch 0: doc 1 fresh; doc 2 near-dups doc 1 (within-batch, higher
-      // id loses); doc 3 near-dups the corpus (index hit)
-      in.addData(
-        (1L, freshText),
-        (2L, freshText + " omega"),
-        (3L, corpusText + " phi"))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L)),
-        s"batch 0 admissions: ${admitted.toSet}")
-
-      // batch 1: doc 4 near-dups doc 1 — admitted LAST batch, visible
-      // only through the index append; doc 5 is new
-      in.addData(
-        (4L, freshText + " psi"),
-        (5L, otherText))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L), (1L, 5L)),
-        s"batch 1 admissions: ${admitted.toSet}")
-    } finally q.stop()
-
-    // the index now holds corpus + doc 1 + doc 5: a direct probe of a
-    // copy of doc 5's text must hit doc 5
-    val hits = DedupIndexStore.probe(
-      spark, Seq((9L, otherText + " extra")).toDF("doc_id", "text"),
-      "doc_id", "text", idx, threshold = 0.2)
-      .select("id_corpus").collect().map(_.getLong(0)).toSet
-    assert(hits == Set(5L), s"post-stream index probe hits: $hits")
-  }
 
   test("replayed batch (crash between append and commit) re-admits identically") {
     // ADVICE r10 (high): a foreachBatch restart re-runs a batchId whose
@@ -168,8 +165,8 @@ class StreamingIngestDedupSpec extends SparkSpec {
         },
         threshold = 0.2)
       try {
-        // same batch script as the plain-path test: the hybrid layout
-        // must make the identical first-wins decisions
+        // batch 0: doc 1 fresh; doc 2 near-dups doc 1 (within-batch,
+        // higher id loses); doc 3 near-dups the corpus (index hit)
         in.addData(
           (1L, freshText),
           (2L, freshText + " omega"),
@@ -177,6 +174,8 @@ class StreamingIngestDedupSpec extends SparkSpec {
         q.processAllAvailable()
         assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L)),
           s"batch 0 admissions: ${admitted.toSet}")
+        // batch 1: doc 4 near-dups doc 1 — admitted LAST batch, visible
+        // only through the tail append; doc 5 is new
         in.addData(
           (4L, freshText + " psi"),
           (5L, otherText))
@@ -219,126 +218,28 @@ class StreamingIngestDedupSpec extends SparkSpec {
     }
   }
 
-  test("composed ingest: admitted docs are immediately ANN-searchable from the coded store") {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.{AnnIndexStore, Similarity}
-    // geometry trained once on the standing embeddings table — appended
-    // vectors are coded in the EXISTING cells/codebook, never retrained
-    val e = graft.util.SparkUtil.table(spark, sf(), "embeddings")
-    val cc = Similarity.trainIvfCentroids(e, "vec_id", "embedding", 4, 2)
-    val pc = Similarity.trainPq(e, "vec_id", "embedding", m = 8, k = 8)
-    val vecs = e.filter(col("vec_id") < 8).orderBy("vec_id").collect()
-      .map(_.getSeq[Float](1))
-
-    val root = java.nio.file.Files.createTempDirectory("graft_sid_ann").toString
-    val idx = s"$root/dedup"
-    val codes = s"$root/codes"
-    DedupIndexStore.build(
-      Seq((100L, corpusText)).toDF("doc_id", "text"),
-      "doc_id", "text", idx, k = 2, numHashes = 32, bands = 16)
-    AnnIndexStore.buildCodes(
-      Seq((100L, vecs(0))).toDF("doc_id", "embedding"),
-      "doc_id", "embedding", cc, pc, codes)
-
-    val in = MemoryStream[(Long, String, Seq[Float])](spark)
-    val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sid_ann_ckpt").toFile
-    ckpt.deleteOnExit()
-    val q = StreamOps.streamingIngestDedupWithAnn(
-      in.toDF().toDF("doc_id", "text", "embedding"),
-      "doc_id", "text", "embedding", idx, codes, cc, pc,
-      ckpt.getAbsolutePath,
-      (df, bid) => admitted.synchronized {
-        admitted ++= df.select("doc_id").collect().map(r => (bid, r.getLong(0)))
-      },
-      threshold = 0.2)
-    def searchTop1(vec: Seq[Float]): Long = {
-      val stored = AnnIndexStore.loadCodes(spark, codes)
-      val raw = stored.select(col("neighbor_id")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-        .map(id => (id, if (id == 100L) vecs(0) else vecs(id.toInt)))
-      Similarity.ivfPqTopKFromCodes(
-        stored, Seq((0L, vec)).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", k = 1, nprobe = 4, cc, pc, rerank = 4,
-        corpusForRerank = Some(raw.toDF("neighbor_id", "cv")))
-        .select("neighbor_id").head().getLong(0)
-    }
-    try {
-      // batch 0: doc 1 fresh (admitted), doc 3 near-dups the corpus
-      in.addData((1L, freshText, vecs(1)), (3L, corpusText + " phi", vecs(3)))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L)))
-      // doc 1 is ANN-findable from the store the moment its batch commits
-      assert(searchTop1(vecs(1)) == 1L,
-        "admitted doc must be the exact-rerank top-1 for its own vector")
-
-      // batch 1: doc 4 near-dups doc 1 (drop), doc 5 fresh (admit)
-      in.addData((4L, freshText + " psi", vecs(4)), (5L, otherText, vecs(5)))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L), (1L, 5L)))
-      assert(searchTop1(vecs(5)) == 5L)
-      // the coded corpus holds EXACTLY base + admitted — dropped docs
-      // (3, 4) never enter the ANN store
-      val stored = AnnIndexStore.loadCodes(spark, codes)
-        .select("neighbor_id").collect().map(_.getLong(0)).toSet
-      assert(stored == Set(100L, 1L, 5L), s"coded store holds: $stored")
-
-      // MID-STREAM maintenance: fold the per-batch ingest dirs into a
-      // generation (AnnIndexStore.compactCodes) while the query is live —
-      // admitted docs must stay searchable and later batches must keep
-      // appending next to the generation
-      AnnIndexStore.compactCodes(spark, codes)
-      assert(searchTop1(vecs(1)) == 1L,
-        "doc 1 must stay searchable from the folded generation")
-      assert(searchTop1(vecs(5)) == 5L)
-      in.addData((6L, "vacuum analyze planner estimates statistics hints", vecs(6)))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) ==
-        Set((0L, 1L), (1L, 5L), (2L, 6L)))
-      assert(searchTop1(vecs(6)) == 6L,
-        "a post-compaction batch must be searchable from its fresh ingest dir")
-      val storedAfter = AnnIndexStore.loadCodes(spark, codes)
-        .select("neighbor_id").collect().map(_.getLong(0)).toSet
-      assert(storedAfter == Set(100L, 1L, 5L, 6L),
-        s"coded store after fold + append holds: $storedAfter")
-    } finally q.stop()
-  }
-
   test("all-duplicate batch appends an empty ingest partition without poisoning later probes") {
     // a batch where EVERY doc near-dups the corpus admits nothing; its
     // append writes an empty ingest partition, and the index must stay
     // fully probe-able for the batches after it
-    val idx = java.nio.file.Files.createTempDirectory("graft_sid_empty").toString
-    DedupIndexStore.build(
-      Seq((100L, corpusText)).toDF("doc_id", "text"),
-      "doc_id", "text", idx, k = 2, numHashes = 32, bands = 16)
-
-    val in = MemoryStream[(Long, String)](spark)
-    val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sid_empty_ckpt").toFile
-    ckpt.deleteOnExit()
-    val q = StreamOps.streamingIngestDedup(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx,
-      ckpt.getAbsolutePath,
-      (df, bid) => admitted.synchronized {
-        admitted ++= df.select("doc_id").collect().map(r => (bid, r.getLong(0)))
-      },
-      threshold = 0.2)
+    val tail = bucketedIndex("sid_empty_idx")
     try {
-      in.addData((1L, corpusText + " phi"), (2L, corpusText + " chi"))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.isEmpty),
-        s"batch 0 must admit nothing: ${admitted.toSet}")
-      in.addData((3L, freshText))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) == Set((1L, 3L)),
-        s"batch 1 admissions after an empty append: ${admitted.toSet}")
-    } finally q.stop()
-    val hits = DedupIndexStore.probe(
-      spark, Seq((9L, freshText + " psi")).toDF("doc_id", "text"),
-      "doc_id", "text", idx, threshold = 0.2)
-      .select("id_corpus").collect().map(_.getLong(0)).toSet
-    assert(hits == Set(3L), s"post-empty-append probe hits: $hits")
+      val in = MemoryStream[(Long, String)](spark)
+      val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      val q = startIngest(in.toDF().toDF("doc_id", "text"), "sid_empty_idx", tail, admitted)
+      try {
+        in.addData((1L, corpusText + " phi"), (2L, corpusText + " chi"))
+        q.processAllAvailable()
+        assert(admitted.synchronized(admitted.isEmpty),
+          s"batch 0 must admit nothing: ${admitted.toSet}")
+        in.addData((3L, freshText))
+        q.processAllAvailable()
+        assert(admitted.synchronized(admitted.toSet) == Set((1L, 3L)),
+          s"batch 1 admissions after an empty append: ${admitted.toSet}")
+      } finally q.stop()
+      val hits = indexHits("sid_empty_idx", tail, freshText + " psi")
+      assert(hits == Set(3L), s"post-empty-append probe hits: $hits")
+    } finally dropIndex("sid_empty_idx")
   }
 
   test("admission signs each batch exactly once per trigger") {
@@ -347,40 +248,35 @@ class StreamingIngestDedupSpec extends SparkSpec {
     // by COUNTING evaluations of the batch's text column. Consumers of
     // the raw batch per trigger: the bands signing scan, the shingles
     // signing scan, and the admitted-rows cache build — 3 evaluations
-    // per row. The pre-r11 shape (the probe re-signing the batch from
-    // text) adds two more scans; a future edit that feeds the raw batch
-    // to another consumer fails this bound.
+    // per row. The pre-r11 shape (each probe re-signing the batch from
+    // text) adds more scans; a future edit that feeds the raw batch to
+    // another consumer fails this bound.
     import org.apache.spark.sql.functions.{col, udf}
-    val idx = java.nio.file.Files.createTempDirectory("graft_sid_cnt").toString
-    DedupIndexStore.build(
-      Seq((100L, corpusText)).toDF("doc_id", "text"),
-      "doc_id", "text", idx, k = 2, numHashes = 32, bands = 16)
-    val evals = spark.sparkContext.longAccumulator("text-evals")
-    val countedText = udf { s: String => evals.add(1L); s }
-    val in = MemoryStream[(Long, String)](spark)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sid_cnt_ckpt").toFile
-    ckpt.deleteOnExit()
-    val q = StreamOps.streamingIngestDedup(
-      in.toDF().toDF("doc_id", "text")
-        .withColumn("text", countedText(col("text"))),
-      "doc_id", "text", idx, ckpt.getAbsolutePath,
-      (df, _) => { df.count(); () },
-      threshold = 0.2)
+    val tail = bucketedIndex("sid_cnt_idx")
     try {
-      in.addData(
-        (1L, freshText),
-        (2L, freshText + " omega"),
-        (3L, corpusText + " phi"),
-        (5L, otherText))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(evals.value <= 3L * 4,
-      s"text evaluated ${evals.value} times for a 4-row batch — " +
-        "expected ≤ 12 (bands sign + shingles sign + admitted cache); " +
-        "a second signing pass has been reintroduced")
-    assert(evals.value >= 2L * 4,
-      s"text evaluated only ${evals.value} times — the counting probe " +
-        "is no longer wired to the signing path; fix the test")
+      val evals = spark.sparkContext.longAccumulator("text-evals")
+      val countedText = udf { s: String => evals.add(1L); s }
+      val in = MemoryStream[(Long, String)](spark)
+      val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      val q = startIngest(
+        in.toDF().toDF("doc_id", "text").withColumn("text", countedText(col("text"))),
+        "sid_cnt_idx", tail, admitted)
+      try {
+        in.addData(
+          (1L, freshText),
+          (2L, freshText + " omega"),
+          (3L, corpusText + " phi"),
+          (5L, otherText))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(evals.value <= 3L * 4,
+        s"text evaluated ${evals.value} times for a 4-row batch — " +
+          "expected ≤ 12 (bands sign + shingles sign + admitted cache); " +
+          "a second signing pass has been reintroduced")
+      assert(evals.value >= 2L * 4,
+        s"text evaluated only ${evals.value} times — the counting probe " +
+          "is no longer wired to the signing path; fix the test")
+    } finally dropIndex("sid_cnt_idx")
   }
 
   test("replay across a compaction boundary re-admits identically (folded lineage)") {
@@ -450,42 +346,30 @@ class StreamingIngestDedupSpec extends SparkSpec {
     // exclude — then idempotently OVERWRITE — the old incarnation's b0
     // partition. Ingest ids are namespaced by the checkpoint location:
     // the new stream's batch 0 treats the old rows as ordinary corpus.
-    val idx = java.nio.file.Files.createTempDirectory("graft_sid_inc").toString
-    DedupIndexStore.build(
-      Seq((100L, corpusText)).toDF("doc_id", "text"),
-      "doc_id", "text", idx, k = 2, numHashes = 32, bands = 16)
-    def runIncarnation(ckptName: String, data: Seq[(Long, String)]): Set[(Long, Long)] = {
+    val tail = bucketedIndex("sid_inc_idx")
+    def runIncarnation(data: Seq[(Long, String)]): Set[(Long, Long)] = {
       val in = MemoryStream[(Long, String)](spark)
       val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val ckpt = java.nio.file.Files.createTempDirectory(ckptName).toFile
-      ckpt.deleteOnExit()
-      val q = StreamOps.streamingIngestDedup(
-        in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx,
-        ckpt.getAbsolutePath,
-        (df, bid) => admitted.synchronized {
-          admitted ++= df.select("doc_id").collect().map(r => (bid, r.getLong(0)))
-        },
-        threshold = 0.2)
+      val q = startIngest(in.toDF().toDF("doc_id", "text"), "sid_inc_idx", tail, admitted)
       try {
         in.addData(data: _*)
         q.processAllAvailable()
       } finally q.stop()
       admitted.synchronized(admitted.toSet)
     }
-    // incarnation A: batch 0 admits doc 1
-    assert(runIncarnation("graft_sid_inc_a", Seq((1L, freshText))) == Set((0L, 1L)))
-    // incarnation B (fresh checkpoint, batchId 0 again): doc 7 near-dups
-    // doc 1 — it must be DROPPED (doc 1's partition is ordinary corpus to
-    // this stream, not "its own" b0); doc 8 is fresh
-    assert(runIncarnation("graft_sid_inc_b",
-      Seq((7L, freshText + " psi"), (8L, otherText))) == Set((0L, 8L)))
-    // doc 1 must still be in the index — the old partition was not
-    // overwritten by the new incarnation's batch 0
-    val hits = DedupIndexStore.probe(
-      spark, Seq((9L, freshText + " chi")).toDF("doc_id", "text"),
-      "doc_id", "text", idx, threshold = 0.2)
-      .select("id_corpus").collect().map(_.getLong(0)).toSet
-    assert(hits == Set(1L), s"doc 1 must survive the new incarnation: $hits")
+    try {
+      // incarnation A: batch 0 admits doc 1
+      assert(runIncarnation(Seq((1L, freshText))) == Set((0L, 1L)))
+      // incarnation B (fresh checkpoint, batchId 0 again): doc 7 near-dups
+      // doc 1 — it must be DROPPED (doc 1's partition is ordinary corpus
+      // to this stream, not "its own" b0); doc 8 is fresh
+      assert(runIncarnation(Seq((7L, freshText + " psi"), (8L, otherText))) ==
+        Set((0L, 8L)))
+      // doc 1 must still be in the index — the old partition was not
+      // overwritten by the new incarnation's batch 0
+      val hits = indexHits("sid_inc_idx", tail, freshText + " chi")
+      assert(hits == Set(1L), s"doc 1 must survive the new incarnation: $hits")
+    } finally dropIndex("sid_inc_idx")
   }
 
   test("un-drained bare-id upgrade fails loudly; a foreign bare-id partition passes through") {
@@ -501,73 +385,57 @@ class StreamingIngestDedupSpec extends SparkSpec {
       (1L, freshText),
       (3L, corpusText + " phi"),
       (5L, otherText))
-    def newIndex(name: String): String = {
-      val idx = java.nio.file.Files.createTempDirectory(name).toString
-      DedupIndexStore.build(
-        Seq((100L, corpusText)).toDF("doc_id", "text"),
-        "doc_id", "text", idx, k = 2, numHashes = 32, bands = 16)
-      idx
-    }
-    def runStream(idx: String): (Either[Throwable, Unit], Set[(Long, Long)]) = {
+    def runStream(tableBase: String, tail: String): (Either[Throwable, Unit], Set[(Long, Long)]) = {
       val in = MemoryStream[(Long, String)](spark)
       val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sid_bare_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = StreamOps.streamingIngestDedup(
-        in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx,
-        ckpt.getAbsolutePath,
-        (df, bid) => admitted.synchronized {
-          admitted ++= df.select("doc_id").collect().map(r => (bid, r.getLong(0)))
-        },
-        threshold = 0.2)
+      val q = startIngest(in.toDF().toDF("doc_id", "text"), tableBase, tail, admitted)
       val outcome =
         try { in.addData(data: _*); q.processAllAvailable(); Right(()) }
         catch { case e: Throwable => Left(e) }
         finally q.stop()
       (outcome, admitted.synchronized(admitted.toSet))
     }
+    try {
+      // VIOLATION: the pre-namespace attempt appended its admitted subset
+      // to the tail under bare b0 and crashed before the commit; the
+      // operator upgrades without draining and the stream replays batch 0
+      val tailV = bucketedIndex("sid_bare_v_idx")
+      val first = StreamOps.admitBatchBucketed(
+        data.toDF("doc_id", "text"), "doc_id", "text", "sid_bare_v_idx", tailV,
+        threshold = 0.2)
+      assert(first.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 5L))
+      DedupIndexStore.append(first, "doc_id", "text", tailV, "b0")
+      val (outcomeV, admittedV) = runStream("sid_bare_v_idx", tailV)
+      val err = outcomeV.swap.getOrElse(fail(
+        "un-drained bare-id replay must fail the streaming query loudly"))
+      def messages(t: Throwable): Seq[String] =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+          .map(e => Option(e.getMessage).getOrElse(""))
+      assert(messages(err).exists(m =>
+        m.contains("quiesced") && m.contains("pre-namespace")),
+        s"failure must carry the drain instruction, got: ${messages(err)}")
+      assert(admittedV.isEmpty, s"no admission may land: $admittedV")
+      // the crashed attempt's partition is untouched — nothing overwrote
+      // it with zero rows; its docs remain probe-able corpus
+      val survivors = indexHits("sid_bare_v_idx", tailV, otherText + " extra")
+      assert(survivors == Set(5L),
+        s"the bare partition's rows must survive the abort: $survivors")
 
-    // VIOLATION: the pre-namespace attempt appended its admitted subset
-    // under bare b0 and crashed before the commit; the operator upgrades
-    // without draining and the stream replays batch 0
-    val idxV = newIndex("graft_sid_bare_v")
-    val first = StreamOps.admitBatch(
-      data.toDF("doc_id", "text"), "doc_id", "text", idxV, threshold = 0.2)
-    assert(first.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 5L))
-    DedupIndexStore.append(first, "doc_id", "text", idxV, "b0")
-    val (outcomeV, admittedV) = runStream(idxV)
-    val err = outcomeV.swap.getOrElse(fail(
-      "un-drained bare-id replay must fail the streaming query loudly"))
-    def messages(t: Throwable): Seq[String] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
-        .map(e => Option(e.getMessage).getOrElse(""))
-    assert(messages(err).exists(m =>
-      m.contains("quiesced") && m.contains("pre-namespace")),
-      s"failure must carry the drain instruction, got: ${messages(err)}")
-    assert(admittedV.isEmpty, s"no admission may land: $admittedV")
-    // the crashed attempt's partition is untouched — nothing overwrote it
-    // with zero rows; its docs remain probe-able corpus
-    val survivors = DedupIndexStore.probe(
-      spark, Seq((9L, otherText + " extra")).toDF("doc_id", "text"),
-      "doc_id", "text", idxV, threshold = 0.2)
-      .select("id_corpus").collect().map(_.getLong(0)).toSet
-    assert(survivors == Set(5L),
-      s"the bare partition's rows must survive the abort: $survivors")
-
-    // FALSE-POSITIVE CONTROL: a foreign incarnation's committed bare b0
-    // with DIFFERENT doc ids — the stream must run clean, treat it as
-    // corpus (doc 5 near-dups foreign doc 50 and drops), admit doc 1
-    val idxF = newIndex("graft_sid_bare_f")
-    DedupIndexStore.append(
-      Seq((50L, otherText + " legacy")).toDF("doc_id", "text"),
-      "doc_id", "text", idxF, "b0")
-    val (outcomeF, admittedF) = runStream(idxF)
-    assert(outcomeF.isRight,
-      s"foreign bare-id partition must not trip the guard: $outcomeF")
-    assert(admittedF == Set((0L, 1L)),
-      s"foreign bare-id corpus must dedup normally: $admittedF")
-    assert(new java.io.File(s"$idxF/bands/ingest=b0").exists,
-      "the foreign partition must stay untouched")
+      // FALSE-POSITIVE CONTROL: a foreign incarnation's committed bare b0
+      // with DIFFERENT doc ids — the stream must run clean, treat it as
+      // corpus (doc 5 near-dups foreign doc 50 and drops), admit doc 1
+      val tailF = bucketedIndex("sid_bare_f_idx")
+      DedupIndexStore.append(
+        Seq((50L, otherText + " legacy")).toDF("doc_id", "text"),
+        "doc_id", "text", tailF, "b0")
+      val (outcomeF, admittedF) = runStream("sid_bare_f_idx", tailF)
+      assert(outcomeF.isRight,
+        s"foreign bare-id partition must not trip the guard: $outcomeF")
+      assert(admittedF == Set((0L, 1L)),
+        s"foreign bare-id corpus must dedup normally: $admittedF")
+      assert(new java.io.File(s"$tailF/bands/ingest=b0").exists,
+        "the foreign partition must stay untouched")
+    } finally Seq("sid_bare_v_idx", "sid_bare_f_idx").foreach(dropIndex)
   }
 
   test("un-drained bare-id upgrade fails loudly when a compaction folded the tail (hybrid)") {
@@ -675,174 +543,6 @@ class StreamingIngestDedupSpec extends SparkSpec {
         Seq("bands", "shingles", "meta").foreach(t =>
           spark.sql(s"DROP TABLE IF EXISTS sidfold_${tag}_idx_$t")))
     }
-  }
-
-  test("web-ingest composition: markup stream -> htmlText -> dedup admission") {
-    // the production ingestion topology for a web corpus: documents
-    // arrive as raw HTML, extraction runs INSIDE the streaming plan
-    // (htmlText is a fold of codegen'd built-ins - nothing stateful, so
-    // it streams), and admission dedups on the EXTRACTED text. Two
-    // differently-marked-up copies of the same content (different tags,
-    // entity spellings, whitespace) must collapse to one admission;
-    // byte-level dedup on the raw markup could never see that.
-    import graft.operators.TextOps
-    val idx = java.nio.file.Files.createTempDirectory("graft_sid_web").toString
-    DedupIndexStore.build(
-      Seq((100L, corpusText)).toDF("doc_id", "text"),
-      "doc_id", "text", idx, k = 2, numHashes = 32, bands = 16)
-    val in = MemoryStream[(Long, String)](spark)
-    val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sid_web_ckpt").toFile
-    ckpt.deleteOnExit()
-    import org.apache.spark.sql.functions.col
-    val docs = in.toDF().toDF("doc_id", "markup")
-      .select(col("doc_id"), TextOps.htmlText(col("markup")).as("text"))
-    val q = StreamOps.streamingIngestDedup(
-      docs, "doc_id", "text", idx, ckpt.getAbsolutePath,
-      (df, bid) => admitted.synchronized {
-        admitted ++= df.select("doc_id").collect().map(r => (bid, r.getLong(0)))
-      },
-      threshold = 0.2)
-    try {
-      // doc 1 and doc 2 carry the SAME extracted content under different
-      // markup; doc 3 is the corpus text wrapped in tags (index hit)
-      in.addData(
-        (1L, s"<html><body><p>$freshText</p></body></html>"),
-        (2L, s"<DIV CLASS='wrap'>  $freshText  </DIV><!-- tracked -->"),
-        (3L, s"<article><h1>copy</h1><p>$corpusText phi</p></article>"))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L)),
-        s"batch 0: one admission for two markups of one text: ${admitted.toSet}")
-      // batch 1: an entity-encoded near-dup of doc 1's content must drop
-      // against the index (the admitted doc was indexed by its EXTRACTED
-      // text); a genuinely new doc admits
-      in.addData(
-        (4L, s"<p>$freshText &amp; more</p>"),
-        (5L, s"<p>$otherText</p>"))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L), (1L, 5L)),
-        s"batch 1 admissions: ${admitted.toSet}")
-    } finally q.stop()
-  }
-
-  test("streaming web ingest: a cross-batch cookie banner never reaches the index") {
-    // VERDICT r15 item 6, the full composed topology: markup ->
-    // htmlText (in-plan) -> stripBannedLines (per-batch, against the
-    // maintained banned-line snapshot) -> dedup admission. The banner
-    // arrives once per micro-batch, so within-batch frequency could
-    // never flag it — only the BATCH-SIDE table (built from the
-    // standing corpus, re-read per trigger) can.
-    import graft.streaming.StreamOps
-    val banner = Seq(
-      "please accept our cookies to continue",
-      "this website uses tracking technologies",
-      "manage your consent preferences below",
-      "copyright example media all rights reserved")
-    def markup(lines: Seq[String]): String =
-      lines.map(l => s"<p>$l</p>").mkString
-    // the standing corpus carries the banner above the frequency cap
-    val corpus = (0 until 12).map(i =>
-      (100L + i, (banner :+ s"corpus page $i speaks about subject ${i * 7}")
-        .mkString("\n"))).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_swi_idx").toString
-    DedupIndexStore.build(corpus, "doc_id", "text", idx,
-      k = 2, numHashes = 32, bands = 16)
-    val bannedPath = java.nio.file.Files
-      .createTempDirectory("graft_swi_banned").toString + "/lines"
-    StreamOps.buildBannedLines(corpus, "doc_id", "text",
-      maxDocFreq = 10, outPath = bannedPath)
-
-    val in = MemoryStream[(Long, String)](spark)
-    val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_swi_ckpt").toFile
-    ckpt.deleteOnExit()
-    // threshold 0.9 is the DISCRIMINATING choice: if the banner leaked
-    // into doc 1's indexed text, doc 2 (the clean content alone) would
-    // overlap it at only ~0.5 Jaccard and be wrongly ADMITTED; with the
-    // strip working, doc 2 matches exactly and drops
-    val q = StreamOps.streamingWebIngest(
-      in.toDF().toDF("doc_id", "markup"), "doc_id", "markup", idx,
-      ckpt.getAbsolutePath, bannedPath,
-      (df, bid) => admitted.synchronized {
-        admitted ++= df.select("doc_id").collect().map(r => (bid, r.getLong(0)))
-      },
-      threshold = 0.9)
-    try {
-      // batch 0: banner + fresh content -> admitted, indexed WITHOUT
-      // the banner lines
-      in.addData((1L, markup(banner :+ freshText)))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L)),
-        s"batch 0 admissions: ${admitted.toSet}")
-      // batch 1: doc 2 is doc 1's clean content with NO banner — an
-      // exact dup iff the index holds clean text; doc 3 is
-      // boilerplate-only (drops before admission, never indexed);
-      // doc 4 is the banner around genuinely new content (admits)
-      in.addData(
-        (2L, markup(Seq(freshText))),
-        (3L, markup(banner)),
-        (4L, markup(banner :+ otherText)))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L), (1L, 4L)),
-        s"batch 1 admissions: ${admitted.toSet}")
-      // the batch side detects a NEW banner and refreshes the snapshot
-      // (overwrite) — the running stream must pick it up on the next
-      // trigger with NO restart (the per-trigger re-read claim)
-      val banner2 = "subscribe to our newsletter for updates"
-      val corpus2 = (0 until 12).map(i =>
-        (200L + i, (banner :+ banner2 :+ s"later crawl page $i id ${i * 11}")
-          .mkString("\n"))).toDF("doc_id", "text")
-      StreamOps.buildBannedLines(corpus2, "doc_id", "text",
-        maxDocFreq = 10, outPath = bannedPath)
-      val freshText2 = "streams joined windows watermarked triggers " +
-        "checkpointed offsets replayed sinks idempotent batches bounded " +
-        "state stores compacted snapshots versioned"
-      in.addData((5L, markup(Seq(banner2, freshText2))))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) ==
-        Set((0L, 1L), (1L, 4L), (2L, 5L)),
-        s"batch 2 admissions: ${admitted.toSet}")
-      // doc 6 is doc 5's content WITHOUT banner2 — an exact dup iff
-      // banner2 was stripped before doc 5 was indexed
-      in.addData((6L, markup(Seq(freshText2))))
-      q.processAllAvailable()
-      assert(admitted.synchronized(admitted.toSet) ==
-        Set((0L, 1L), (1L, 4L), (2L, 5L)),
-        s"the refreshed ban must have kept banner2 out of the index: " +
-          s"${admitted.toSet}")
-    } finally q.stop()
-  }
-
-  test("banned-line snapshot never bans the empty line; blank separators survive") {
-    // ADVICE r16: '' exceeds any frequency threshold in any corpus —
-    // banning it would make stripBannedLines collapse paragraph
-    // structure (every blank separator deleted) and drop
-    // empty-extraction docs via the n_kept>0 admission filter. Blank
-    // lines are structure, not boilerplate; the build must not see them.
-    import graft.streaming.StreamOps
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    val banner = "accept cookies now"
-    val corpus = (0 until 12).map(i =>
-      (i.toLong, s"$banner\n\npage body $i\n\nmore body $i"))
-      .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_banned_empty").toString + "/banned"
-    StreamOps.buildBannedLines(corpus, "doc_id", "text",
-      maxDocFreq = 5, outPath = path)
-    val hashes = spark.read.parquet(path)
-      .collect().map(_.getString(0)).toSet
-    assert(hashes.contains(md5hex(banner)), "the banner must be banned")
-    assert(!hashes.contains(md5hex("")),
-      "the empty line must never enter the banned table")
-    val out = StreamOps.stripBannedLines(
-      Seq((100L, s"$banner\nfirst para\n\nsecond para"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", path)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(100L) == "first para\n\nsecond para",
-      s"blank separator must survive the strip: '${out(100L)}'")
   }
 
   test("admitBatch replays the admission rule deterministically in batch") {

@@ -200,6 +200,38 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("z-score join counts the late rows it drops in numRowsDroppedByWatermark") {
+    // a tick and a moving row behind the 10 s watermark never reach the
+    // join; the join's own state operator reports them, so the job needs
+    // no counter of its own for late join rows
+    val ticksIn = MemoryStream[PriceTick](spark)
+    val movingIn = MemoryStream[String](spark)
+    val q = ZScoreJob.zscores(ticksIn.toDF(), ZScoreJob.parseMoving(movingIn.toDF()))
+      .writeStream.format("memory").queryName("z_late").outputMode(OutputMode.Append).start()
+    def moving(t: String): String =
+      s"""{"timestamp":"$t","symbol":"BTCUSDT","windows":[""" +
+        """{"window":"30s","avg_price":100.0,"std_price":5.0}]}"""
+    try {
+      for (t <- Seq("2024-01-01 00:01:00", "2024-01-01 00:02:00")) {
+        ticksIn.addData(PriceTick("BTCUSDT", 110.0, ts(t)))
+        movingIn.addData(moving(t))
+        q.processAllAvailable()
+      }
+      // the watermark is now 00:01:50: both rows at 00:00:30 are late
+      ticksIn.addData(PriceTick("BTCUSDT", 120.0, ts("2024-01-01 00:00:30")))
+      movingIn.addData(moving("2024-01-01 00:00:30"))
+      q.processAllAvailable()
+      val dropped = q.recentProgress.toSeq.flatMap(_.stateOperators)
+        .filter(_.operatorName == "symmetricHashJoin")
+        .map(_.numRowsDroppedByWatermark).sum
+      assert(dropped == 2L, s"late join rows counted: $dropped")
+      val emitted = spark.table("z_late").collect()
+        .map(_.getAs[Timestamp]("event_time")).toSet
+      assert(emitted == Set(ts("2024-01-01 00:01:00"), ts("2024-01-01 00:02:00")),
+        s"only the on-time rows may join: $emitted")
+    } finally q.stop()
+  }
+
   test("H1 foreachBatch re-nest: nested JSON output without chained stateful aggs") {
     val in = MemoryStream[String](spark)
     val flat = MovingStatsJob.statsStream(in.toDF())
@@ -318,253 +350,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming dedup: duplicates within the watermark horizon dropped, state evicted after") {
-    val in = MemoryStream[PriceTick](spark)
-    val out = graft.streaming.StreamOps.dedupWithinWatermark(
-      in.toDF(), Seq("symbol", "price"), "event_time", "10 seconds")
-    val q = out.writeStream
-      .format("memory").queryName("dedup_out").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(
-        PriceTick("BTC", 100.0, ts("2024-01-01 00:00:00")),
-        PriceTick("BTC", 100.0, ts("2024-01-01 00:00:03")), // dup within horizon
-        PriceTick("BTC", 101.0, ts("2024-01-01 00:00:04")))
-      q.processAllAvailable()
-      assert(spark.table("dedup_out").count() == 2) // first 100.0 + the 101.0
-      // same content again inside the horizon of a later batch → still a dup
-      in.addData(PriceTick("BTC", 100.0, ts("2024-01-01 00:00:06")))
-      q.processAllAvailable()
-      assert(spark.table("dedup_out").count() == 2)
-      // advance the watermark far past the horizon: state for the key is
-      // evicted (bounded state), so the same content re-admits
-      in.addData(PriceTick("ETH", 1.0, ts("2024-01-01 01:00:00")))
-      q.processAllAvailable()
-      in.addData(PriceTick("BTC", 100.0, ts("2024-01-01 01:00:01")))
-      q.processAllAvailable()
-      val rows = spark.table("dedup_out")
-        .filter(col("symbol") === "BTC" && col("price") === 100.0).count()
-      assert(rows == 2, "evicted key did not re-admit — state would be unbounded")
-    } finally q.stop()
-  }
-
-  test("streaming corpus intake: quality gate, PII redaction, watermarked content dedup") {
-    import graft.model.Models.StreamDoc
-    val in = MemoryStream[StreamDoc](spark)
-    val out = graft.streaming.StreamOps.cleanDocStream(
-      in.toDF(), "text", "event_time", "10 seconds", minQuality = 0.3)
-    val q = out.writeStream
-      .format("memory").queryName("intake_out").outputMode(OutputMode.Append).start()
-    try {
-      val good = "the quick brown fox jumps over a lazy dog and then it runs away to the hills"
-      val pii = "contact me at alice@example.com for the quick brown fox papers and more of it"
-      in.addData(
-        StreamDoc(1L, good, ts("2024-01-01 00:00:00")),
-        StreamDoc(2L, "spam spam spam spam spam spam spam spam", ts("2024-01-01 00:00:01")),
-        StreamDoc(3L, good, ts("2024-01-01 00:00:02")), // dup of 1 within horizon
-        StreamDoc(4L, pii, ts("2024-01-01 00:00:03")))
-      q.processAllAvailable()
-      val rows = spark.table("intake_out")
-        .select(col("doc_id"), col("text")).collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      // low-quality 2 and duplicate 3 dropped; 1 and 4 admitted
-      assert(rows.keySet == Set(1L, 4L))
-      // the emitted text is the redacted form, original content keyed dedup
-      assert(rows(4L).contains("[EMAIL]") && !rows(4L).contains("alice@example.com"))
-    } finally q.stop()
-  }
-
-  test("streaming session windows: gap-merged extents, append-once on watermark close") {
-    val in = MemoryStream[PriceTick](spark)
-    val out = graft.streaming.StreamOps.sessionStats(
-      in.toDF(), "symbol", "event_time", gap = "10 seconds", watermark = "5 seconds")
-    val q = out.writeStream
-      .format("memory").queryName("sess_out").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(
-        PriceTick("BTC", 1.0, ts("2024-01-01 00:00:00")),
-        PriceTick("BTC", 2.0, ts("2024-01-01 00:00:05")), // gap 5s < 10s → merges
-        PriceTick("BTC", 3.0, ts("2024-01-01 00:00:08")),
-        PriceTick("BTC", 4.0, ts("2024-01-01 00:01:00"))) // gap 52s → new session
-      q.processAllAvailable()
-      // advance the watermark far past both session ends → both emit
-      in.addData(PriceTick("ETH", 9.0, ts("2024-01-01 00:10:00")))
-      q.processAllAvailable()
-      val rows = spark.table("sess_out").filter(col("symbol") === "BTC")
-        .collect()
-        .map(r => (r.getAs[Timestamp]("session_start"),
-          r.getAs[Timestamp]("session_end"), r.getAs[Long]("n_events"))).toSet
-      // session end = last event + gap (dynamic extent, not fixed width)
-      assert(rows == Set(
-        (ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:18"), 3L),
-        (ts("2024-01-01 00:01:00"), ts("2024-01-01 00:01:10"), 1L)), s"got $rows")
-    } finally q.stop()
-  }
-
-  test("streaming near-dup probe: incoming docs match the static corpus, never each other") {
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val corpus = Seq((100L, base),
-      (101L, "a corpus document about catalyst optimizer rules and strategies entirely"))
-      .toDF("doc_id", "text")
-    val in = MemoryStream[(Long, String)](spark)
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ndp").toFile
-    ckpt.deleteOnExit()
-    val q = graft.streaming.StreamOps.nearDupProbeStream(
-      in.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text",
-      ckpt.getAbsolutePath,
-      (pairs, _) => got.synchronized {
-        got ++= pairs.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getAs[Double]("jaccard")))
-      })
-    try {
-      // batch 0: an exact copy of corpus doc 100, a near copy, an unrelated
-      in.addData((1L, base), (2L, base + " phi"),
-        (3L, "totally unrelated text mentioning parquet columnar storage formats here"))
-      q.processAllAvailable()
-      val byPair = got.synchronized(got.map(t => (t._1, t._2) -> t._3).toMap)
-      assert(byPair.get((1L, 100L)).contains(1.0))
-      assert(byPair.contains((2L, 100L)))
-      assert(!byPair.keySet.exists(p => p._1 == 3L))
-      // stream docs 1 and 2 are near-dups OF EACH OTHER but within-batch
-      // pairs are never generated — the probe is strictly batch-vs-corpus
-      assert(!byPair.keySet.exists(p => p._1 == 1L && p._2 == 2L))
-      // batch 1: a copy of stream doc 3 — no corpus match, and no pairing
-      // against earlier STREAM docs (they never entered the corpus side)
-      in.addData((4L,
-        "totally unrelated text mentioning parquet columnar storage formats here"))
-      q.processAllAvailable()
-      assert(!got.synchronized(got.exists(t => t._1 == 4L)))
-    } finally q.stop()
-  }
-
-  test("bounded file replay: backlog drains in per-trigger slices, never one giant batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_replay").toFile
-    dir.deleteOnExit()
-    // a 4-file "backlog", 2 rows per file
-    (0 until 4).foreach { i =>
-      Seq((i * 2L, s"doc ${i * 2}"), (i * 2L + 1, s"doc ${i * 2 + 1}"))
-        .toDF("doc_id", "text")
-        .coalesce(1).write.parquet(s"${dir.getAbsolutePath}/part_$i")
-    }
-    val schema = spark.read.parquet(s"${dir.getAbsolutePath}/part_0").schema
-    val in = graft.streaming.StreamOps.boundedFileReplay(
-      spark, s"${dir.getAbsolutePath}/part_*", schema, maxFilesPerTrigger = 1)
-    val q = in.writeStream
-      .format("memory").queryName("replay_out").outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination(60000)
-      assert(spark.table("replay_out").count() == 8)
-      val batches = q.recentProgress.filter(_.numInputRows > 0)
-      assert(batches.length == 4,
-        s"expected 4 bounded micro-batches, got ${batches.length}")
-      assert(batches.forall(_.numInputRows == 2),
-        "a micro-batch exceeded the per-trigger file bound")
-    } finally q.stop()
-  }
-
-  test("streaming interval join: only time-bounded matches emit, join state is watermark-bounded") {
-    val lIn = MemoryStream[PriceTick](spark)
-    val rIn = MemoryStream[PriceTick](spark)
-    val left = lIn.toDF().select(col("symbol").as("k"), col("event_time").as("lts"))
-    val right = rIn.toDF().select(
-      col("symbol").as("k"), col("event_time").as("rts"), col("price").as("v"))
-    val joined = graft.streaming.StreamOps.intervalJoin(
-      left, right, "k", "lts", "rts",
-      lower = "interval -60 seconds", upper = "interval 60 seconds",
-      horizon = "30 seconds")
-    val q = joined.writeStream
-      .format("memory").queryName("ij_out").outputMode(OutputMode.Append).start()
-    try {
-      lIn.addData(PriceTick("BTC", 0.0, ts("2024-01-01 00:10:00")))
-      rIn.addData(
-        PriceTick("BTC", 1.0, ts("2024-01-01 00:09:30")),  // within −60s
-        PriceTick("BTC", 2.0, ts("2024-01-01 00:10:45")),  // within +60s
-        PriceTick("BTC", 3.0, ts("2024-01-01 00:12:00")),  // outside +60s
-        PriceTick("ETH", 4.0, ts("2024-01-01 00:10:00")))  // other key
-      q.processAllAvailable()
-      val got = spark.table("ij_out").select("r_v").collect().map(_.getDouble(0)).toSet
-      assert(got == Set(1.0, 2.0))
-      // the range condition is what lets Spark bound both state buffers
-      val plan = q.lastProgress
-      assert(plan != null)
-    } finally q.stop()
-  }
-
-  test("streaming left-outer interval join: unmatched left rows emit null-padded after the watermark closes their window") {
-    val lIn = MemoryStream[PriceTick](spark)
-    val rIn = MemoryStream[PriceTick](spark)
-    val left = lIn.toDF().select(
-      col("symbol").as("k"), col("event_time").as("lts"), col("price").as("lv"))
-    val right = rIn.toDF().select(
-      col("symbol").as("k"), col("event_time").as("rts"), col("price").as("v"))
-    val joined = graft.streaming.StreamOps.intervalJoin(
-      left, right, "k", "lts", "rts",
-      lower = "interval -60 seconds", upper = "interval 60 seconds",
-      horizon = "30 seconds", joinType = "left_outer")
-    val q = joined.writeStream
-      .format("memory").queryName("ij_outer").outputMode(OutputMode.Append).start()
-    try {
-      lIn.addData(
-        PriceTick("BTC", 10.0, ts("2024-01-01 00:10:00")), // will match
-        PriceTick("ETH", 20.0, ts("2024-01-01 00:10:00"))) // never matches
-      rIn.addData(PriceTick("BTC", 1.0, ts("2024-01-01 00:10:30")))
-      q.processAllAvailable()
-      // matched row emits immediately; the unmatched one must wait for
-      // the watermark to pass lts + upper + horizon
-      val early = spark.table("ij_outer").collect()
-      assert(early.map(_.getAs[Double]("lv")).toSet == Set(10.0))
-      // advance both watermarks far past the ETH row's match window
-      lIn.addData(PriceTick("ZZZ", 0.0, ts("2024-01-01 00:20:00")))
-      rIn.addData(PriceTick("ZZZ", 0.0, ts("2024-01-01 00:20:00")))
-      q.processAllAvailable()
-      q.processAllAvailable()
-      val eth = spark.table("ij_outer").filter(col("k") === "ETH").collect()
-      assert(eth.length == 1, "unmatched left row should emit exactly once")
-      assert(eth.head.isNullAt(eth.head.fieldIndex("r_v")),
-        "outer row must be null-padded on the right side")
-    } finally q.stop()
-  }
-
-  test("streaming full-outer interval join: unmatched rows on BOTH sides emit null-padded") {
-    val lIn = MemoryStream[PriceTick](spark)
-    val rIn = MemoryStream[PriceTick](spark)
-    val left = lIn.toDF().select(
-      col("symbol").as("k"), col("event_time").as("lts"), col("price").as("lv"))
-    val right = rIn.toDF().select(
-      col("symbol").as("k"), col("event_time").as("rts"), col("price").as("v"))
-    val joined = graft.streaming.StreamOps.intervalJoin(
-      left, right, "k", "lts", "rts",
-      lower = "interval -60 seconds", upper = "interval 60 seconds",
-      horizon = "30 seconds", joinType = "full_outer")
-    val q = joined.writeStream
-      .format("memory").queryName("ij_full").outputMode(OutputMode.Append).start()
-    try {
-      lIn.addData(
-        PriceTick("BTC", 10.0, ts("2024-01-01 00:10:00")), // matches
-        PriceTick("ETH", 20.0, ts("2024-01-01 00:10:00"))) // left-only
-      rIn.addData(
-        PriceTick("BTC", 1.0, ts("2024-01-01 00:10:30")),
-        PriceTick("DOGE", 2.0, ts("2024-01-01 00:10:00"))) // right-only
-      q.processAllAvailable()
-      // advance both watermarks far past every match window
-      lIn.addData(PriceTick("ZZZ", 0.0, ts("2024-01-01 00:20:00")))
-      rIn.addData(PriceTick("ZZZ", 0.0, ts("2024-01-01 00:21:30"))) // outside ±60s of ZZZ-left
-      q.processAllAvailable()
-      q.processAllAvailable()
-      val eth = spark.table("ij_full").filter(col("k") === "ETH").collect()
-      assert(eth.length == 1 && eth.head.isNullAt(eth.head.fieldIndex("r_v")),
-        "left-only row must emit once, right-null-padded")
-      val doge = spark.table("ij_full").filter(col("k") === "DOGE").collect()
-      assert(doge.length == 1 && doge.head.isNullAt(doge.head.fieldIndex("lv")),
-        "right-only row must emit once, left-null-padded — and keep its key")
-      val btc = spark.table("ij_full").filter(col("k") === "BTC").collect()
-      assert(btc.length == 1 && btc.head.getAs[Double]("r_v") == 1.0)
-    } finally q.stop()
-  }
-
   test("stream-static enrichment join is stateless and broadcast") {
     import spark.implicits._
     val dim = Seq(("BTC", "crypto"), ("ETH", "crypto"), ("AAPL", "equity"))
@@ -630,80 +415,5 @@ class StreamingSpec extends SparkSpec {
       val first = spark.table("alerts_beyond").filter(col("price") === 100.0).collect()
       assert(first.length == 1 && first.head.getAs[Double]("seconds_until") == 20.0)
     } finally q.stop()
-  }
-
-  test("streaming trending keys: hot key ranks first, window closes on watermark, state is sketch-sized") {
-    val in = MemoryStream[PriceTick](spark)
-    val trending = graft.streaming.StreamOps.trendingKeys(
-      in.toDF(), keyCol = "symbol", eventTimeCol = "event_time",
-      windowLen = "1 minute", watermark = "10 seconds", k = 2)
-    val q = trending.writeStream
-      .format("memory").queryName("trend_out").outputMode(OutputMode.Append).start()
-    try {
-      // 6×BTC, 2×ETH, 1×DOGE inside one window: BTC's true share (2/3)
-      // clears the 1/(k+1)=1/3 survival bar with room
-      val base = "2024-01-01 00:00:"
-      in.addData(
-        (0 until 6).map(i => PriceTick("BTC", 1.0, ts(f"$base${i * 5}%02d"))) ++
-          Seq(PriceTick("ETH", 1.0, ts(s"${base}40")),
-            PriceTick("ETH", 1.0, ts(s"${base}45")),
-            PriceTick("DOGE", 1.0, ts(s"${base}50"))): _*)
-      q.processAllAvailable()
-      assert(spark.table("trend_out").isEmpty) // append: nothing until close
-      in.addData(PriceTick("BTC", 1.0, ts("2024-01-01 00:05:00"))) // advance watermark
-      q.processAllAvailable()
-      val rows = spark.table("trend_out").collect()
-      assert(rows.length == 1, s"exactly the closed window emits, got ${rows.length}")
-      val cands = rows.head.getSeq[org.apache.spark.sql.Row](2)
-      assert(cands.length <= 2, "state is bounded by k counters, not distinct keys")
-      assert(cands.head.getString(0) == "BTC", "the hot key must rank first")
-      // MG undercount bound: est >= true - n/(k+1) = 6 - 3
-      assert(cands.head.getLong(1) >= 3L)
-    } finally q.stop()
-  }
-
-  test("stream-static dim enrichment: broadcast-hash per batch, left join keeps orphan facts") {
-    val in = MemoryStream[PriceTick](spark)
-    val dim = Seq(("BTC", "crypto-major"), ("ETH", "crypto-major"))
-      .toDF("sym", "segment")
-    val enriched = graft.streaming.StreamOps.enrichWithDim(
-      in.toDF(), dim, streamKey = "symbol", dimKey = "sym")
-    // the per-batch plan must be a broadcast hash join (a shuffle would
-    // re-partition every micro-batch against a static table)
-    val q = enriched.writeStream
-      .format("memory").queryName("enrich_out").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(
-        PriceTick("BTC", 1.0, ts("2024-01-01 00:00:01")),
-        PriceTick("DOGE", 2.0, ts("2024-01-01 00:00:02")))
-      q.processAllAvailable()
-      val rows = spark.table("enrich_out").collect()
-      assert(rows.length == 2, "left join must not drop the orphan fact")
-      val bySym = rows.map(r => r.getAs[String]("symbol") -> r.getAs[String]("segment")).toMap
-      assert(bySym("BTC") == "crypto-major")
-      assert(bySym("DOGE") == null, "unmatched dim -> null columns, row preserved")
-      val plan = q.lastProgress.sources.length // query ran; now pin the batch plan shape
-      assert(plan == 1)
-      val batchPlan = graft.streaming.StreamOps
-        .enrichWithDim(Seq(PriceTick("BTC", 1.0, ts("2024-01-01 00:00:01"))).toDF(),
-          dim, "symbol", "sym")
-        .queryExecution.executedPlan.toString
-      assert(batchPlan.contains("BroadcastHashJoin"),
-        s"dim side must broadcast, got:\n$batchPlan")
-    } finally q.stop()
-  }
-
-  test("dim enrichment fails loudly on column collisions instead of silently duplicating") {
-    val stream = Seq(PriceTick("BTC", 1.0, ts("2024-01-01 00:00:01"))).toDF()
-    // dim already carries a column named streamKey → the rename would dup it
-    val dupKey = Seq(("BTC", "x")).toDF("sym", "symbol")
-    intercept[IllegalArgumentException] {
-      graft.streaming.StreamOps.enrichWithDim(stream, dupKey, "symbol", "sym")
-    }
-    // a non-key dim column shadowing a stream column → ambiguous output
-    val clash = Seq(("BTC", 9.0)).toDF("sym", "price")
-    intercept[IllegalArgumentException] {
-      graft.streaming.StreamOps.enrichWithDim(stream, clash, "symbol", "sym")
-    }
   }
 }

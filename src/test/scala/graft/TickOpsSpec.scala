@@ -79,6 +79,24 @@ class TickOpsSpec extends SparkSpec {
     }
   }
 
+  test("multi-window stats reject a duration that is not a multiple of the slide") {
+    // window() gives a 25 s / 10 s window three ends per tick (:05, :15
+    // and :25 for ticks at :02 and :07); dur / slide = 2 offsets would
+    // silently drop the :05 window, so the explode paths must refuse it
+    val t = ticksDf(("BTC", 100.0, "2024-01-01 00:00:02"), ("BTC", 110.0, "2024-01-01 00:00:07"))
+    val cfgs = Seq(WindowConfig("25s", "25 seconds"))
+    val ends = TickOps.movingStatsUnion(t, cfgs)
+      .collect().map(_.getAs[Timestamp]("window_timestamp")).toSet
+    assert(ends == Set(ts("2024-01-01 00:00:05"), ts("2024-01-01 00:00:15"),
+      ts("2024-01-01 00:00:25")))
+    for (multi <- Seq[() => DataFrame](
+        () => TickOps.slidingStatsMulti(t, cfgs),
+        () => TickOps.slidingStatsMultiTwoPhaseExact(t, cfgs))) {
+      val e = intercept[IllegalArgumentException](multi())
+      assert(e.getMessage.contains("not a multiple of the slide"), e.getMessage)
+    }
+  }
+
   test("pre-epoch ticks bucket with floor semantics, like window()") {
     // −15 s lies in the slide bucket [−20 s, −10 s): its 30 s windows end
     // at −10 s, 0 s and +10 s. Truncating division would bucket it at
