@@ -104,7 +104,8 @@ object TickOps {
     * wide for whole-stage codegen. Kept only as the reference-fidelity
     * batch operator (q02, and the reference the tests check the streamed
     * and scale paths against); [[slidingStatsMulti]] computes the same
-    * rows in one aggregation, and the streaming job uses its two steps. */
+    * rows in one aggregation, and the streaming job from per-symbol panes
+    * ([[graft.streaming.MovingStatsJob]]). */
   def unionAll(dfs: Seq[DataFrame]): DataFrame = dfs.reduce(_ union _)
 
   def movingStatsUnion(ticks: DataFrame, cfgs: Seq[WindowConfig] = defaultWindows, exact: Boolean = false): DataFrame =
@@ -114,7 +115,7 @@ object TickOps {
     * [[windowOffsets]] emits `duration / slide` ends per tick, so a
     * remainder would silently drop the windows `window()` starts inside
     * the first slide. */
-  private def uniformSlideMs(cfgs: Seq[WindowConfig]): Long = {
+  private[graft] def uniformSlideMs(cfgs: Seq[WindowConfig]): Long = {
     require(cfgs.map(_.slideMs).distinct.size == 1, "uniform slide required")
     val slideMs = cfgs.head.slideMs
     cfgs.foreach(c => require(c.durationMs % slideMs == 0,
@@ -126,7 +127,7 @@ object TickOps {
     * semantics (`ms − pmod(ms, slide)`), so a pre-1970 tick lands in the
     * bucket below it like `window()` puts it; integer `div` truncates
     * toward zero and would shift it one slide up. */
-  private def bucketMs(slideMs: Long): Column = {
+  private[graft] def bucketMs(slideMs: Long): Column = {
     val ms = unix_millis(col("event_time"))
     (ms - pmod(ms, lit(slideMs))).as("bucket_ms")
   }
@@ -149,7 +150,7 @@ object TickOps {
     * exploded over the constant (tag, end-offset) array. Output:
     * window_timestamp (window END), window tag, symbol, price. Requires a
     * uniform slide across configs (true of the reference's six). */
-  def windowInstances(ticks: DataFrame, cfgs: Seq[WindowConfig] = defaultWindows): DataFrame = {
+  private def windowInstances(ticks: DataFrame, cfgs: Seq[WindowConfig]): DataFrame = {
     val slideMs = uniformSlideMs(cfgs)
     ticks
       .select(col("symbol"), col("price"), bucketMs(slideMs),
@@ -163,9 +164,8 @@ object TickOps {
 
   /** Mean and sample stddev per (window end, tag, symbol) of
     * [[windowInstances]] rows, with the same coercions and output columns
-    * as [[slidingStats]]. One aggregation for every window config, so a
-    * stream runs it as ONE stateful operator. */
-  def windowStats(instances: DataFrame, exact: Boolean = false): DataFrame = {
+    * as [[slidingStats]]. One aggregation for every window config. */
+  private def windowStats(instances: DataFrame, exact: Boolean): DataFrame = {
     val (a, s) = avgStd(exact)
     instances
       .groupBy(col("window_timestamp"), col("window"), col("symbol"))
@@ -263,36 +263,33 @@ object TickOps {
 
   /** Inverse of [[nestWindows]] (reference zscore_calculator.py:84-97). */
   def explodeWindows(nested: DataFrame): DataFrame =
-    nested
-      .select(
-        to_timestamp(col("timestamp")).as("window_timestamp"),
-        col("symbol"),
-        explode(col("windows")).as("w"))
-      .select(
-        col("window_timestamp"),
-        col("symbol"),
-        col("w.window").as("window"),
-        col("w.avg_price").as("avg_price"),
-        col("w.std_price").as("std_price"))
+    flattenWindows(nested.select(
+      to_timestamp(col("timestamp")).as("window_timestamp"), col("symbol"), col("windows")))
+
+  /** One row per element of the `windows` array: the frame's other
+    * columns, then window, avg_price, std_price. */
+  def flattenWindows(df: DataFrame): DataFrame = {
+    val keep = df.columns.filterNot(_ == "windows").toSeq.map(col)
+    df.select(keep :+ explode(col("windows")).as("w"): _*)
+      .select(keep ++ Seq("window", "avg_price", "std_price").map(f => col(s"w.$f").as(f)): _*)
+  }
 
   /** The reference's stream-stream inner equi-join: tick event_time ==
     * window END timestamp && same symbol (reference
     * zscore_calculator.py:103-118). Equality — not a range — on the time
     * key is intentional reference semantics: only ticks landing exactly on
-    * a slide boundary match. */
-  def joinTicksToStats(ticks: DataFrame, statsFlat: DataFrame): DataFrame =
+    * a slide boundary match. The stats side's other columns follow the
+    * tick's: window, avg_price and std_price for flat stats, the undecoded
+    * record body in [[graft.streaming.ZScoreJob]]. */
+  def joinTicksToStats(ticks: DataFrame, stats: DataFrame): DataFrame =
     ticks.alias("t").join(
-      statsFlat.alias("m"),
+      stats.alias("m"),
       col("t.event_time") === col("m.window_timestamp") &&
         col("t.symbol") === col("m.symbol"),
       "inner")
-      .select(
-        col("t.event_time").as("event_time"),
-        col("t.symbol").as("symbol"),
-        col("t.price").as("price"),
-        col("m.window").as("window"),
-        col("m.avg_price").as("avg_price"),
-        col("m.std_price").as("std_price"))
+      .select(Seq(col("t.event_time").as("event_time"), col("t.symbol").as("symbol"),
+        col("t.price").as("price")) ++
+        stats.columns.filterNot(Set("window_timestamp", "symbol")).map(c => col(s"m.$c")): _*)
 
   /** z = (price - avg) / std, forced to 0.0 when std is 0/null/NaN — the
     * guard runs *before* the division (reference zscore_calculator.py:124-133). */

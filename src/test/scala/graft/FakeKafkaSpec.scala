@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.model.Models
+import graft.operators.TickOps
 import graft.streaming.{KafkaIO, MovingStatsJob, ZScoreJob}
 import graft.streaming.fake.FakeBroker
 
@@ -194,7 +195,7 @@ class FakeKafkaSpec extends SparkSpec {
     })
     val stats = MovingStatsJob.statsStream(
       KafkaIO.source(spark, "fake:9092", in, "earliest", "fakekafka"))
-    val qFlat = stats.writeStream.format("memory").queryName("fk_fanout_flat")
+    val qFlat = TickOps.flattenWindows(stats).writeStream.format("memory").queryName("fk_fanout_flat")
       .outputMode("update").start()
     val qTopic = KafkaIO.sink(stats, MovingStatsJob.nested, "fake:9092", out, ckpt(),
       "update", "0 seconds", "fakekafka").start()
@@ -211,9 +212,63 @@ class FakeKafkaSpec extends SparkSpec {
       s"one message per (window end, symbol): ${msgs.size} messages, $groups groups")
     // the nested messages carry exactly the flat table's window rows
     val keys = Seq("window_timestamp", "symbol", "window").map(col)
-    val fromTopic = ZScoreJob.parseMoving(msgs.toDF("value")).select(keys: _*)
+    val fromTopic = TickOps.explodeWindows(msgs.toDF("value")
+      .select(from_json(col("value"), Models.movingStatsSchema).as("d")).select(col("d.*")))
+      .select(keys: _*)
     val fromFlat = flat.select(keys: _*)
     assert(fromTopic.exceptAll(fromFlat).isEmpty && fromFlat.exceptAll(fromTopic).isEmpty)
+  }
+
+  test("MovingStatsJob restarted on its checkpoint publishes what an uninterrupted run publishes") {
+    // the pane state and the offsets come back from the checkpoint: a
+    // lost pane would change every window that spans the restart, a
+    // replayed offset would count its ticks twice. One tick per 10 s pane
+    // keeps the merge order, and so every bit, the same in both runs.
+    val (in, outStop, outOnce) = ("fk-restart-price", "fk-restart-moving", "fk-once-moving")
+    Seq(in, outStop, outOnce).foreach(FakeBroker.createTopic(_))
+    val chunks = (0 until 4).map { c =>
+      for (i <- c * 15 until (c + 1) * 15; sym <- Seq("BTCUSDT", "ETHUSDT")) yield {
+        val ts = java.time.Instant.ofEpochSecond(1704067200L + 10L * i + 3)
+        s"""{"symbol":"$sym","price":${100.0 + (i * 37 % 11) * 0.25},"event_time":"$ts"}"""
+      }
+    }
+    def start(out: String, cp: String) = MovingStatsJob.run(spark, "fake:9092", in, out, cp,
+      MovingStatsJob.H1Mode.ForeachBatch, format = "fakekafka",
+      startingOffsets = "earliest", triggerInterval = "0 seconds")
+    // the records each micro-batch appends, in batch order
+    val published = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    def feed(q: org.apache.spark.sql.streaming.StreamingQuery, chunk: Seq[String]): Unit = {
+      val before = FakeBroker.latestOffsets(outStop)
+      publish(in, chunk)
+      q.processAllAvailable()
+      val added = before.indices.flatMap(p =>
+        FakeBroker.fetch(outStop, p, before(p), FakeBroker.latestOffsets(outStop)(p)))
+      assert(added.nonEmpty)
+      published += added.map(r => new String(r.value, "UTF-8"))
+    }
+    val cp = ckpt()
+    val q1 = start(outStop, cp)
+    try chunks.take(2).foreach(feed(q1, _)) finally q1.stop()
+    val q2 = start(outStop, cp)
+    try chunks.drop(2).foreach(feed(q2, _)) finally q2.stop()
+    assert(topicValues(outStop).size == published.map(_.size).sum)
+
+    val q3 = start(outOnce, ckpt())
+    try q3.processAllAvailable() finally q3.stop()
+
+    import spark.implicits._
+    def last(batches: Seq[Seq[String]]): Map[(String, String, String), (Double, Double)] =
+      batches.foldLeft(Map.empty[(String, String, String), (Double, Double)]) { (acc, vals) =>
+        acc ++ TickOps.explodeWindows(vals.toDF("value")
+          .select(from_json(col("value"), Models.movingStatsSchema).as("d")).select(col("d.*")))
+          .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getString(2)) ->
+            ((r.getDouble(3), r.getDouble(4))))
+      }
+    val once = last(Seq(topicValues(outOnce))) // one batch: one record per key
+    val restarted = last(published.toSeq)
+    assert(once.nonEmpty && restarted.keySet == once.keySet,
+      s"${restarted.keySet.diff(once.keySet).take(3)} / ${once.keySet.diff(restarted.keySet).take(3)}")
+    once.foreach { case (k, v) => assert(restarted(k) == v, s"at $k") }
   }
 
   test("maxOffsetsPerTrigger: backlog replays as bounded batches, split across partitions") {

@@ -153,22 +153,41 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("statsStream runs all six windows as one stateful aggregation with no Expand") {
-    // One state store for every window instance; a per-window window()
-    // topology would plan six StateStoreSaveExecs and six wide Expands
-    // that fall out of whole-stage codegen on every trigger.
-    import org.apache.spark.sql.execution.ExpandExec
+    // One per-symbol pane operator emits the nested records; a per-window
+    // window() topology would plan six StateStoreSaveExecs and six wide
+    // Expands, the explode-and-aggregate one a StateStoreSaveExec, and the
+    // collect_list re-nest an object-hash aggregate that falls back to sort.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{ExpandExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
     import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+    import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
     import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
     import spark.implicits._
     val in = MemoryStream[String](spark)
+    val encodePlans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
     val q = graft.streaming.MovingStatsJob.statsStream(in.toDF()).writeStream
-      .format("memory").queryName("stats_plan_shape").outputMode("update").start()
+      .queryName("stats_plan_shape").outputMode("update")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val encoded = graft.streaming.MovingStatsJob.nested(b)
+        encoded.collect() // a foreachBatch must read every partition
+        encodePlans.synchronized { encodePlans += encoded.queryExecution.sparkPlan }
+        ()
+      }.start()
     try {
       in.addData("""{"symbol":"BTC","price":1.0,"event_time":"2024-01-01T00:00:02Z"}""")
       q.processAllAvailable()
       val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
-      assert(plan.collect { case s: StateStoreSaveExec => s }.length == 1, plan)
-      assert(plan.collect { case e: ExpandExec => e }.isEmpty, plan)
+      assert(plan.collect { case s: FlatMapGroupsWithStateExec => s }.length == 1, plan)
+      assert(encodePlans.nonEmpty)
+      (plan +: encodePlans.synchronized(encodePlans.toList)).foreach { p =>
+        assert(p.collect {
+          case s: StateStoreSaveExec => s
+          case e: ExpandExec => e
+          case a: ObjectHashAggregateExec => a
+          case a: SortAggregateExec => a
+        }.isEmpty, p)
+      }
       assert(q.lastProgress.stateOperators.length == 1)
     } finally q.stop()
   }

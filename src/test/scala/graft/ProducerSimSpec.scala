@@ -68,7 +68,7 @@ class ProducerSimSpec extends SparkSpec {
     assert(frames.count(_.price == 100.0) == 15 && frames.count(_.price == 110.0) == 5)
 
     val in = MemoryStream[String](spark)
-    val q = graft.streaming.MovingStatsJob.statsStream(in.toDF())
+    val q = graft.operators.TickOps.flattenWindows(graft.streaming.MovingStatsJob.statsStream(in.toDF()))
       .writeStream.format("memory").queryName("producer_sim_out")
       .outputMode(OutputMode.Update).start()
     try {

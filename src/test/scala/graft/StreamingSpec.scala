@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.model.Models.PriceTick
 import graft.operators.TickOps
@@ -25,7 +25,7 @@ class StreamingSpec extends SparkSpec {
   test("moving stats streaming: windowed update-mode emission via MemoryStream") {
     val in = MemoryStream[String](spark)
     val raw = in.toDF().withColumnRenamed("value", "value")
-    val flat = MovingStatsJob.statsStream(raw)
+    val flat = TickOps.flattenWindows(MovingStatsJob.statsStream(raw))
     val q = flat.writeStream
       .format("memory").queryName("mv_out").outputMode(OutputMode.Update).start()
     try {
@@ -89,22 +89,25 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("statsStream emits the six-window() union's update rows batch by batch and evicts the same state") {
-    // The reference topology: one window() aggregation per config,
-    // watermarked on event_time. statsStream watermarks the derived window
-    // end instead; both must emit the same rows in every batch and hold
-    // the same state rows, which pins its watermark delay.
-    //
-    // One source each: a MemoryStream drops what its first reader commits
+  private type ParityOut = (Long, Option[String], String, Double, Double)
+
+  /** The reference topology, one window() aggregation per config
+    * watermarked on event_time, next to statsStream. `body` gets a `feed`
+    * that adds the same tick JSON to both as one micro-batch each, asserts
+    * equal batch ids and equal flat update rows in every batch, and
+    * returns statsStream's batches, its state rows, and the rows its
+    * watermark dropped in those batches. One source each: a MemoryStream
+    * drops what its first reader commits. */
+  private def withParity(name: String)(
+      body: (Seq[String] => (Seq[(Long, Seq[ParityOut])], Long, Long)) => Unit): Unit = {
     val (refIn, gotIn) = (MemoryStream[String](spark), MemoryStream[String](spark))
     val reference = TickOps.movingStatsUnion(
       TickOps.parseTicks(refIn.toDF()).withWatermark("event_time", "10 seconds"))
-    type Out = (Long, String, String, Double, Double)
-    def start(df: DataFrame, name: String) = {
-      val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Out])]
-      val q = df.writeStream.queryName(name).outputMode(OutputMode.Update)
+    def start(df: DataFrame, queryName: String) = {
+      val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[ParityOut])]
+      val q = df.writeStream.queryName(queryName).outputMode(OutputMode.Update)
         .foreachBatch { (b: DataFrame, id: Long) =>
-          val rows = b.collect().toSeq.map(r => (r.getTimestamp(0).getTime, r.getString(1),
+          val rows = b.collect().toSeq.map(r => (r.getTimestamp(0).getTime, Option(r.getString(1)),
             r.getString(2), r.getDouble(3), r.getDouble(4))).sortBy(r => (r._1, r._2, r._3))
           batches.synchronized { batches += id -> rows }
           ()
@@ -112,12 +115,10 @@ class StreamingSpec extends SparkSpec {
       (q, batches)
     }
     // a started query keeps the session conf it started with
-    val (ref, refOut) = noWideExpandCodegen(start(reference, "parity_ref"))
-    val (got, gotOut) = start(MovingStatsJob.statsStream(gotIn.toDF()), "parity_got")
-    def stateRows(q: StreamingQuery): Long =
-      q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-    def step(ticks: (String, Double, String)*): (Seq[(Long, Seq[Out])], Long) = {
-      val json = ticks.map { case (sym, p, iso) => tickJson(sym, p, iso) }
+    val (ref, refOut) = noWideExpandCodegen(start(reference, s"${name}_ref"))
+    val (got, gotOut) = start(TickOps.flattenWindows(MovingStatsJob.statsStream(gotIn.toDF())), s"${name}_got")
+    def feed(json: Seq[String]): (Seq[(Long, Seq[ParityOut])], Long, Long) = {
+      val seen = got.recentProgress.length
       refIn.addData(json); gotIn.addData(json)
       ref.processAllAvailable()
       got.processAllAvailable()
@@ -127,29 +128,122 @@ class StreamingSpec extends SparkSpec {
       emitted.zip(expected).foreach { case ((id, a), (_, b)) =>
         assert(a == b, s"batch $id: only streamed ${a.diff(b).take(5)}; only reference ${b.diff(a).take(5)}")
       }
-      assert(stateRows(got) == stateRows(ref))
       gotOut.synchronized(gotOut.clear()); refOut.synchronized(refOut.clear())
-      (emitted, stateRows(got))
+      val dropped = got.recentProgress.drop(seen).flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+      (emitted, got.lastProgress.stateOperators.map(_.numRowsTotal).sum, dropped)
     }
-    try {
+    try body(feed) finally { ref.stop(); got.stop() }
+  }
+
+  test("statsStream emits the six-window() union's update rows batch by batch and evicts the same state") {
+    // statsStream watermarks each tick's newest window end and keeps one
+    // pane ring per symbol; it must emit the reference's rows in every
+    // batch, which pins its watermark delay, and hold one state row per
+    // symbol with an open window.
+    withParity("parity") { feed =>
+      def step(ticks: (String, Double, String)*): (Seq[(Long, Seq[ParityOut])], Long) = {
+        val (emitted, stateRows, _) = feed(ticks.map { case (sym, p, iso) => tickJson(sym, p, iso) })
+        (emitted, stateRows)
+      }
       // in order
-      val (first, _) = step(("BTC", 100.0, "2024-01-01T00:00:02Z"), ("ETH", 50.0, "2024-01-01T00:00:05Z"),
+      val (first, firstRows) = step(("BTC", 100.0, "2024-01-01T00:00:02Z"), ("ETH", 50.0, "2024-01-01T00:00:05Z"),
         ("BTC", 110.0, "2024-01-01T00:00:07Z"), ("BTC", 120.0, "2024-01-01T00:00:15Z"))
       assert(first.flatMap(_._2).nonEmpty)
+      assert(firstRows == 2) // BTC, ETH
       // watermark → 00:00:50
-      step(("BTC", 130.0, "2024-01-01T00:01:00Z"))
+      assert(step(("BTC", 130.0, "2024-01-01T00:01:00Z"))._2 == 2)
       // late for every 30 s window (ends :20–:40), not for 1m (:60, :70) or 1h
       val (late, beforeJump) = step(("BTC", 140.0, "2024-01-01T00:00:12Z"))
       val lateWindows = late.flatMap(_._2).map(_._3).toSet
       assert(!lateWindows("30s") && lateWindows("1m") && lateWindows("1h"))
       // jump: watermark → 01:09:50 passes every earlier window end (≤ 01:01:00)
       val (_, afterJump) = step(("BTC", 150.0, "2024-01-01T01:10:00Z"))
+      assert(beforeJump == 2)
       assert(afterJump < beforeJump)
-      assert(afterJump == 669) // 3+6+30+90+180+360 instances of the 01:10:00 tick
+      assert(afterJump == 1) // BTC; ETH's last window ended 01:00:00
       // older than every window: its last 1h window ends 01:05:00 ≤ watermark
-      val (old, _) = step(("ETH", 60.0, "2024-01-01T00:05:00Z"))
+      val (old, oldRows) = step(("ETH", 60.0, "2024-01-01T00:05:00Z"))
       assert(old.flatMap(_._2).isEmpty)
-    } finally { ref.stop(); got.stop() }
+      assert(oldRows == 1)
+    }
+  }
+
+  test("statsStream matches the six-window() union on null prices and symbols, and drops a tick once only when every window is closed") {
+    withParity("parity_nulls") { feed =>
+      val (first, rows, _) = feed(Seq(
+        tickJson("BTC", 100.0, "2024-01-01T00:00:02Z"),
+        """{"symbol":"BTC","price":null,"event_time":"2024-01-01T00:00:07Z"}""",
+        """{"symbol":null,"price":50.0,"event_time":"2024-01-01T00:00:05Z"}""",
+        """{"price":70.0,"event_time":"2024-01-01T00:00:15Z"}""",
+        """{"symbol":"ETH","event_time":"2024-01-01T00:00:09Z"}"""))
+      val flat = first.flatMap(_._2)
+      assert(flat.exists(_._2.isEmpty), "null-symbol windows")
+      val eth = flat.filter(_._2.contains("ETH"))
+      assert(eth.length == 669 && eth.forall(r => r._4 == 0.0 && r._5 == 0.0), "price-less windows coerce to 0.0")
+      assert(rows == 3) // BTC, ETH, the null symbol
+      // watermark → 00:00:50
+      feed(Seq(tickJson("BTC", 130.0, "2024-01-01T00:01:00Z")))
+      // closed for its 30 s windows, open for 1m and 1h: counted nowhere
+      val (partly, _, partlyDropped) = feed(Seq(tickJson("BTC", 140.0, "2024-01-01T00:00:12Z")))
+      assert(partly.flatMap(_._2).nonEmpty)
+      assert(partlyDropped == 0)
+      // its last window ends 00:00:00 ≤ watermark: one tick dropped, one count
+      val (old, _, oldDropped) = feed(Seq(tickJson("BTC", 90.0, "2023-12-31T23:00:00Z")))
+      assert(old.flatMap(_._2).isEmpty)
+      assert(oldDropped == 1)
+    }
+  }
+
+  test("pane stats stay within 1e-9 of exact decimals at BTC price levels over a full hour") {
+    // 10 ticks/s for an hour of whole-cent prices around 60,000 with a few
+    // dollars of noise, 3,000 above the first price for the last 10
+    // minutes: unshifted sums of squares cancel the variance away
+    val rnd = new scala.util.Random(7)
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
+    val cents = (0 until 36000).map { i =>
+      val drift = if (i < 24000) 0.0 else math.min(3000.0, (i - 24000) * 0.5)
+      math.round((60000.0 + drift + rnd.nextGaussian() * 3.0) * 100)
+    }
+    val json = cents.zipWithIndex.map { case (c, i) =>
+      val at = java.time.Instant.ofEpochMilli(t0 + 100L * i)
+      f"""{"symbol":"BTC","price":${c / 100}.${c % 100}%02d,"event_time":"$at"}"""
+    }
+    val in = MemoryStream[String](spark)
+    val last = scala.collection.mutable.Map.empty[(Long, String), (Double, Double)]
+    val q = TickOps.flattenWindows(MovingStatsJob.statsStream(in.toDF()))
+      .writeStream.outputMode(OutputMode.Update)
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.collect().foreach(r => last((r.getTimestamp(0).getTime, r.getString(2))) = (r.getDouble(3), r.getDouble(4)))
+        ()
+      }.start()
+    try json.grouped(6000).foreach { chunk => in.addData(chunk); q.processAllAvailable() }
+    finally q.stop()
+    // avg from the exact decimal sums; std from the exact integer sums of
+    // cents (the decimal path finishes its variance in doubles, which
+    // cancels to about 1e-7 at this price level)
+    val exact = TickOps.slidingStatsMultiTwoPhaseExact(TickOps.parseTicks(json.toDF("value")))
+      .collect().map(r => (r.getTimestamp(0).getTime, r.getString(2)) -> r.getDouble(3)).toMap
+    val durMs = TickOps.defaultWindows.map(c => c.name -> c.durationMs).toMap
+    val (s1, s2) = (cents.scanLeft(BigInt(0))(_ + _), cents.scanLeft(BigInt(0))((a, c) => a + BigInt(c) * c))
+    def exactStd(end: Long, window: String): Double = {
+      def at(ms: Long) = math.min(math.max(ms - t0, 0L) / 100L, cents.length.toLong).toInt
+      val (from, until) = (at(end - durMs(window)), at(end))
+      val n = until - from
+      if (n < 2) 0.0 else {
+        val (s, q) = (s1(until) - s1(from), s2(until) - s2(from))
+        val v = BigDecimal(q * n - s * s) / BigDecimal(BigInt(n) * (n - 1))
+        math.sqrt(v.toDouble) / 100
+      }
+    }
+    assert(last.keySet == exact.keySet)
+    def close(got: Double, want: Double) = math.abs(got - want) <= 1e-9 * math.abs(want)
+    exact.foreach { case (k @ (end, window), avg) =>
+      val (gotAvg, gotStd) = last(k)
+      val std = exactStd(end, window)
+      assert(close(gotAvg, avg) && close(gotStd, std), s"at $k: ($gotAvg, $gotStd) vs exact ($avg, $std)")
+    }
+    // short windows at the end of a full ring, well above the first price
+    assert(exact.exists { case ((end, w), avg) => w == "30s" && end == t0 + 3600000L && avg > 62900.0 })
   }
 
   test("watermark: late data beyond 10s is dropped from append-mode windows") {
