@@ -174,42 +174,19 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Median of `n` timed sentinel passes after one untimed warm pass
+  /** Median of five timed sentinel passes after one untimed warm pass
     * (the warm pass absorbs the plan's codegen + JIT ramp; the median
     * absorbs a stray GC). */
-  def sentinelMedian(spark: SparkSession, n: Int = 5): Double = {
+  def sentinelMedian(spark: SparkSession): Double = {
     sentinelPass(spark)
-    val walls = Seq.fill(n)(sentinelPass(spark)).sorted
-    walls((n - 1) / 2)
+    val walls = Seq.fill(5)(sentinelPass(spark)).sorted
+    walls(2)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle files, broadcasts, and checkpoint blocks are reclaimed by
-      // the ContextCleaner only after their handles are GC'd; a big heap
-      // may not GC for minutes while a 45-query session accumulates them
-      // — force a periodic sweep so late queries run in a clean JVM.
-      // 30s, not 2min (VERDICT r12 item 5, A/B'd r13run1 vs r13run2):
-      // the 2min cadence lets so much garbage accumulate that each sweep
-      // is a multi-second STW compaction landing on one unlucky rep
-      // (measured: single-rep ratios of 20-29x on sub-second queries);
-      // at 30s each sweep is small — worst main-section rep ratio fell
-      // to 2.0x, total 106->91 s. Env-overridable for re-runs.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_CLEANER_GC", "30s"))
-      // hold the WHOLE registry's generated classes (default 100 entries
-      // churns on ~900 codegen units → every rep re-compiles and re-runs
-      // unprofiled classes; see build.sbt's javaOptions note — this
-      // duplicate covers a Bench launched outside sbt)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = graft.util.SparkUtil.newLocalSession("bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val names = SparkEntry.queries.keys.toSeq.sorted

@@ -97,10 +97,8 @@ object AnnIndexStore {
     * PartitionFilters in AnnIndexStoreSpec). Encoding runs ONCE per
     * corpus snapshot, next to the centroid/codebook training.
     *
-    * Layout: `path/ingest=base/cell=N/…` — the same outer `ingest=`
-    * level as [[DedupIndexStore]]'s path layout; `cell` is a partition
-    * column at the second level, so probed-cells pruning prunes under
-    * it. */
+    * Layout: `path/cell=N/…`; `cell` is the partition column, so
+    * probed-cells pruning prunes directories. */
   def buildCodes(
       corpus: DataFrame,
       idCol: String,
@@ -118,7 +116,7 @@ object AnnIndexStore {
         "v", pqCentroids)
       .withColumn("cell", Similarity.nearestCell(col("v"), coarseCentroids))
       .select(col("neighbor_id"), col("cell"), col("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/ingest=base")
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
   }
 
   /** The coded corpus back as (neighbor_id, cell, codes); `cell` is a

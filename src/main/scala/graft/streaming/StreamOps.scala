@@ -350,8 +350,8 @@ object StreamOps {
     * a half-committed batch live in the tail normally, but a compaction
     * that ran between crash and restart has folded them — with their
     * ingest lineage — into the bucketed tables (see
-    * [[graft.operators.DedupIndexStore.compactTail]]). The specs and
-    * `tools.Probe` use it as the loop's batch reference. */
+    * [[graft.operators.DedupIndexStore.compactTail]]). The specs use it
+    * as the loop's batch reference. */
   private[graft] def admitBatchBucketed(
       batch: DataFrame,
       idCol: String,

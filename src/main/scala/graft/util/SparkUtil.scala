@@ -114,9 +114,9 @@ object SparkUtil {
     * under `outDir` — copies shifted in time and id (a longer history,
     * not pathological duplicates, except `documents`, which replicates
     * as EXACT copies on purpose: the worst case for MinHash LSH).
-    * Shared by Bench's stress10x section and Probe's standalone
-    * diagnosis so the two always measure the same dataset. */
-  def buildStress10x(spark: SparkSession, sfDir: String, outDir: String, mult: Int = 10): Unit = {
+    * Bench's stress10x section reads them. */
+  def buildStress10x(spark: SparkSession, sfDir: String, outDir: String): Unit = {
+    val mult = 10
     // events.ts normalizes through [[events]] into a ts_ns Long — shift
     // copies with integer math, then write back as TIMESTAMP_MICROS (the
     // current testdata shape, so the stressed run reads what production
@@ -156,12 +156,14 @@ object SparkUtil {
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
   }
 
-  /** A `local[cores]` session whose checkpoint I/O forks no processes.
+  /** The one session builder: a `local[cores]` session for the
+    * streaming jobs, the batch driver mains (`Verify`, `Bench`), the
+    * tests and `streambench`.
     *
-    * Without Hadoop's native library, the default checkpoint manager's
-    * `FileContext.rename` forks `readlink` several times per committed
-    * file (data file and `.crc`), and the local filesystem forks `chmod`
-    * for every file it creates. With a state-store delta per instance plus
+    * Its checkpoint I/O forks no processes. Without Hadoop's native
+    * library, the default checkpoint manager's `FileContext.rename` forks
+    * `readlink` several times per committed file (data file and `.crc`),
+    * and the local filesystem forks `chmod` for every file it creates. With a state-store delta per instance plus
     * offset- and commit-log entries on every trigger, that was over 2,000
     * processes in one 6 s streaming benchmark run. Here the checkpoint
     * manager is Spark's `FileSystem`-based one (same temp-file-and-rename
@@ -178,12 +180,17 @@ object SparkUtil {
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // registry-sized codegen class cache (see build.sbt): the default
-      // 100 entries churns in any session that runs many queries, and an
-      // evicted class's JIT profile dies with it
+      // Long-lived-session JIT hygiene (round-12 q55 variance root cause).
+      // The codegen class cache defaults to 100 entries; the query
+      // registry compiles ~900 distinct codegen units, so in a bench or
+      // production JVM every query's every run RE-COMPILED its generated
+      // classes (measured: 61 janino compiles per q55 rep under churn, 0
+      // standalone) and ran them cold. HotSpot profiles die with the
+      // evicted class, so the hottest fused kernels never reached C2 and
+      // the same plan read anywhere from 5 s to 55 s. Static conf, must
+      // be set before the session exists; sized to hold the whole
+      // registry with headroom.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[FileSystemBasedCheckpointFileManager].getName)

@@ -54,6 +54,16 @@ class CheckpointIoSpec extends SparkSpec {
       "a file: filesystem cached before the session would keep Hadoop's forking class")
   }
 
+  test("the shipped session carries the confs the batch driver mains rely on") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt == spark.sparkContext.defaultParallelism)
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+  }
+
   test("micro-batches of both streaming jobs spawn no processes") {
     val (price, moving, zout) = ("ckio-price", "ckio-moving", "ckio-zscore")
     Seq(price, moving, zout).foreach(FakeBroker.createTopic(_))
