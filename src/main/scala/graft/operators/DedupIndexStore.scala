@@ -33,7 +33,8 @@ import graft.functions.GraftFunctions
   *    avoided exchange is ~10^11 rows per probe; only the batch side
   *    (proportional to the day's ingest) moves.
   *
-  * The index is APPEND-ONLY maintainable ([[append]]/[[appendBucketed]]):
+  * The index is APPEND-ONLY maintainable ([[append]]; the bucketed
+  * tables grow only through [[compactTail]]'s fold of such a tail):
   * admitted batches add their band + shingle rows under their own
   * `ingest=<id>` partition — no rewrite of existing data, no
   * re-aggregation, no read-modify-write of any stored statistic, and a
@@ -225,40 +226,6 @@ object DedupIndexStore {
     metaDf(spark, k, numHashes, bands)
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${tableBase}_meta")
-  }
-
-  /** [[append]] for a [[buildBucketed]] index: appended rows land in
-    * their (band, band_hash) buckets as additional per-bucket files, so
-    * the probe join stays exchange-free after any number of appends.
-    * Unlike the path variant this is NOT retry-idempotent (catalog
-    * appends have no per-ingest partition to overwrite) — use the path
-    * layout when a replaying writer maintains the index. `ingestId`
-    * labels the appended rows' lineage (must be unique per append and
-    * not "base"); it is what [[compactTail]]'s fold detection and
-    * [[probeBucketedSigned]]'s excludeIngest key on. */
-  def appendBucketed(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      tableBase: String,
-      buckets: Int,
-      ingestId: String): Unit = {
-    require(ingestId.nonEmpty && ingestId != "base",
-      s"ingestId must be non-empty and not 'base': '$ingestId'")
-    val spark = batch.sparkSession
-    val meta = spark.table(s"${tableBase}_meta").head()
-    val (k, numHashes, bands) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    Dedup.bandedSignatures(batch, idCol, textCol, k, numHashes, bands)
-      .withColumn("ingest", lit(ingestId))
-      .write.mode("append")
-      .bucketBy(buckets, "band", "band_hash").sortBy("band", "band_hash")
-      .format("parquet").saveAsTable(s"${tableBase}_bands")
-    Dedup.shingleHashTable(batch, idCol, textCol, k, "doc_id")
-      .withColumnRenamed("sh_doc_id", "sh")
-      .withColumn("ingest", lit(ingestId))
-      .write.mode("append")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(s"${tableBase}_shingles")
   }
 
   /** Fold a path-layout ingest TAIL into a [[buildBucketed]] standing
@@ -517,8 +484,9 @@ object DedupIndexStore {
   }
 
   /** [[probe]] against a [[buildBucketed]] index — same output, corpus
-    * side exchange-free. */
-  def probeBucketed(
+    * side exchange-free. The specs' reference probe; the ingest loop
+    * probes pre-signed batches through [[probeBucketedSigned]]. */
+  private[graft] def probeBucketed(
       spark: SparkSession,
       batch: DataFrame,
       idCol: String,

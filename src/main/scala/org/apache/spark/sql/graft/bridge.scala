@@ -13,17 +13,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-
-  /** Drain the listener bus (private[spark]) — lets tests that meter
-    * driver-bound task-result bytes observe every event of the jobs they
-    * just ran before asserting. */
-  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty(30000)
 }

@@ -62,6 +62,10 @@ class CheckpointIoSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
     assert(spark.sparkContext.uiWebUrl.isEmpty)
+    // Spark's own optimizer: no session extension, no injected rule
+    assert(spark.experimental.extraOptimizations.isEmpty,
+      s"extra optimizer rules: ${spark.experimental.extraOptimizations}")
+    assert(spark.conf.getOption("spark.sql.extensions").isEmpty)
   }
 
   test("micro-batches of both streaming jobs spawn no processes") {

@@ -135,17 +135,24 @@ class DedupIndexSpec extends SparkSpec {
         k = 2, numHashes = 32, bands = 16, threshold = 0.2))
       assert(pairSet(probed) == direct)
 
-      // bucketed append: extra per-bucket files, probe still exact and
-      // the corpus side still exchange-free
+      // the ingest loop's maintenance path: rows appended to a path-layout
+      // tail and folded in by compactTail land as extra per-bucket files;
+      // the probe is still exact and the corpus side still exchange-free
       spark.sql("DROP TABLE IF EXISTS dedup_idx2_bands")
       spark.sql("DROP TABLE IF EXISTS dedup_idx2_shingles")
       spark.sql("DROP TABLE IF EXISTS dedup_idx2_meta")
       DedupIndexStore.buildBucketed(
         corpus.filter(col("doc_id") % 5 < 3), "doc_id", "text", "dedup_idx2", 8,
         k = 2, numHashes = 32, bands = 16)
-      DedupIndexStore.appendBucketed(
-        corpus.filter(col("doc_id") % 5 >= 3), "doc_id", "text", "dedup_idx2", 8,
-        ingestId = "a1")
+      val tail = java.nio.file.Files.createTempDirectory("dedup-idx2-tail").toString
+      DedupIndexStore.initEmpty(spark, tail, k = 2, numHashes = 32, bands = 16)
+      DedupIndexStore.append(
+        corpus.filter(col("doc_id") % 5 >= 3), "doc_id", "text", tail,
+        ingestId = "idx2_b0")
+      DedupIndexStore.compactTail(spark, "dedup_idx2", tail, 8)
+      assert(spark.table("dedup_idx2_bands")
+        .filter(col("ingest") === "idx2_b0").count() > 0,
+        "the tail's rows did not fold into the bucketed bands table")
       val probed2 = DedupIndexStore.probeBucketed(
         spark, batch, "doc_id", "text", "dedup_idx2", threshold = 0.2)
       val joins2 = probed2.queryExecution.executedPlan.collect {
@@ -161,7 +168,7 @@ class DedupIndexSpec extends SparkSpec {
       assert(bandSides2.nonEmpty)
       bandSides2.foreach { side =>
         assert(side.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-          s"appended bucketed corpus side shuffles:\n$side")
+          s"folded bucketed corpus side shuffles:\n$side")
       }
       assert(pairSet(probed2) == direct)
     } finally {

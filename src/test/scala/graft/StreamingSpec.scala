@@ -13,7 +13,8 @@ import graft.streaming.{MovingStatsJob, PriceAlerts, ZScoreJob}
 
 /** Structured Streaming behavior driven synchronously with MemoryStream:
   * update-mode emission, watermark late-data policy, the stream-stream
-  * equi-join, H1 foreachBatch re-nesting, and the bonus alert operator. */
+  * equi-join, H1 foreachBatch re-nesting, the bonus alert operator, and
+  * watermarked stream deduplication. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -508,6 +509,26 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       val first = spark.table("alerts_beyond").filter(col("price") === 100.0).collect()
       assert(first.length == 1 && first.head.getAs[Double]("seconds_until") == 20.0)
+    } finally q.stop()
+  }
+
+  test("streaming dropDuplicates with watermark: exact dedup on a stream") {
+    val in = MemoryStream[PriceTick](spark)
+    val dedup = in.toDF()
+      .withWatermark("event_time", "10 seconds")
+      .dropDuplicates("symbol", "price", "event_time")
+    val q = dedup.writeStream.format("memory").queryName("dd_out")
+      .outputMode("append").start()
+    try {
+      val t = Timestamp.valueOf("2024-01-01 00:00:05")
+      in.addData(PriceTick("BTC", 1.0, t), PriceTick("BTC", 1.0, t), PriceTick("BTC", 2.0, t))
+      q.processAllAvailable()
+      // duplicate within the batch collapsed
+      assert(spark.table("dd_out").count() == 2)
+      // duplicate arriving in a later batch (within watermark) also collapsed
+      in.addData(PriceTick("BTC", 1.0, t))
+      q.processAllAvailable()
+      assert(spark.table("dd_out").count() == 2)
     } finally q.stop()
   }
 }

@@ -217,13 +217,13 @@ class TimeSeriesSpec extends SparkSpec {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.resultSize)
     }
-    org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+    org.apache.spark.sql.graft.TestBridge.drainListenerBus(sc)
     sc.addSparkListener(listener)
     val out = try {
       // small resolveLimit forces at least one bucket-count round
       val r = TimeSeriesOps.exactMedian(df, "g", "v", "id",
         buckets = 64, resolveLimit = 8, materializeInput = true)
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      org.apache.spark.sql.graft.TestBridge.drainListenerBus(sc)
       assert(bytes.get() < (1L << 20),
         s"selection rounds moved ${bytes.get()} bytes of task results to " +
           "the driver — a per-group collect is back")
