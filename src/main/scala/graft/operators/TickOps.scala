@@ -278,9 +278,10 @@ object TickOps {
     * window END timestamp && same symbol (reference
     * zscore_calculator.py:103-118). Equality — not a range — on the time
     * key is intentional reference semantics: only ticks landing exactly on
-    * a slide boundary match. The stats side's other columns follow the
-    * tick's: window, avg_price and std_price for flat stats, the undecoded
-    * record body in [[graft.streaming.ZScoreJob]]. */
+    * a slide boundary match. The stats side's other columns (window,
+    * avg_price, std_price) follow the tick's. This is the batch path;
+    * [[graft.streaming.ZScoreJob]] pairs the same rows in one per-symbol
+    * stateful operator. */
   def joinTicksToStats(ticks: DataFrame, stats: DataFrame): DataFrame =
     ticks.alias("t").join(
       stats.alias("m"),

@@ -28,8 +28,7 @@ import graft.operators.TickOps
   *
   * The state schema changed with this operator: a checkpoint written by
   * the earlier per-window aggregation cannot be resumed. Start the job on
-  * a fresh checkpoint directory (and [[ZScoreJob]], whose join state now
-  * holds one row per moving record, too).
+  * a fresh checkpoint directory.
   */
 object MovingStatsJob {
 
@@ -160,12 +159,17 @@ object MovingStatsJob {
     }
   }
 
-  /** The moving topic's record: the window end as the reference's
-    * timestamp string, the symbol and the nested windows, as JSON. */
+  /** The moving topic's record. Its value is the reference's JSON: the
+    * window end as a timestamp string, the symbol and the nested windows.
+    * Its key is `<window end, epoch ms>|<symbol>` (null for a null symbol),
+    * so Kafka's partitioner puts every version of one (window end, symbol)
+    * in one partition, in publish order, and [[ZScoreJob]] reads the pair
+    * with string functions instead of decoding the value. */
   def nested(moving: DataFrame): DataFrame =
-    TickOps.toKafkaJson(
-      moving.withColumn("timestamp", col("window_timestamp").cast(StringType)),
-      Seq("timestamp", "symbol", "windows"))
+    moving.select(
+      concat(unix_millis(col("window_timestamp")).cast(StringType), lit("|"), col("symbol")).as("key"),
+      to_json(struct(col("window_timestamp").cast(StringType).as("timestamp"), col("symbol"),
+        col("windows"))).as("value"))
 
   def run(
       spark: SparkSession,

@@ -1,9 +1,13 @@
 package graft.streaming
 
+import java.sql.Timestamp
+
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType, StructType}
 
 import graft.model.Models
 import graft.operators.TickOps
@@ -12,51 +16,137 @@ import graft.operators.TickOps
   * per-(tick, window) z-scores → re-nested → `btc-price-zscore`
   * (reference src/Tranforms/zscore_calculator.py).
   *
-  * The join is a stream-stream inner equi-join on
+  * The reference's join is an inner equi-join on
   * (event_time == window end, symbol) — equality, not a range: only ticks
   * landing exactly on a 10 s slide boundary match, by reference design
-  * (SURVEY.md §2.7). Both sides carry a 10 s watermark, and the join
-  * evicts a row once the query watermark (the minimum of the two: newest
-  * tick − 10 s) passes its event time. That keeps about 10 s of ticks,
-  * but not 10 s of moving stats: a moving record's time is its window
-  * END, up to 1 h after its ticks, and the moving job re-emits an open
-  * window end on every batch that changes it. Every re-emitted version
-  * stays in the join state until the watermark passes that end, so the
-  * moving side holds up to an hour of re-emissions, one join row per
-  * moving record, and grows with the moving job's batch count.
+  * (SURVEY.md §2.7). Here it is one `flatMapGroupsWithState` per symbol
+  * over the union of those boundary ticks and the moving records. The
+  * moving job re-publishes an open window end on every batch that changes
+  * it; the operator keeps only the newest version of each window end (the
+  * highest Kafka offset: every version of a key lands in one partition)
+  * and the boundary ticks, and pairs a tick with its end's version when
+  * either arrives. The watermark is the reference's: newest tick − 10 s.
+  * Ends and ticks at or below it are evicted, and later input is dropped
+  * and counted in `numRowsDroppedByWatermark`.
   *
-  * The moving side is decoded in two steps. Before the join, only each
-  * record's key (timestamp, symbol) is parsed; the record body rides
-  * along undecoded. Only the records that matched a boundary tick, well
-  * under one in a hundred, have their `windows` decoded and exploded.
+  * A moving record is read from its key (`<window end, epoch ms>|<symbol>`,
+  * [[MovingStatsJob.nested]]) with string functions; the record body rides
+  * along undecoded, and only the emitted rows have their `windows` decoded
+  * and exploded. A record whose key is null or does not parse (one written
+  * before the moving job keyed its records) is dropped and counted in the
+  * observed metric `zscore_moving_keys.unkeyed_dropped`.
   */
 object ZScoreJob {
 
-  private val movingKeySchema = StructType(Models.movingStatsSchema.filter(_.name != "windows"))
   private val movingWindowsSchema = StructType(Models.movingStatsSchema.filter(_.name == "windows"))
 
-  /** The moving-stats topic's join key (window_timestamp, symbol) and the
-    * undecoded record `body` (reference zscore_calculator.py:74-82). A
-    * record whose timestamp does not parse has a null key, which the join
-    * drops: a null filter here would be pushed below the parse and run
-    * `from_json` twice per record. */
-  def parseMoving(raw: DataFrame): DataFrame =
+  /** One row of the operator's input: a boundary tick (no version), or a
+    * moving record, its Kafka offset as the version and its undecoded
+    * body. `event_time` is the tick's time or the record's window end. */
+  final case class Input(symbol: String, event_time: Timestamp, price: Option[Double],
+      version: Option[Long], body: Array[Byte])
+
+  /** A window end's newest version. */
+  final case class Version(end_ms: Long, offset: Long, body: Array[Byte])
+
+  /** A boundary tick waiting for newer versions of its window end. */
+  final case class Boundary(end_ms: Long, price: Option[Double])
+
+  /** A symbol's state: its window ends' newest versions and its boundary
+    * ticks, all above the watermark. */
+  final case class Held(versions: Seq[Version], ticks: Seq[Boundary])
+
+  /** A boundary tick paired with its window end's newest version. */
+  final case class Matched(event_time: Timestamp, symbol: String, price: Option[Double], body: Array[Byte])
+
+  /** The moving-stats topic's records as (event_time = window end, symbol,
+    * version = Kafka offset, undecoded body), read from the Kafka key
+    * (reference zscore_calculator.py:74-82). Records with a null or
+    * unparsable key are counted, then dropped. */
+  def parseMoving(raw: DataFrame): DataFrame = {
+    val key = col("key").cast(StringType)
+    val bar = instr(key, "|")
+    val endMs = when(bar > 0, substring_index(key, "|", 1).try_cast(LongType))
     raw
-      .select(col("value").cast(StringType).as("body"))
-      .select(from_json(col("body"), movingKeySchema).as("k"), col("body"))
-      .select(to_timestamp(col("k.timestamp")).as("window_timestamp"), col("k.symbol").as("symbol"),
-        col("body"))
+      .select(
+        timestamp_micros(try_multiply(endMs, lit(1000L))).as("event_time"),
+        key.substr(bar + 1, length(key)).as("symbol"),
+        col("offset").as("version"),
+        col("value").cast(BinaryType).as("body"))
+      .observe("zscore_moving_keys", count(when(col("event_time").isNull, true)).as("unkeyed_dropped"))
+      .filter(col("event_time").isNotNull)
+  }
 
   /** ticks ⋈ moving records → per-window z-score rows; shared by streaming
-    * and tests. The matched records' windows are decoded after the join
+    * and tests. Only ticks on the slide grid can equal a window end, so
+    * the others are dropped after the watermark has seen them. The emitted
+    * rows' windows are decoded after the operator
     * (reference zscore_calculator.py:84-97). */
   def zscores(ticks: DataFrame, moving: DataFrame): DataFrame = {
-    val joined = TickOps.joinTicksToStats(
-      ticks.withWatermark("event_time", "10 seconds"),
-      moving.withWatermark("window_timestamp", "10 seconds"))
-    TickOps.zscore(TickOps.flattenWindows(joined
-      .withColumn("windows", from_json(col("body"), movingWindowsSchema).getField("windows"))
+    val spark = ticks.sparkSession
+    import spark.implicits._
+    val slideUs = TickOps.uniformSlideMs(TickOps.defaultWindows) * 1000L
+    val boundary = ticks
+      .withWatermark("event_time", "10 seconds")
+      .filter(unix_micros(col("event_time")) % slideUs === 0)
+      .select(col("symbol"), col("event_time"), col("price"), lit(null).cast(LongType).as("version"),
+        lit(null).cast(BinaryType).as("body"))
+    val versions = moving.select(col("symbol"), col("event_time"), lit(null).cast(DoubleType).as("price"),
+      col("version"), col("body"))
+    val matched = boundary.union(versions)
+      .groupBy(col("symbol")).as[String, Input]
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(latest)
+      .toDF()
+    TickOps.zscore(TickOps.flattenWindows(matched
+      .withColumn("windows", from_json(col("body").cast(StringType), movingWindowsSchema).getField("windows"))
       .drop("body")))
+  }
+
+  /** Fold a symbol's rows into its state: per window end the version with
+    * the highest offset wins, and a version whose body equals the held one
+    * (a replayed moving batch) replaces it without emitting. Emit each
+    * arriving tick with its end's version, and each held tick whose end
+    * got a changed version. Then evict ends and ticks at or below the
+    * watermark; the event-time timeout wakes the symbol when the watermark
+    * reaches the earliest one left. */
+  private def latest(symbol: String, rows: Iterator[Input], state: GroupState[Held]): Iterator[Matched] = {
+    val held = state.getOption.getOrElse(Held(Nil, Nil))
+    val versions = mutable.HashMap.empty[Long, Version] ++ held.versions.iterator.map(v => v.end_ms -> v)
+    val incoming = mutable.HashMap.empty[Long, Version]
+    val arrived = mutable.ArrayBuffer.empty[Boundary]
+    rows.foreach { r =>
+      val end = r.event_time.getTime
+      r.version match {
+        case None => arrived += Boundary(end, r.price)
+        case Some(offset) =>
+          if (incoming.get(end).forall(_.offset < offset)) incoming(end) = Version(end, offset, r.body)
+      }
+    }
+    val changed = mutable.HashSet.empty[Long]
+    incoming.valuesIterator.foreach { v =>
+      val old = versions.get(v.end_ms)
+      if (old.forall(_.offset < v.offset)) {
+        if (!old.exists(o => java.util.Arrays.equals(o.body, v.body))) changed += v.end_ms
+        versions(v.end_ms) = v
+      }
+    }
+
+    def pair(t: Boundary, v: Version) = Matched(new Timestamp(t.end_ms), symbol, t.price, v.body)
+    val emitted = held.ticks.filter(t => changed(t.end_ms)).map(t => pair(t, versions(t.end_ms))) ++
+      arrived.flatMap(t => versions.get(t.end_ms).map(pair(t, _)))
+
+    val wm = state.getCurrentWatermarkMs()
+    val kept = Held(versions.valuesIterator.filter(_.end_ms > wm).toVector.sortBy(_.end_ms),
+      (held.ticks ++ arrived).filter(_.end_ms > wm))
+    if (kept.versions.isEmpty && kept.ticks.isEmpty) state.remove()
+    else {
+      state.update(kept)
+      // Spark times a state out once the watermark is strictly above its
+      // timestamp; a pre-1970 end is clamped to the smallest timeout it takes
+      val earliest = (kept.versions.iterator.map(_.end_ms) ++ kept.ticks.iterator.map(_.end_ms)).min
+      state.setTimeoutTimestamp(math.max(earliest - 1, 1L))
+    }
+    emitted.iterator
   }
 
   def nested(flat: DataFrame): DataFrame =

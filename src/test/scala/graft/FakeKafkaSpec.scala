@@ -271,6 +271,95 @@ class FakeKafkaSpec extends SparkSpec {
     once.foreach { case (k, v) => assert(restarted(k) == v, s"at $k") }
   }
 
+  /** Ticks of `symbols` at one per second, seconds [from, until) after
+    * 2024-01-01T00:00:00Z, as the producer publishes them. */
+  private def ticksJson(symbols: Seq[String], from: Int, until: Int): Seq[String] =
+    for (i <- from until until; sym <- symbols) yield {
+      val ts = java.time.Instant.ofEpochSecond(1704067200L + i)
+      s"""{"symbol":"$sym","price":${100.0 + (i * 37 % 11) * 0.25},"event_time":"$ts"}"""
+    }
+
+  private def startMoving(in: String, out: String, cp: String) =
+    MovingStatsJob.run(spark, "fake:9092", in, out, cp, MovingStatsJob.H1Mode.ForeachBatch,
+      format = "fakekafka", startingOffsets = "earliest", triggerInterval = "0 seconds")
+
+  private def startZScore(price: String, moving: String, out: String, cp: String) =
+    ZScoreJob.run(spark, "fake:9092", price, moving, out, cp, MovingStatsJob.H1Mode.ForeachBatch,
+      format = "fakekafka", startingOffsets = "earliest", triggerInterval = "0 seconds")
+
+  test("MovingStatsJob keys each record by its (window end, symbol), and every version of a key shares one partition") {
+    val (in, out) = ("fk-key-price", "fk-key-moving")
+    FakeBroker.createTopic(in); FakeBroker.createTopic(out)
+    val q = startMoving(in, out, ckpt())
+    try (0 until 3).foreach { c =>
+      publish(in, ticksJson(Seq("BTCUSDT", "ETHUSDT"), c * 10, c * 10 + 10))
+      q.processAllAvailable()
+    } finally q.stop()
+    import spark.implicits._
+    val recs = (0 until FakeBroker.numPartitions(out)).flatMap { p =>
+      FakeBroker.fetch(out, p, 0L, Long.MaxValue)
+        .map(r => (new String(r.key, "UTF-8"), new String(r.value, "UTF-8"), p))
+    }.toDF("key", "value", "partition")
+    val d = from_json(col("value"), Models.movingStatsSchema)
+    val expected = concat(unix_millis(to_timestamp(d.getField("timestamp"))).cast(StringType), lit("|"),
+      d.getField("symbol"))
+    assert(recs.count() > 0 && recs.filter(col("key") =!= expected).isEmpty,
+      recs.filter(col("key") =!= expected).take(3).mkString(", "))
+    val byKey = recs.groupBy("key").agg(count(lit(1)).as("versions"),
+      countDistinct(col("partition")).as("partitions"))
+    assert(byKey.filter(col("versions") > 1).count() > 0, "some key must have several versions")
+    assert(byKey.filter(col("partitions") =!= 1).isEmpty)
+  }
+
+  test("the z-score state holds one version per (window end, symbol) and does not grow with moving batches") {
+    // every moving batch re-publishes each open window end of each symbol;
+    // the z-score operator keeps only the newest version of each end
+    val (price, moving, zout) = ("fk-bound-price", "fk-bound-moving", "fk-bound-zscore")
+    Seq(price, moving, zout).foreach(FakeBroker.createTopic(_))
+    val zcp = ckpt()
+    val qm = startMoving(price, moving, ckpt())
+    val qz = startZScore(price, moving, zout, zcp)
+    val zBatches = scala.collection.mutable.ArrayBuffer.empty[Long]
+    try (0 until 20).foreach { c =>
+      publish(price, ticksJson(Seq("BTCUSDT", "ETHUSDT", "SOLUSDT"), c * 10, c * 10 + 10))
+      qm.processAllAvailable()
+      qz.processAllAvailable()
+      zBatches += qz.lastProgress.batchId
+    } finally { qm.stop(); qz.stop() }
+    assert(qz.lastProgress.stateOperators.map(_.numRowsTotal).sum == 3L, "one state row per symbol")
+    /** (versions held, distinct (end, symbol) held) after a z-score batch */
+    def held(batchId: Long): (Long, Long) = {
+      val v = spark.read.format("statestore").option("batchId", batchId).load(zcp)
+        .select(col("key"), explode(col("value.groupState.versions")).as("v"))
+      (v.count(), v.select(col("key"), col("v.end_ms")).distinct().count())
+    }
+    val (early, late) = (held(zBatches(1)), held(zBatches.last))
+    assert(early._1 > 0 && early._1 == early._2 && late._1 == late._2, s"$early, $late")
+    assert(late._1 <= early._1, s"state after batch 20: $late, after batch 2: $early")
+    val published = FakeBroker.latestOffsets(moving).sum
+    assert(published > 10 * late._1, s"$published moving records, ${late._1} held")
+  }
+
+  test("ZScoreJob drops and counts moving records with a null or unparsable key") {
+    // a MovingStatsJob from before the key writes the value alone
+    val (price, moving, zout) = ("fk-unkeyed-price", "fk-unkeyed-moving", "fk-unkeyed-zscore")
+    Seq(price, moving, zout).foreach(FakeBroker.createTopic(_))
+    val endMs = java.time.Instant.parse("2024-01-01T00:00:10Z").toEpochMilli
+    publish(price, Seq("""{"symbol":"BTCUSDT","price":110.0,"event_time":"2024-01-01T00:00:10Z"}"""))
+    def value(std: Double) =
+      s"""{"timestamp":"2024-01-01 00:00:10","symbol":"BTCUSDT","windows":[{"window":"30s","avg_price":100.0,"std_price":$std}]}"""
+    publish(moving, Seq(value(10.0)))
+    Seq("BTCUSDT", "x|BTCUSDT", endMs.toString).foreach(k => publish(moving, Seq(value(10.0)), key = k))
+    publish(moving, Seq(value(5.0)), key = s"$endMs|BTCUSDT")
+    val q = startZScore(price, moving, zout, ckpt())
+    try q.processAllAvailable() finally q.stop()
+    val dropped = q.recentProgress.toSeq.flatMap(p => Option(p.observedMetrics.get("zscore_moving_keys")))
+      .map(_.getAs[Long]("unkeyed_dropped")).sum
+    assert(dropped == 4L, s"dropped unkeyed records: $dropped")
+    val zs = topicValues(zout)
+    assert(zs.size == 1 && zs.head.contains(""""zscore_price":2.0"""), zs)
+  }
+
   test("maxOffsetsPerTrigger: backlog replays as bounded batches, split across partitions") {
     val in = "fk-throttle-in"
     FakeBroker.createTopic(in) // 3 partitions, 30 records each round-robin

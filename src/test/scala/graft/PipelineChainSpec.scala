@@ -10,10 +10,10 @@ import graft.streaming.{MovingStatsJob, ZScoreJob}
 
 /** EP1 → EP2 glued exactly like the reference glues them — through a
   * materialized topic (files standing in for Kafka): the moving-stats
-  * streaming job emits re-nested JSON records to the "topic", and the
-  * z-score streaming job independently consumes that topic, decodes it,
-  * and joins its own tick stream against it. Both stages run as real
-  * Structured Streaming queries. */
+  * streaming job emits keyed, re-nested JSON records to the "topic", and
+  * the z-score streaming job independently consumes that topic, reads
+  * each record's key, and pairs its own tick stream with it. Both stages
+  * run as real Structured Streaming queries. */
 class PipelineChainSpec extends SparkSpec {
   import spark.implicits._
 
@@ -28,7 +28,9 @@ class PipelineChainSpec extends SparkSpec {
     val ep1 = MovingStatsJob.statsStream(ep1In.toDF())
       .writeStream.outputMode("update")
       .foreachBatch { (b: DataFrame, id: Long) =>
-        val payload = MovingStatsJob.nested(b).as[String].collect()
+        // the batch id stands in for the Kafka offset: one batch holds
+        // one version of each (window end, symbol)
+        val payload = MovingStatsJob.nested(b).withColumn("offset", lit(id)).toJSON.collect()
         if (payload.nonEmpty)
           java.nio.file.Files.write(
             new java.io.File(topicDir, f"part-$id%05d.json").toPath,
@@ -45,7 +47,7 @@ class PipelineChainSpec extends SparkSpec {
     // EP2: independent query; tick stream ⋈ decoded topic stream
     val ep2Ticks = MemoryStream[graft.model.Models.PriceTick](spark)
     val moving = ZScoreJob.parseMoving(
-      spark.readStream.schema("value STRING").text(topicDir.getAbsolutePath))
+      spark.readStream.schema("key STRING, value STRING, offset LONG").json(topicDir.getAbsolutePath))
     val flat = ZScoreJob.zscores(ep2Ticks.toDF(), moving)
     val q2 = flat.writeStream.format("memory").queryName("chain_out")
       .outputMode("append").start()

@@ -192,6 +192,47 @@ class PlanShapeSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("the z-score query pairs in one flatMapGroupsWithState with no join and no moving-side JSON parse") {
+    // moving records are read from their key, so their JSON parse (the
+    // windows' decode) runs only above the operator, on the emitted rows
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import spark.implicits._
+    val ticksIn = MemoryStream[String](spark)
+    val movingIn = MemoryStream[(String, String, Long)](spark)
+    val q = graft.streaming.ZScoreJob.zscores(
+      graft.operators.TickOps.parseTicks(ticksIn.toDF()),
+      graft.streaming.ZScoreJob.parseMoving(movingIn.toDF().toDF("key", "value", "offset")))
+      .writeStream.format("memory").queryName("zscore_plan_shape").outputMode("append").start()
+    def parsesJson(p: SparkPlan) = p.exists(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs])))
+    try {
+      val endMs = java.time.Instant.parse("2024-01-01T00:00:10Z").toEpochMilli
+      ticksIn.addData(
+        """{"symbol":"BTC","price":1.0,"event_time":"2024-01-01T00:00:10Z"}""",
+        """{"symbol":"BTC","price":2.0,"event_time":"2024-01-01T00:00:37Z"}""")
+      movingIn.addData((s"$endMs|BTC",
+        """{"timestamp":"x","symbol":"BTC","windows":[{"window":"30s","avg_price":1.0,"std_price":0.0}]}""", 0L))
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val ops = plan.collect { case s: FlatMapGroupsWithStateExec => s }
+      assert(ops.length == 1, plan)
+      assert(!plan.exists(_.getClass.getSimpleName == "StreamingSymmetricHashJoinExec"), plan)
+      val union = ops.head.collectFirst { case e: ShuffleExchangeExec => e }.get
+        .collectFirst { case u: UnionExec => u }.get
+      assert(union.children.length == 2, union)
+      assert(!parsesJson(union.children(1)), union.children(1))
+      assert(parsesJson(plan), "the emitted rows' windows are decoded above the operator")
+      // the off-grid tick is filtered above the watermark, so it still
+      // moves the watermark, as every tick moved the join's
+      val maxSeen = q.recentProgress.toSeq.flatMap(p => Option(p.eventTime.get("max")))
+        .map(java.time.Instant.parse(_).toEpochMilli)
+      assert(maxSeen.maxOption.contains(endMs + 27000L), maxSeen)
+    } finally q.stop()
+  }
+
   test("q199 composes the whole ladder as ONE lazy plan with its Generate boundaries") {
     // VERDICT r16 item 4: the web→training-sequences ladder must stay a
     // single registered plan — no driver materialization between stages

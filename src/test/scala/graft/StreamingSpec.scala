@@ -12,9 +12,9 @@ import graft.operators.TickOps
 import graft.streaming.{MovingStatsJob, PriceAlerts, ZScoreJob}
 
 /** Structured Streaming behavior driven synchronously with MemoryStream:
-  * update-mode emission, watermark late-data policy, the stream-stream
-  * equi-join, H1 foreachBatch re-nesting, the bonus alert operator, and
-  * watermarked stream deduplication. */
+  * update-mode emission, watermark late-data policy, the z-score
+  * operator's equi-join semantics, H1 foreachBatch re-nesting, the bonus
+  * alert operator, and watermarked stream deduplication. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -272,58 +272,132 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-stream join + zscore: only boundary ticks match (J1 semantics)") {
+  /** A moving record as the moving job publishes it: its key, value and
+    * Kafka offset (the version). */
+  private def movingRec(t: String, offset: Long, windows: String): (String, String, Long) =
+    (s"${ts(t).getTime}|BTCUSDT", s"""{"timestamp":"$t","symbol":"BTCUSDT","windows":[$windows]}""", offset)
+
+  private def w30(avg: Double, std: Double): String =
+    s"""{"window":"30s","avg_price":$avg,"std_price":$std}"""
+
+  /** A z-score query over MemoryStreams of ticks and keyed moving records,
+    * into a memory table. */
+  private def zscoreQuery(name: String) = {
     val ticksIn = MemoryStream[PriceTick](spark)
-    val movingIn = MemoryStream[String](spark)
-    val moving = ZScoreJob.parseMoving(movingIn.toDF())
-    val flat = ZScoreJob.zscores(ticksIn.toDF(), moving)
-    val q = flat.writeStream
-      .format("memory").queryName("z_out").outputMode(OutputMode.Append).start()
+    val movingIn = MemoryStream[(String, String, Long)](spark)
+    val q = ZScoreJob.zscores(ticksIn.toDF(), ZScoreJob.parseMoving(movingIn.toDF().toDF("key", "value", "offset")))
+      .writeStream.format("memory").queryName(name).outputMode(OutputMode.Append).start()
+    (ticksIn, movingIn, q)
+  }
+
+  /** (tick ms, window, z) of z-score rows, sorted. */
+  private def zTriples(df: DataFrame): Seq[(Long, String, Double)] =
+    df.collect().toSeq.map(r =>
+      (r.getAs[Timestamp]("event_time").getTime, r.getAs[String]("window"), r.getAs[Double]("zscore_price"))).sorted
+
+  private def zRows(name: String): Seq[(Long, String, Double)] = zTriples(spark.table(name))
+
+  /** The batch path's (tick ms, window, z) for `ticks` against the
+    * moving record values `values`: explode, equi-join, z-score. */
+  private def batchZ(ticks: Seq[PriceTick], values: Seq[String]): Seq[(Long, String, Double)] = {
+    val stats = TickOps.explodeWindows(values.toDF("value")
+      .select(from_json(col("value"), graft.model.Models.movingStatsSchema).as("d")).select(col("d.*")))
+    zTriples(TickOps.zscore(TickOps.joinTicksToStats(ticks.toDF(), stats)))
+  }
+
+  test("z-score operator pairs only boundary ticks with their window end (J1 semantics)") {
+    val (ticksIn, movingIn, q) = zscoreQuery("z_out")
+    val ticks = Seq(
+      PriceTick("BTCUSDT", 110.0, ts("2024-01-01 00:00:10")), // on boundary
+      PriceTick("BTCUSDT", 123.0, ts("2024-01-01 00:00:13"))) // off boundary
+    val rec = movingRec("2024-01-01 00:00:10", 0L,
+      w30(100.0, 5.0) + """,{"window":"1m","avg_price":100.0,"std_price":0.0}""")
     try {
-      ticksIn.addData(
-        PriceTick("BTCUSDT", 110.0, ts("2024-01-01 00:00:10")), // on boundary
-        PriceTick("BTCUSDT", 123.0, ts("2024-01-01 00:00:13"))) // off boundary
-      movingIn.addData(
-        """{"timestamp":"2024-01-01 00:00:10","symbol":"BTCUSDT","windows":[
-          |{"window":"30s","avg_price":100.0,"std_price":5.0},
-          |{"window":"1m","avg_price":100.0,"std_price":0.0}]}""".stripMargin.replace("\n", ""))
+      ticksIn.addData(ticks: _*)
+      movingIn.addData(rec)
       q.processAllAvailable()
       val rows = spark.table("z_out").orderBy("window").collect()
       assert(rows.length == 2) // one per window entry, only the boundary tick
       assert(rows.map(_.getAs[Double]("zscore_price")).sorted.sameElements(Array(0.0, 2.0)))
       assert(rows.forall(_.getAs[Double]("price") == 110.0))
+      assert(zRows("z_out") == batchZ(ticks, Seq(rec._2)))
     } finally q.stop()
   }
 
   test("z-score join counts the late rows it drops in numRowsDroppedByWatermark") {
     // a tick and a moving row behind the 10 s watermark never reach the
-    // join; the join's own state operator reports them, so the job needs
-    // no counter of its own for late join rows
-    val ticksIn = MemoryStream[PriceTick](spark)
-    val movingIn = MemoryStream[String](spark)
-    val q = ZScoreJob.zscores(ticksIn.toDF(), ZScoreJob.parseMoving(movingIn.toDF()))
-      .writeStream.format("memory").queryName("z_late").outputMode(OutputMode.Append).start()
-    def moving(t: String): String =
-      s"""{"timestamp":"$t","symbol":"BTCUSDT","windows":[""" +
-        """{"window":"30s","avg_price":100.0,"std_price":5.0}]}"""
+    // per-symbol operator; its state operator reports them, so the job
+    // needs no counter of its own for late rows
+    val (ticksIn, movingIn, q) = zscoreQuery("z_late")
     try {
-      for (t <- Seq("2024-01-01 00:01:00", "2024-01-01 00:02:00")) {
+      for ((t, i) <- Seq("2024-01-01 00:01:00", "2024-01-01 00:02:00").zipWithIndex) {
         ticksIn.addData(PriceTick("BTCUSDT", 110.0, ts(t)))
-        movingIn.addData(moving(t))
+        movingIn.addData(movingRec(t, i.toLong, w30(100.0, 5.0)))
         q.processAllAvailable()
       }
       // the watermark is now 00:01:50: both rows at 00:00:30 are late
       ticksIn.addData(PriceTick("BTCUSDT", 120.0, ts("2024-01-01 00:00:30")))
-      movingIn.addData(moving("2024-01-01 00:00:30"))
+      movingIn.addData(movingRec("2024-01-01 00:00:30", 2L, w30(100.0, 5.0)))
       q.processAllAvailable()
-      val dropped = q.recentProgress.toSeq.flatMap(_.stateOperators)
-        .filter(_.operatorName == "symmetricHashJoin")
-        .map(_.numRowsDroppedByWatermark).sum
-      assert(dropped == 2L, s"late join rows counted: $dropped")
+      val ops = q.recentProgress.toSeq.flatMap(_.stateOperators)
+      assert(ops.nonEmpty && ops.forall(_.operatorName == "flatMapGroupsWithState"),
+        ops.map(_.operatorName).distinct)
+      val dropped = ops.map(_.numRowsDroppedByWatermark).sum
+      assert(dropped == 2L, s"late rows counted: $dropped")
       val emitted = spark.table("z_late").collect()
         .map(_.getAs[Timestamp]("event_time")).toSet
       assert(emitted == Set(ts("2024-01-01 00:01:00"), ts("2024-01-01 00:02:00")),
-        s"only the on-time rows may join: $emitted")
+        s"only the on-time rows may pair: $emitted")
+    } finally q.stop()
+  }
+
+  test("z-score operator: of two versions of one window end in one batch, the higher offset wins") {
+    val (ticksIn, movingIn, q) = zscoreQuery("z_versions")
+    val tick = PriceTick("BTCUSDT", 110.0, ts("2024-01-01 00:00:10"))
+    val newer = movingRec("2024-01-01 00:00:10", 5L, w30(100.0, 5.0))
+    try {
+      ticksIn.addData(tick)
+      movingIn.addData(newer, movingRec("2024-01-01 00:00:10", 3L, w30(100.0, 10.0)))
+      q.processAllAvailable()
+      assert(zRows("z_versions") == Seq((tick.event_time.getTime, "30s", 2.0)))
+      assert(zRows("z_versions") == batchZ(Seq(tick), Seq(newer._2)))
+    } finally q.stop()
+  }
+
+  test("z-score operator: a newer version after its boundary tick re-emits, a replayed one does not") {
+    val (ticksIn, movingIn, q) = zscoreQuery("z_newer")
+    val tick = PriceTick("BTCUSDT", 110.0, ts("2024-01-01 00:00:10"))
+    val (v1, v2) = (movingRec("2024-01-01 00:00:10", 1L, w30(100.0, 10.0)),
+      movingRec("2024-01-01 00:00:10", 2L, w30(100.0, 5.0)))
+    try {
+      ticksIn.addData(tick)
+      movingIn.addData(v1)
+      q.processAllAvailable()
+      assert(zRows("z_newer") == batchZ(Seq(tick), Seq(v1._2)))
+      movingIn.addData(v2)
+      q.processAllAvailable()
+      assert(zRows("z_newer") == (batchZ(Seq(tick), Seq(v1._2)) ++ batchZ(Seq(tick), Seq(v2._2))).sorted)
+      // the moving batch replayed after a crash: same body, higher offset
+      movingIn.addData(v2.copy(_3 = 3L))
+      q.processAllAvailable()
+      assert(zRows("z_newer").map(_._3) == Seq(1.0, 2.0))
+    } finally q.stop()
+  }
+
+  test("z-score operator: duplicate boundary ticks each get z-scores") {
+    val (ticksIn, movingIn, q) = zscoreQuery("z_dups")
+    val at = ts("2024-01-01 00:00:10")
+    val ticks = Seq(PriceTick("BTCUSDT", 110.0, at), PriceTick("BTCUSDT", 110.0, at),
+      PriceTick("BTCUSDT", 120.0, at))
+    val rec = movingRec("2024-01-01 00:00:10", 0L, w30(100.0, 5.0))
+    try {
+      ticksIn.addData(ticks.take(2): _*)
+      movingIn.addData(rec)
+      q.processAllAvailable()
+      ticksIn.addData(ticks.drop(2): _*) // a duplicate after its version
+      q.processAllAvailable()
+      assert(zRows("z_dups").map(_._3) == Seq(2.0, 2.0, 4.0))
+      assert(zRows("z_dups") == batchZ(ticks, Seq(rec._2)))
     } finally q.stop()
   }
 
@@ -334,7 +408,7 @@ class StreamingSpec extends SparkSpec {
     val q = flat.writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        seen ++= MovingStatsJob.nested(batch).as[String].collect()
+        seen ++= MovingStatsJob.nested(batch).select("value").as[String].collect()
         ()
       }
       .start()
