@@ -96,9 +96,6 @@ object HashKernels {
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Hamming distance between two 64-bit sketches. */
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
   private[graft] def splitmix64(x0: Long): Long = {
     var x = x0 + -7046029254386353131L // golden gamma
     x = (x ^ (x >>> 30)) * -4658895280553007687L

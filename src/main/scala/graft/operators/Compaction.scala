@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,10 +18,7 @@ object Compaction {
     * One shuffle on the key columns; the per-key window sorts only that
     * key's history, and keys are high-cardinality (users × types, doc
     * ids), so no low-cardinality funnel. At 100 TB the same plan holds —
-    * this is exactly the shape log-compacted stores run; if the history
-    * per key is huge, a pre-aggregation `max_by` pass (max over (ts, tie)
-    * struct) does it with map-side combine, which is what [[latestBy]]
-    * provides.
+    * this is exactly the shape log-compacted stores run.
     */
   def latestSnapshot(
       df: DataFrame,
@@ -33,27 +30,5 @@ object Compaction {
     df.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
-  }
-
-  /** The aggregation form: latest `valueCols` per key via a single
-    * max-of-struct — partial aggregation on the map side, so a key with a
-    * million versions ships one row per input partition, not a million.
-    * The struct's leading fields (ts, tie) define the order; comparison is
-    * lexicographic, which is exactly latest-wins with a deterministic tie.
-    * Prefer this over [[latestSnapshot]] when only a few columns are
-    * needed; the window form preserves every input column unchanged. */
-  def latestBy(
-      df: DataFrame,
-      keyCols: Seq[String],
-      tsCol: String,
-      tieCol: String,
-      valueCols: Seq[String]): DataFrame = {
-    val packed = struct(
-      (Seq(tsCol, tieCol) ++ valueCols).map(col): _*)
-    val latest = df.groupBy(keyCols.map(col): _*)
-      .agg(max(packed).as("_latest"))
-    val out: Seq[Column] = keyCols.map(col) ++
-      (Seq(tsCol, tieCol) ++ valueCols).map(c => col(s"_latest.$c").as(c))
-    latest.select(out: _*)
   }
 }

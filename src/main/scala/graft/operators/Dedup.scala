@@ -236,24 +236,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact n-gram Jaccard for a candidate pair set (id_a, id_b). */
-  def ngramJaccard(
-      pairs: DataFrame,
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3): DataFrame = {
-    val sh = docs
-      .select(col(idCol).as("jid"), TextOps.tokens(col(textCol)).as("jtoks"))
-      .select(col("jid"), shingles("jtoks", k).as("jsh"))
-    pairs
-      .join(sh.select(col("jid").as("id_a"), col("jsh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("jid").as("id_b"), col("jsh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
-  }
-
   /** Exact near-dup edges from a document-frequency-capped shared-shingle
     * inverted index: pairs sharing at least one "rare" k-shingle
     * (2 ≤ df ≤ maxDf), verified by exact Jaccard over the full distinct

@@ -415,28 +415,6 @@ object DedupIndexStore {
       .map(_.stripPrefix("ingest="))
   }
 
-  /** Metadata-cheap test for the folded-copy replay guard of
-    * [[graft.streaming.StreamOps.streamingIngestDedupBucketed]] (VERDICT
-    * r14 item 2): could rows with ingest lineage `id` stand in the
-    * bucketed table because a [[compactTail]] folded them there? TRUE when the tail's bands fold
-    * manifest names the id (a bare `b<N>` never parses as
-    * `<ns>_b<number>`, so [[writeManifest]]'s pruning keeps it FOREVER —
-    * the manifest is a reliable witness for exactly the bare-id case the
-    * guard exists for), or when the manifest is empty but the standing
-    * table records fold history (the re-seeded-tail corner: the tail
-    * path was recreated over a standing table with folds, so the empty
-    * manifest proves nothing and the caller must pay the lineage scan).
-    * One small-file read + at most one catalog lookup; never a scan. */
-  private[graft] def mayHoldFoldedIngest(
-      spark: SparkSession,
-      tailPath: String,
-      tableBase: String,
-      id: String): Boolean = {
-    val manifest = readManifest(spark, tailPath, "bands")
-    manifest.contains(id) ||
-      (manifest.isEmpty && hasFoldHistory(spark, s"${tableBase}_bands"))
-  }
-
   private def manifestPath(tailPath: String, table: String) =
     new org.apache.hadoop.fs.Path(s"$tailPath/_folded/$table.txt")
 

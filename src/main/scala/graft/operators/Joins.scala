@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Join utilities for the cluster-scale failure modes local tests never
@@ -136,25 +136,5 @@ object Joins {
         xxhash64(col(factKey)), words, numBits, numHashes))
       .join(dim.select(col(dimKey).as("__dim_key")),
         col(factKey) === col("__dim_key"), "left_semi")
-  }
-
-  /** Write both sides bucketed by the join key so subsequent joins are
-    * exchange-free (co-located). Returns the two table names registered in
-    * the session catalog. At 100 TB this converts every fact-fact join on
-    * the bucket key from a full shuffle into a local zip of bucket files.
-    */
-  def bucketize(
-      spark: SparkSession,
-      df: DataFrame,
-      tableName: String,
-      key: String,
-      buckets: Int): String = {
-    df.write
-      .mode("overwrite")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(tableName)
-    tableName
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing for a training-data pipeline: image/audio/
   * video payloads as opaque `binary` columns with typed metadata, and
-  * decode / feature-extract / resize / frame-sample stages as
+  * decode / feature-extract / frame-sample stages as
   * `mapPartitions` over typed rows.
   *
   * Codec status: 24-bit uncompressed BMP, PNG (JDK zlib inflate + all 5
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * WAV all decode FOR REAL — pure-JVM decoders whose statistics are
   * spec-pinned against hand-computed pixels/samples (MediaSpec), feeding
   * one shared [[rgbStats]] so lane semantics cannot drift between
-  * formats; [[resize]] really decodes, scales, and re-encodes them. MP4
+  * formats. MP4
   * containers parse FOR REAL too ([[Mp4Codec]]: full box-tree walk,
   * movie/track/media headers, stts/stsz sample tables → container
   * statistics and real per-frame timestamps); only the compressed
@@ -84,8 +84,7 @@ object Multimodal {
     pngFromRgb(w, h, filler(w * 3 * h, seed))
 
   /** Encode a flat top-down RGB pixel array as the stored-mode PNG
-    * described on [[pngBytes]] — also the re-encode stage of the real
-    * [[resize]] path. */
+    * described on [[pngBytes]]. */
   private[graft] def pngFromRgb(w: Int, h: Int, pix: Array[Byte]): Array[Byte] = {
     require(pix.length == w * 3 * h, s"pixel array ${pix.length} != ${w}x$h RGB")
     def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
@@ -1045,49 +1044,6 @@ object Multimodal {
       .orElse(pngDecodeRgb(payload))
       .orElse(gifDecodeRgb(payload))
       .orElse(JpegCodec.decodeRgb(payload))
-
-  /** Deterministic nearest-neighbor scale of a flat top-down RGB array:
-    * source pixel (x·sw ∕ w, y·sh ∕ h), integer floor — the standard
-    * sampling grid, reproducible across engines and layouts. */
-  private[graft] def scaleRgb(src: Array[Byte], sw: Int, sh: Int,
-      w: Int, h: Int): Array[Byte] = {
-    val out = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      val sy = (y.toLong * sh / h).toInt
-      var x = 0
-      while (x < w) {
-        val sx = (x.toLong * sw / w).toInt
-        val s = (sy * sw + sx) * 3
-        val d = (y * w + x) * 3
-        out(d) = src(s); out(d + 1) = src(s + 1); out(d + 2) = src(s + 2)
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  /** REAL resize for every decodable image (BMP/PNG/GIF/baseline JPEG):
-    * decode → nearest-neighbor scale → re-encode as stored-mode PNG,
-    * inside mapPartitions (the decoder-init-amortized shape). Images no
-    * real decoder accepts keep the metadata-only behavior — the honest
-    * fallback, never a fabricated payload; non-images pass through
-    * untouched. */
-  def resize(media: Dataset[MediaRow], w: Int, h: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        if (r.kind != "image") r
-        else decodeRgb(r.payload) match {
-          case Some((sw, sh, rgb)) =>
-            r.copy(payload = pngFromRgb(w, h, scaleRgb(rgb, sw, sh, w, h)),
-              width = w, height = h)
-          case None => r.copy(width = w, height = h)
-        }
-      }
-    }
-  }
 
   /** Feature table as a DataFrame (array<float> column) ready for the
     * Similarity/Dedup operators. */

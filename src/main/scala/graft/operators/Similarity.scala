@@ -492,18 +492,6 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** [[centroids]] re-assembled to one centroid vector per group (the
-    * library-facing shape; [[centroids]]' exploded form is the
-    * oracle-checkable one). Element order is restored by sorting the
-    * collected (pos, value) structs, not by relying on collect order. */
-  def centroidVectors(df: DataFrame, labelCol: Column, vecCol: Column): DataFrame =
-    centroids(df, labelCol, vecCol)
-      .groupBy(col("label"))
-      .agg(
-        expr("transform(array_sort(collect_list(struct(pos, c))), p -> p.c)")
-          .as("centroid"),
-        max(col("n")).as("n"))
-
   /** Greedy k-center (farthest-point / Gonzalez) coreset selection over
     * an embedding column, plus the nearest-center assignment of every
     * vector — the diversity-aware sample a curation pipeline draws when

@@ -430,9 +430,10 @@ object TextOps {
     * must line up across alternatives, so alternation works without a
     * quote backreference — and one linear pass over the markup beats
     * three; measured on the q191 chain). Stripping the opening tag
-    * before href extraction is how [[extractLinks]] honors the
-    * attribute: no opening tag, no href match — the anchor text and
-    * `</a>` left behind carry no extractable link. Naive by the markup
+    * before href extraction is how [[domainLinkEdges]] and
+    * [[extractLinksSql]] honor the attribute: no opening tag, no href
+    * match — the anchor text and `</a>` left behind carry no extractable
+    * link. Naive by the markup
     * chain's standing contract: the quoted alternatives match
     * `nofollow` as a SUBSTRING of the rel value (correct for the
     * multi-token `rel="nofollow noopener"` form; also matches a
@@ -442,26 +443,16 @@ object TextOps {
   val nofollowPattern = "(?i)<a\\s[^>]*rel\\s*=\\s*" +
     "(\"[^\"]*nofollow[^\"]*\"|'[^']*nofollow[^']*'|nofollow)[^>]*>"
 
-  /** All FOLLOWED anchor hrefs in raw markup, as an array: rel=nofollow
-    * anchors are stripped first (they are an explicit "pass no ranking
-    * mass / don't crawl" signal — a link graph that counts them
-    * misranks exactly the spam they were invented to demote), then the
-    * three quote-style extractions concatenate (grouped by quote style,
-    * NOT document order — edge counting is order-insensitive, and a
-    * positional merge would cost a sort for nothing). Pure codegen'd
-    * regexp chain, shuffle-free. A no-href anchor contributes nothing;
-    * an empty href="" contributes an empty string (classified away
-    * downstream). */
-  def extractLinks(markup: Column): Column = {
-    val m = regexp_replace(markup, lit(nofollowPattern), lit(""))
-    concat(
-      regexp_extract_all(m, lit(hrefDqPattern), lit(1)),
-      regexp_extract_all(m, lit(hrefSqPattern), lit(1)),
-      regexp_extract_all(m, lit(hrefUqPattern), lit(1)))
-  }
-
-  /** [[extractLinks]] as DuckDB SQL (lists concatenate with `||`;
-    * same nofollow pre-strip, 'g' flag = Java's replace-all default). */
+  /** All FOLLOWED anchor hrefs in raw markup, as a DuckDB SQL list —
+    * the extraction [[domainLinkEdges]] runs. rel=nofollow anchors are
+    * stripped first (they are an explicit "pass no ranking mass / don't
+    * crawl" signal — a link graph that counts them misranks exactly the
+    * spam they were invented to demote; 'g' flag = Java's replace-all
+    * default), then the three quote-style extractions concatenate with
+    * `||` (grouped by quote style, NOT document order — edge counting is
+    * order-insensitive, and a positional merge would cost a sort for
+    * nothing). A no-href anchor contributes nothing; an empty href=""
+    * contributes an empty string (classified away downstream). */
   def extractLinksSql(e: String): String = {
     val stripped =
       s"regexp_replace($e, '${nofollowPattern.replace("'", "''")}', '', 'g')"
@@ -487,7 +478,7 @@ object TextOps {
     * Space-only trim on both engines (the deterministic subset of the
     * HTML spec's URL whitespace stripping). Pure per-row CASE over
     * codegen'd regexes — mirrored by [[linkDomainSql]]. A NULL href
-    * (never produced by [[extractLinks]] — regexp_extract_all yields
+    * (never produced by the href extraction — regexp_extract_all yields
     * strings) falls through every predicate to the relative branch on
     * BOTH engines; callers feeding hrefs from another source should
     * null-filter first. */
@@ -540,7 +531,7 @@ object TextOps {
     * pages self-edge all their relative links. Quote-style precedence
     * is dq, sq, uq (each `regexp_extract` already takes its pattern's
     * FIRST match; cross-style document order would cost a positional
-    * parse — the extractLinks grouping trade). Only an absolute
+    * parse — the href extraction's grouping trade). Only an absolute
     * http(s) or protocol-relative base names a host; a relative base
     * (`/path/`), any other scheme, or no base tag → NULL (caller falls
     * back to the page's own domain). Per-row codegen'd regex CASE,
@@ -578,7 +569,7 @@ object TextOps {
     * edges — the link-structure half of web-corpus processing that
     * [[htmlText]]'s text extraction discards, and the input crawl
     * prioritization / spam scoring / PageRank-over-sites need.
-    * rel=nofollow anchors never become edges ([[extractLinks]]), and
+    * rel=nofollow anchors never become edges ([[nofollowPattern]]), and
     * relative links resolve against the page's `<base href>` domain
     * when one names a host ([[baseHrefDomain]]), else the page's own.
     *
@@ -626,8 +617,8 @@ object TextOps {
           .otherwise(col("m")).as("stripped")))).as("x"))
       .select(col("x.src_domain").as("src_domain"),
         col("x.base_domain").as("base_domain"),
-        // [[extractLinks]] over the pre-stripped attribute: the same
-        // three extractions, minus the per-style re-strip
+        // the three quote-style href extractions over the pre-stripped
+        // attribute, minus a per-style re-strip
         explode(concat(
           regexp_extract_all(col("x.stripped"), lit(hrefDqPattern), lit(1)),
           regexp_extract_all(col("x.stripped"), lit(hrefSqPattern), lit(1)),

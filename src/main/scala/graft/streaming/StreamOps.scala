@@ -32,155 +32,6 @@ object StreamOps {
       .digest(checkpointDir.getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
 
-  /** Fail LOUDLY on the one upgrade violation that is otherwise silent
-    * data loss (VERDICT r13 item 1): a maintaining stream from the
-    * PRE-NAMESPACE id era (bare `b<batchId>` ingest ids) upgraded with an
-    * IN-FLIGHT uncommitted batch, without the quiesced drain the contract
-    * requires. The replayed batch then fails to exclude its own old
-    * partition, self-matches every doc, admits nothing, and an idempotent
-    * sink overwrites the batch's output with zero rows.
-    *
-    * The violation's signature is unmistakable and cheap to test: a
-    * tail partition named exactly `ingest=b<replaying batchId>`
-    * whose doc_ids are a non-empty SUBSET of the replaying batch's own
-    * (the crashed attempt appended the admitted subset of this very
-    * batch). A genuinely FOREIGN bare-id partition — another
-    * incarnation's committed batch, different doc_ids — does not match
-    * the signature and passes through as ordinary corpus (auto-excluding
-    * it would reintroduce the cross-incarnation clobber the namespace
-    * exists to prevent; the clobber spec pins that). The coincidence this
-    * can false-positive on — a foreign `b<N>` partition holding exactly a
-    * subset of this batch's doc ids at this batch number — is precisely
-    * the state an operator must untangle by hand anyway.
-    *
-    * The in-flight bare-id rows have a second possible home (VERDICT r14
-    * item 2): a maintenance
-    * [[graft.operators.DedupIndexStore.compactTail]] that ran between
-    * the pre-upgrade crash and the upgraded restart has FOLDED the bare
-    * tail partition — with its lineage — into the standing bucketed
-    * table, so the tail directory check alone passes and the replay
-    * self-matches silently, exactly the loss mode this guard exists to
-    * catch (plausible wherever compaction runs on a cron). The guard
-    * therefore also tests the standing table's `ingest` lineage for
-    * `b<batchId>` with the same subset signature. Steady-state cost stays metadata-cheap: the fold
-    * manifest retains bare ids forever (they never parse as
-    * `<ns>_b<number>`, so pruning keeps them), so
-    * [[graft.operators.DedupIndexStore.mayHoldFoldedIngest]] — a
-    * small-file read + at most one catalog lookup — gates the one
-    * lineage scan, which is paid only when a bare `b<batchId>` fold
-    * demonstrably may exist. The one state that pays the scan WITHOUT a
-    * recorded fold is an empty manifest in front of a table with fold
-    * history (a recreated tail discarded its manifest — the absence
-    * proves nothing); that window lasts until the next
-    * [[graft.operators.DedupIndexStore.compactTail]] audit-bootstraps
-    * the manifest back to ground truth, and a healthy lifecycle never
-    * enters it (compaction deletes tail DIRS, never `_folded/`).
-    *
-    * Known costs of the folded-copy check, accepted until the bare-id
-    * era retires: (a) an index whose pre-namespace batches b0..bK were
-    * folded pays one lineage scan per batch number ≤ K per incarnation
-    * (the manifest keeps bare ids forever); (b) unlike the tail
-    * signature — which the next compaction retires — a folded lineage
-    * is PERMANENT, so the acknowledged false-positive coincidence (a
-    * fresh-checkpoint reprocess whose batch N ids superset a committed
-    * folded bare bN) would abort forever; the abort message therefore
-    * carries an explicit operator escape hatch — create the marker file
-    * `<tail>/_folded/guard_allow_b<N>` after verifying the folded rows
-    * are committed corpus. A marker, NOT a manifest edit: the fold
-    * manifest is compaction's bookkeeping (an audit would re-add the
-    * id, and deleting the only entry would leave the empty-manifest +
-    * fold-history state that re-triggers the scan anyway). CAVEAT
-    * (ADVICE r15): the marker lives under the tail's `_folded/`
-    * directory, so DELETING AND RE-SEEDING THE TAIL DISCARDS IT — the
-    * same re-seeded corner the manifest scaladoc covers. Because the
-    * folded lineage the marker excuses is permanent, an operator who
-    * recreates the tail path must re-create every `guard_allow_b<N>`
-    * marker along with it, or the permanent abort resumes on the next
-    * coinciding replay (the abort message says so). It stays tail-local
-    * by design: the standing table is shared across incarnations, and
-    * an allow decision is scoped to THIS tail's checkpoint lineage —
-    * parking it in a shared table property would leak one incarnation's
-    * verification to every future one.
-    *
-    * Steady-state cost: one directory-existence check and one manifest
-    * read per trigger; the partition is read (a
-    * pruned, partition-local scan) only when a bare `b<batchId>`
-    * directory or fold actually exists. */
-  private def guardBareIdReplay(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      idCol: String,
-      batchId: Long,
-      tailPath: String,
-      tableBase: String): Unit = {
-    def ownSubsetOf(part: DataFrame): Boolean = {
-      val own = batch.select(col(idCol).as("doc_id")).distinct()
-      val nonEmpty = part.limit(1).count() == 1
-      nonEmpty && part.join(own, Seq("doc_id"), "left_anti").limit(1).count() == 0
-    }
-    def abort(where: String, untangle: String): Nothing =
-      throw new IllegalStateException(
-        s"pre-namespace in-flight replay detected: $where holds a subset " +
-          s"of the replaying batch $batchId's own doc ids — this stream " +
-          "was upgraded across the bare-id -> namespaced-id format " +
-          "change with an UNCOMMITTED batch in flight. Admitting would " +
-          "self-match every doc and overwrite the batch with zero rows. " +
-          "Required upgrade path (quiesced drain): roll back to the " +
-          "pre-namespace build, restart the stream, stop it cleanly " +
-          "AFTER this batch commits, then upgrade — every bare-id " +
-          "partition is then ordinary corpus. " + untangle)
-    val bareId = s"b$batchId"
-    val bare = s"$tailPath/bands/ingest=$bareId"
-    val p = new org.apache.hadoop.fs.Path(bare)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) &&
-        ownSubsetOf(spark.read.parquet(bare).select(col("doc_id")).distinct()))
-      abort(s"index partition '$bare'",
-        "If this is instead a FOREIGN committed batch that happens to " +
-          "coincide (same batch number, subset doc ids), untangle by " +
-          "hand: verify the partition's provenance, then resume.")
-    // operator escape hatch for the permanent false-positive
-    // coincidence (see the class scaladoc): a verified legitimate
-    // reprocess opts this batch number out of the folded-copy check
-    // the manifest gate runs FIRST: the marker existence check is a
-    // filesystem RPC, and paying it only on the already-rare
-    // fold-may-exist path keeps the steady-state trigger cost at the
-    // manifest read alone (&& short-circuit, semantically identical)
-    lazy val allowed = fs.exists(new org.apache.hadoop.fs.Path(
-      s"$tailPath/_folded/guard_allow_$bareId"))
-    if (graft.operators.DedupIndexStore
-        .mayHoldFoldedIngest(spark, tailPath, tableBase, bareId) &&
-        !allowed) {
-      // the lineage scan reads through the session's relation cache —
-      // refresh so a fold committed since the last trigger is visible
-      // (metadata-only, and only ever paid on this already-rare path)
-      spark.catalog.refreshTable(s"${tableBase}_bands")
-      val folded = spark.table(s"${tableBase}_bands")
-        .filter(col("ingest") === bareId)
-        .select(col("doc_id")).distinct()
-      if (ownSubsetOf(folded))
-        // unlike the tail-directory signature (which the next
-        // compaction retires), a folded lineage is permanent — so the
-        // coincidence case (a fresh-checkpoint reprocess of data whose
-        // COMMITTED pre-namespace batch N was folded, with overlapping
-        // doc ids at the same batch number) needs an explicit operator
-        // escape hatch or it aborts forever
-        abort(s"standing table ${tableBase}_bands lineage " +
-          s"ingest='$bareId' (a compaction folded the crashed " +
-          "attempt's tail partition)",
-          "If this is instead a NEW incarnation legitimately " +
-            "reprocessing data whose pre-namespace batches were " +
-            s"committed, drained, and folded: verify the '$bareId' " +
-            "rows are committed corpus, then create the marker file " +
-            s"'$tailPath/_folded/guard_allow_$bareId' to opt this " +
-            "batch number out of the folded-copy check — the folded " +
-            "rows stay probe-able corpus either way. NOTE: the marker " +
-            "lives in the tail; if you later delete and re-seed the " +
-            "tail directory you must re-create it, or this abort " +
-            "resumes (the folded lineage it excuses is permanent).")
-    }
-  }
-
   /** The admission rule of [[streamingIngestDedupBucketed]] against one
     * path-layout index ([[graft.operators.DedupIndexStore.build]] plus
     * `append`s), for batch replays: within-batch canonicalize then
@@ -318,14 +169,7 @@ object StreamOps {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val ingestId = s"${ns}_b$batchId"
-        // the tail is where a pre-namespace writer's in-flight append
-        // would live; the standing table is where a between-incarnation
-        // compaction FOLDED it (lineage intact, directory gone) — both
-        // homes of the un-drained upgrade's self-match signature fail
-        // loudly (VERDICT r14 item 2)
-        guardBareIdReplay(spark, batch, idCol, batchId, tailPath, tableBase)
         val (admitted, signed) = admitBucketedSigned(
           batch, idCol, textCol, tableBase, tailPath, threshold, maxBucket,
           excludeIngests = Seq(ingestId), cache = true)

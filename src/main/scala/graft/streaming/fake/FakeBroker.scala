@@ -54,10 +54,6 @@ object FakeBroker {
 
   def listTopics(): Seq[String] = synchronized { topics.keys.toSeq }
 
-  def reset(): Unit = synchronized {
-    topics.clear(); roundRobin.clear(); committedByTopic.clear()
-  }
-
   private def logs(topic: String): Array[PartitionLog] =
     topics.getOrElse(topic, throw new NoSuchElementException(
       s"fakekafka: unknown topic '$topic' (createTopic first)"))

@@ -29,16 +29,6 @@ class CompactionSpec extends SparkSpec {
       (2L, "click", 50L, 6L, 9.0)))
   }
 
-  test("latestBy (agg form) agrees with latestSnapshot on the value columns") {
-    val viaWindow = Compaction.latestSnapshot(
-      log, Seq("user_id", "event_type"), "ts", "event_id")
-      .select("user_id", "event_type", "ts", "event_id", "value")
-    val viaAgg = Compaction.latestBy(
-      log, Seq("user_id", "event_type"), "ts", "event_id", Seq("value"))
-      .select("user_id", "event_type", "ts", "event_id", "value")
-    assert(viaAgg.except(viaWindow).isEmpty && viaWindow.except(viaAgg).isEmpty)
-  }
-
   test("latestSnapshot preserves non-key columns untouched") {
     val withExtra = log.withColumn("payload", concat(lit("p"), col("event_id")))
     val out = Compaction.latestSnapshot(

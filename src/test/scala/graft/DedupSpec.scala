@@ -172,15 +172,6 @@ class DedupSpec extends SparkSpec {
     assert(prop(1L) == 1L && prop(2L) == 1L)
   }
 
-  test("ngramJaccard: exact metric on candidate pairs") {
-    val cand = Seq((1L, 2L), (1L, 5L)).toDF("id_a", "id_b")
-    val out = Dedup.ngramJaccard(cand, corpus, "doc_id", "text", k = 3)
-      .select("id_a", "id_b", "jaccard")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(out((1L, 2L)) == 1.0)
-    assert(out((1L, 5L)) == 0.0)
-  }
-
   test("duplicateClusters: chains, blobs, and singleton pairs resolve to min-id components") {
     // component {1,2,3,4} as a pure chain (worst-case diameter),
     // component {10,11,12} as a triangle, component {20,21} as one edge

@@ -183,8 +183,6 @@ class EdgeCaseSpec extends SparkSpec {
       .toDF("user_id", "event_type", "ts", "event_id", "value")
     assert(Compaction.latestSnapshot(
       emptyLog, Seq("user_id", "event_type"), "ts", "event_id").count() == 0)
-    assert(Compaction.latestBy(
-      emptyLog, Seq("user_id", "event_type"), "ts", "event_id", Seq("value")).count() == 0)
 
     val emptyKeyed = Seq.empty[Tuple1[Long]].toDF("k")
     assert(Sampling.weightedHashSample(emptyKeyed, col("k"), lit(0.5)).count() == 0)

@@ -21,28 +21,6 @@ class JoinsSpec extends SparkSpec {
     assert(spread > 4)
   }
 
-  test("bucketized join plans without a shuffle exchange") {
-    val o = (1L to 1000L).map(k => (k, k % 7)).toDF("k", "ov")
-    val l = (1L to 3000L).map(i => (i % 1000 + 1, i)).toDF("k", "lv")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force a sort-merge plan (tiny test tables would broadcast) so the
-      // co-located-bucket property is what's actually exercised
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      Joins.bucketize(spark, o, "bkt_orders", "k", 8)
-      Joins.bucketize(spark, l, "bkt_lines", "k", 8)
-      val joined = spark.table("bkt_orders").join(spark.table("bkt_lines"), Seq("k"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
-      assert(joined.count() == 3000)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS bkt_orders")
-      spark.sql("DROP TABLE IF EXISTS bkt_lines")
-    }
-  }
-
   test("asofJoin: nearest preceding match, equal-ts inclusion, deterministic tie-break") {
     import spark.implicits._
     val clicks = Seq(

@@ -399,8 +399,7 @@ class MediaSpec extends SparkSpec {
     }
   }
 
-  test("resize really decodes, scales, and re-encodes decodable images") {
-    import spark.implicits._
+  test("decodeRgb: hand-built bottom-up BMP reads top-down; header-only JPEG refuses") {
     // the explicit-pixel 2×2 BMP from the decoder test: logical top row
     // (B,G,R) = (10,20,30),(40,50,60); bottom row black, white
     def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
@@ -411,48 +410,34 @@ class MediaSpec extends SparkSpec {
     val bmp = "BM".getBytes("US-ASCII") ++ le32(54 + 16) ++ le32(0) ++ le32(54) ++
       le32(40) ++ le32(2) ++ le32(2) ++ le16(1) ++ le16(24) ++
       le32(0) ++ Array.fill[Byte](54 - 34)(0) ++ pixels
-    val rows = Seq(
-      Multimodal.MediaRow(1L, "image", bmp, 2, 2, 0, 0L),
-      Multimodal.MediaRow(2L, "image", Multimodal.jpegBytes(8, 8, 32, 1L), 8, 8, 0, 0L),
-      Multimodal.MediaRow(3L, "audio", Multimodal.wavBytes(16000, 20, 3L), 0, 0, 16000, 10L))
-    val out = Multimodal.resize(spark.createDataset(rows), 4, 4)
-      .collect().map(r => r.media_id -> r).toMap
-    // BMP: really re-encoded — the payload is now a decodable 4×4 PNG
-    val r1 = out(1L)
-    assert(r1.width == 4 && r1.height == 4)
-    val (dw, dh, rgb) = Multimodal.pngDecodeRgb(r1.payload).get
-    assert(dw == 4 && dh == 4)
-    // nearest-neighbor doubling: dst (0,0) = src top-left = RGB (30,20,10)
-    assert((rgb(0) & 0xff, rgb(1) & 0xff, rgb(2) & 0xff) == ((30, 20, 10)))
-    // dst (3,3) = src bottom-right = white
-    val last = (4 * 3 + 3) * 3
-    assert((rgb(last) & 0xff, rgb(last + 1) & 0xff, rgb(last + 2) & 0xff) == ((255, 255, 255)))
-    // dst (1,1) still in the top-left source block
-    val mid = (4 * 1 + 1) * 3
-    assert((rgb(mid) & 0xff, rgb(mid + 1) & 0xff, rgb(mid + 2) & 0xff) == ((30, 20, 10)))
-    // JPEG (no real decoder): metadata-only fallback, payload untouched
-    val r2 = out(2L)
-    assert(r2.width == 4 && r2.payload.sameElements(Multimodal.jpegBytes(8, 8, 32, 1L)))
-    // audio passes through untouched
-    val r3 = out(3L)
-    assert(r3.sample_rate == 16000 &&
-      r3.payload.sameElements(Multimodal.wavBytes(16000, 20, 3L)))
+    val (w, h, rgb) = Multimodal.decodeRgb(bmp).get
+    assert(w == 2 && h == 2)
+    assert(rgb.map(_ & 0xff).toSeq == Seq(30, 20, 10, 60, 50, 40, 0, 0, 0, 255, 255, 255))
+    // the synthetic table's JPEG rows carry headers only: no decoder accepts them
+    assert(Multimodal.decodeRgb(Multimodal.jpegBytes(8, 8, 32, 1L)).isEmpty)
   }
 
-  test("resize round-trips through every real image decoder (BMP, PNG, GIF sources)") {
-    import spark.implicits._
-    val rows = Seq(
-      Multimodal.MediaRow(1L, "image",
-        Multimodal.bmpBytes(8, 8, ((8 * 3 + 3) / 4) * 4 * 8, 9L), 8, 8, 0, 0L),
-      Multimodal.MediaRow(2L, "image", Multimodal.pngBytes(8, 8, 0, 9L), 8, 8, 0, 0L),
-      Multimodal.MediaRow(3L, "image", Multimodal.gifBytes(8, 8, 0, 9L), 8, 8, 0, 0L))
-    val out = Multimodal.resize(spark.createDataset(rows), 3, 5)
-      .collect().map(r => r.media_id -> r).toMap
-    Seq(1L, 2L, 3L).foreach { id =>
-      val (dw, dh, _) = Multimodal.pngDecodeRgb(out(id).payload).get
-      assert(dw == 3 && dh == 5, s"media $id")
-      assert(out(id).width == 3 && out(id).height == 5)
+  test("decodeRgb reads every real image decoder's source (BMP, PNG, GIF)") {
+    // the generators' filler: byte j of seed 9 is (9·31 + 7j) mod 251
+    def f(j: Int): Int = (9 * 31 + j * 7) % 251
+    // BMP: bottom-up rows of 24 BGR bytes (8 px × 3, no padding)
+    val bmp = Multimodal.decodeRgb(Multimodal.bmpBytes(8, 8, 8 * 3 * 8, 9L)).get
+    val bmpWant = for (y <- 0 until 8; x <- 0 until 8; c <- 0 until 3)
+      yield f((7 - y) * 24 + x * 3 + (2 - c))
+    // PNG: the filler is the top-down RGB array itself
+    val png = Multimodal.decodeRgb(Multimodal.pngBytes(8, 8, 0, 9L)).get
+    val pngWant = (0 until 8 * 8 * 3).map(f)
+    // GIF: the filler is the palette index; entry i is (i, 2i, 31i) mod 256
+    val gif = Multimodal.decodeRgb(Multimodal.gifBytes(8, 8, 0, 9L)).get
+    val gifWant = (0 until 64).flatMap { p =>
+      val i = f(p)
+      Seq(i, (i * 2) % 256, (i * 31) % 256)
     }
+    Seq("bmp" -> (bmp, bmpWant), "png" -> (png, pngWant), "gif" -> (gif, gifWant))
+      .foreach { case (name, ((w, h, rgb), want)) =>
+        assert(w == 8 && h == 8, name)
+        assert(rgb.map(_ & 0xff).toSeq == want, name)
+      }
   }
 
   test("PNG encode/decode round-trips seeded random pixels, incl. multi-block stored streams") {
@@ -466,16 +451,6 @@ class MediaSpec extends SparkSpec {
       assert(dw == w && dh == h, s"${w}x$h dims")
       assert(got.sameElements(pix), s"${w}x$h pixels")
     }
-  }
-
-  test("scaleRgb: identity at the same size, block structure when doubling") {
-    val rnd = new scala.util.Random(7)
-    val pix = Array.fill[Byte](5 * 3 * 4)(rnd.nextInt(256).toByte)
-    assert(Multimodal.scaleRgb(pix, 5, 4, 5, 4).sameElements(pix))
-    val up = Multimodal.scaleRgb(pix, 5, 4, 10, 8)
-    // dst (2x, 2y) must equal src (x, y) under floor nearest-neighbor
-    for (y <- 0 until 4; x <- 0 until 5; c <- 0 until 3)
-      assert(up(((2 * y) * 10 + 2 * x) * 3 + c) == pix((y * 5 + x) * 3 + c))
   }
 
   test("WAV PCM decoder walks chunk lists with extra chunks before fmt/data") {

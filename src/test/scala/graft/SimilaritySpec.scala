@@ -32,7 +32,7 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("centroids: exact per-label element-wise means; vector form restores order") {
+  test("centroids: exact per-label element-wise means") {
     val df = Seq(
       (1, Array(1.0f, 3.0f)),
       (1, Array(3.0f, 5.0f)),
@@ -43,10 +43,6 @@ class SimilaritySpec extends SparkSpec {
     assert(got == Map(
       (1, 0) -> (2.0, 2L), (1, 1) -> (4.0, 2L),
       (2, 0) -> (-2.0, 1L), (2, 1) -> (0.5, 1L)))
-    val vecs = Similarity.centroidVectors(df, col("label"), col("embedding"))
-      .collect().map(r => r.getInt(0) -> (r.getSeq[Double](1), r.getLong(2))).toMap
-    assert(vecs(1)._1 == Seq(2.0, 4.0) && vecs(1)._2 == 2L)
-    assert(vecs(2)._1 == Seq(-2.0, 0.5) && vecs(2)._2 == 1L)
   }
 
   test("quantizeInt8: exact codes on known vectors, round-trip bound, zero-vector guard") {

@@ -372,177 +372,31 @@ class StreamingIngestDedupSpec extends SparkSpec {
     } finally dropIndex("sid_inc_idx")
   }
 
-  test("un-drained bare-id upgrade fails loudly; a foreign bare-id partition passes through") {
-    // VERDICT r13 item 1: upgrading a PRE-NAMESPACE maintaining stream
-    // with an in-flight uncommitted batch (no quiesced drain) used to
-    // self-match every doc, admit nothing, and idempotently overwrite the
-    // batch's output with zero rows — silent loss, documented but
-    // unenforced. The guard must abort the batch with the drain
-    // instruction instead, while a genuinely foreign bare-id partition
-    // (another incarnation's committed batch, different doc ids) stays
-    // ordinary corpus.
-    val data = Seq(
-      (1L, freshText),
-      (3L, corpusText + " phi"),
-      (5L, otherText))
-    def runStream(tableBase: String, tail: String): (Either[Throwable, Unit], Set[(Long, Long)]) = {
-      val in = MemoryStream[(Long, String)](spark)
-      val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val q = startIngest(in.toDF().toDF("doc_id", "text"), tableBase, tail, admitted)
-      val outcome =
-        try { in.addData(data: _*); q.processAllAvailable(); Right(()) }
-        catch { case e: Throwable => Left(e) }
-        finally q.stop()
-      (outcome, admitted.synchronized(admitted.toSet))
-    }
+  test("a foreign bare-id tail partition stays corpus and untouched") {
+    // a bare `b0` partition is not this stream's own batch 0 (its ingest
+    // ids carry the checkpoint namespace): doc 5 near-dups the partition's
+    // doc 50 and drops, doc 1 admits, and the partition stays in place
+    val tail = bucketedIndex("sid_foreign_idx")
     try {
-      // VIOLATION: the pre-namespace attempt appended its admitted subset
-      // to the tail under bare b0 and crashed before the commit; the
-      // operator upgrades without draining and the stream replays batch 0
-      val tailV = bucketedIndex("sid_bare_v_idx")
-      val first = StreamOps.admitBatchBucketed(
-        data.toDF("doc_id", "text"), "doc_id", "text", "sid_bare_v_idx", tailV,
-        threshold = 0.2)
-      assert(first.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 5L))
-      DedupIndexStore.append(first, "doc_id", "text", tailV, "b0")
-      val (outcomeV, admittedV) = runStream("sid_bare_v_idx", tailV)
-      val err = outcomeV.swap.getOrElse(fail(
-        "un-drained bare-id replay must fail the streaming query loudly"))
-      def messages(t: Throwable): Seq[String] =
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
-          .map(e => Option(e.getMessage).getOrElse(""))
-      assert(messages(err).exists(m =>
-        m.contains("quiesced") && m.contains("pre-namespace")),
-        s"failure must carry the drain instruction, got: ${messages(err)}")
-      assert(admittedV.isEmpty, s"no admission may land: $admittedV")
-      // the crashed attempt's partition is untouched — nothing overwrote
-      // it with zero rows; its docs remain probe-able corpus
-      val survivors = indexHits("sid_bare_v_idx", tailV, otherText + " extra")
-      assert(survivors == Set(5L),
-        s"the bare partition's rows must survive the abort: $survivors")
-
-      // FALSE-POSITIVE CONTROL: a foreign incarnation's committed bare b0
-      // with DIFFERENT doc ids — the stream must run clean, treat it as
-      // corpus (doc 5 near-dups foreign doc 50 and drops), admit doc 1
-      val tailF = bucketedIndex("sid_bare_f_idx")
       DedupIndexStore.append(
         Seq((50L, otherText + " legacy")).toDF("doc_id", "text"),
-        "doc_id", "text", tailF, "b0")
-      val (outcomeF, admittedF) = runStream("sid_bare_f_idx", tailF)
-      assert(outcomeF.isRight,
-        s"foreign bare-id partition must not trip the guard: $outcomeF")
-      assert(admittedF == Set((0L, 1L)),
-        s"foreign bare-id corpus must dedup normally: $admittedF")
-      assert(new java.io.File(s"$tailF/bands/ingest=b0").exists,
-        "the foreign partition must stay untouched")
-    } finally Seq("sid_bare_v_idx", "sid_bare_f_idx").foreach(dropIndex)
-  }
-
-  test("un-drained bare-id upgrade fails loudly when a compaction folded the tail (hybrid)") {
-    // VERDICT r14 item 2 / ADVICE r14: the bare-id guard's tail-directory
-    // check has a SECOND home to cover on the hybrid layout — a
-    // maintenance compactTail that ran between the pre-upgrade crash and
-    // the upgraded restart folds the bare in-flight partition into the
-    // STANDING bucketed table (lineage intact, tail directory gone). The
-    // tail-only guard then passed, the replay self-matched, and the
-    // idempotent sink overwrote the batch with zero rows — the exact
-    // silent-loss mode the guard exists to kill, plausible wherever
-    // compaction runs on a cron. The guard must find the folded copy
-    // through the fold manifest (bare ids never parse as <ns>_b<N>, so
-    // manifest pruning keeps them forever) and abort with the same drain
-    // instruction; a FOREIGN folded bare-id lineage (another
-    // incarnation's committed batch, different doc ids) must pass through
-    // as ordinary corpus.
-    val data = Seq(
-      (1L, freshText),
-      (3L, corpusText + " phi"),
-      (5L, otherText))
-    def messages(t: Throwable): Seq[String] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
-        .map(e => Option(e.getMessage).getOrElse(""))
-    def setupFolded(tag: String, bareRows: org.apache.spark.sql.DataFrame): String = {
-      val tail = java.nio.file.Files.createTempDirectory(s"graft_sid_fold_$tag").toString
-      DedupIndexStore.buildBucketed(
-        Seq((100L, corpusText)).toDF("doc_id", "text"),
-        "doc_id", "text", s"sidfold_${tag}_idx", 4, k = 2, numHashes = 32, bands = 16)
-      DedupIndexStore.initEmpty(spark, tail, k = 2, numHashes = 32, bands = 16)
-      DedupIndexStore.append(bareRows, "doc_id", "text", tail, "b0")
-      DedupIndexStore.compactTail(spark, s"sidfold_${tag}_idx", tail, 4)
-      assert(!new java.io.File(s"$tail/bands").exists,
-        "the fold must have cleared the tail (the guard's directory check passes)")
-      tail
-    }
-    def runStream(tag: String, tail: String): (Either[Throwable, Unit], Set[(Long, Long)]) = {
+        "doc_id", "text", tail, "b0")
       val in = MemoryStream[(Long, String)](spark)
       val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft_sid_fold_${tag}_ckpt").toFile
-      ckpt.deleteOnExit()
-      val q = StreamOps.streamingIngestDedupBucketed(
-        in.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        s"sidfold_${tag}_idx", tail, ckpt.getAbsolutePath,
-        (df, bid) => admitted.synchronized {
-          admitted ++= df.select("doc_id").collect().map(r => (bid, r.getLong(0)))
-        },
-        threshold = 0.2)
+      val q = startIngest(in.toDF().toDF("doc_id", "text"), "sid_foreign_idx", tail, admitted)
       val outcome =
-        try { in.addData(data: _*); q.processAllAvailable(); Right(()) }
-        catch { case e: Throwable => Left(e) }
+        try {
+          in.addData((1L, freshText), (3L, corpusText + " phi"), (5L, otherText))
+          q.processAllAvailable()
+          Right(())
+        } catch { case e: Throwable => Left(e) }
         finally q.stop()
-      (outcome, admitted.synchronized(admitted.toSet))
-    }
-    try {
-      // VIOLATION: the pre-namespace attempt appended its admitted subset
-      // of THIS data under bare b0, crashed before the commit, and a
-      // cron'd compaction folded the tail before the upgraded restart
-      val first = Seq((1L, freshText), (5L, otherText)).toDF("doc_id", "text")
-      val tailV = setupFolded("v", first)
-      val (outcomeV, admittedV) = runStream("v", tailV)
-      val err = outcomeV.swap.getOrElse(fail(
-        "un-drained bare-id replay against a FOLDED copy must fail loudly"))
-      assert(messages(err).exists(m =>
-        m.contains("quiesced") && m.contains("pre-namespace") &&
-          m.contains("compaction")),
-        s"failure must carry the drain instruction and name the fold, " +
-          s"got: ${messages(err)}")
-      assert(admittedV.isEmpty, s"no admission may land: $admittedV")
-      // the folded rows are untouched corpus — still probe-able
-      val survivors = DedupIndexStore.probeBucketed(
-        spark, Seq((9L, otherText + " extra")).toDF("doc_id", "text"),
-        "doc_id", "text", "sidfold_v_idx", threshold = 0.2)
-        .select("id_corpus").collect().map(_.getLong(0)).toSet
-      assert(survivors == Set(5L),
-        s"the folded rows must survive the abort: $survivors")
-      // ESCAPE HATCH: the folded lineage is permanent (no compaction
-      // retires it), so a verified legitimate reprocess opts the batch
-      // number out with the documented marker file - the re-run must
-      // then complete cleanly with ZERO admissions (the docs ARE corpus:
-      // correct reprocess semantics, loss only in the true violation)
-      assert(messages(err).exists(_.contains("guard_allow_b0")),
-        s"the folded-copy abort must name the escape hatch: ${messages(err)}")
-      new java.io.File(s"$tailV/_folded/guard_allow_b0").createNewFile()
-      val (outcomeV2, admittedV2) = runStream("v", tailV)
-      assert(outcomeV2.isRight,
-        s"the allow marker must unblock the stream: $outcomeV2")
-      assert(admittedV2.isEmpty,
-        s"reprocess over folded corpus must admit nothing: $admittedV2")
-
-      // FALSE-POSITIVE CONTROL: a foreign incarnation's committed bare b0
-      // folded into the standing table with DIFFERENT doc ids — the
-      // stream must run clean and treat the folded lineage as corpus
-      // (doc 5 near-dups foreign doc 50 and drops; doc 1 admits)
-      val tailF = setupFolded("f",
-        Seq((50L, otherText + " legacy")).toDF("doc_id", "text"))
-      val (outcomeF, admittedF) = runStream("f", tailF)
-      assert(outcomeF.isRight,
-        s"foreign folded bare-id lineage must not trip the guard: $outcomeF")
-      assert(admittedF == Set((0L, 1L)),
-        s"foreign folded lineage must dedup normally: $admittedF")
-    } finally {
-      Seq("v", "f").foreach(tag =>
-        Seq("bands", "shingles", "meta").foreach(t =>
-          spark.sql(s"DROP TABLE IF EXISTS sidfold_${tag}_idx_$t")))
-    }
+      assert(outcome.isRight, s"a foreign partition must not fail the stream: $outcome")
+      assert(admitted.synchronized(admitted.toSet) == Set((0L, 1L)),
+        s"foreign corpus must dedup normally: $admitted")
+      assert(new java.io.File(s"$tail/bands/ingest=b0").exists,
+        "the foreign partition must stay untouched")
+    } finally dropIndex("sid_foreign_idx")
   }
 
   test("admitBatch replays the admission rule deterministically in batch") {

@@ -9,12 +9,12 @@ import org.apache.spark.sql.streaming.OutputMode
 
 import graft.model.Models.PriceTick
 import graft.operators.TickOps
-import graft.streaming.{MovingStatsJob, PriceAlerts, ZScoreJob}
+import graft.streaming.{MovingStatsJob, ZScoreJob}
 
 /** Structured Streaming behavior driven synchronously with MemoryStream:
   * update-mode emission, watermark late-data policy, the z-score
-  * operator's equi-join semantics, H1 foreachBatch re-nesting, the bonus
-  * alert operator, and watermarked stream deduplication. */
+  * operator's equi-join semantics, H1 foreachBatch re-nesting, and
+  * watermarked stream deduplication. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -421,104 +421,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  /** Alerts of one direction over `batches`, one micro-batch each, on the
-    * session's state store or on `provider`; the sorted
-    * (price, seconds_until) pairs emitted so far, after each batch. */
-  private def alertsPerBatch(
-      direction: Int,
-      batches: Seq[Seq[PriceTick]],
-      provider: Option[String] = None): Seq[Seq[(Double, Double)]] = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    provider.foreach(spark.conf.set(key, _))
-    try {
-      val in = MemoryStream[PriceTick](spark)
-      implicit val s = spark
-      val name = s"alerts_${if (direction > 0) "higher" else "lower"}"
-      val q = PriceAlerts.alerts(
-          in.toDS().withWatermark("event_time", "10 seconds"), direction, horizonSec = 20.0)
-        .writeStream.format("memory").queryName(name).outputMode(OutputMode.Append).start()
-      try batches.map { b =>
-        in.addData(b: _*)
-        q.processAllAvailable()
-        spark.table(name).collect()
-          .map(r => (r.getAs[Double]("price"), r.getAs[Double]("seconds_until"))).toSeq.sorted
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  Seq(
-    "price alerts: time-until-higher/lower with horizon expiry" -> None,
-    "price alerts on RocksDB: time-until-higher/lower with horizon expiry" ->
-      Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-  ).foreach { case (name, provider) =>
-    test(name) {
-      val higher = alertsPerBatch(+1, Seq(
-        Seq(PriceTick("BTC", 100.0, ts("2024-01-01 00:00:00")),
-          PriceTick("BTC", 99.0, ts("2024-01-01 00:00:02")),
-          PriceTick("BTC", 101.0, ts("2024-01-01 00:00:05"))),
-        Seq(PriceTick("BTC", 50.0, ts("2024-01-01 00:01:00")))), provider)
-      // 100@t0 → first higher 101@t5 (5s); 99@t2 → 101@t5 (3s)
-      assert(higher.head == Seq((99.0, 3.0), (100.0, 5.0)))
-      // 101 has no higher successor: expires at horizon once time advances
-      assert(higher.last == Seq((99.0, 3.0), (100.0, 5.0), (101.0, 20.0)))
-
-      val lower = alertsPerBatch(-1, Seq(
-        Seq(PriceTick("BTC", 100.0, ts("2024-01-01 00:00:00")),
-          PriceTick("BTC", 101.0, ts("2024-01-01 00:00:02")),
-          PriceTick("BTC", 99.0, ts("2024-01-01 00:00:05"))),
-        Seq(PriceTick("BTC", 150.0, ts("2024-01-01 00:01:00")))), provider)
-      // 100@t0 → first lower 99@t5 (5s); 101@t2 → 99@t5 (3s)
-      assert(lower.head == Seq((100.0, 5.0), (101.0, 3.0)))
-      // 99 has no lower successor (150 is higher): expires at horizon
-      assert(lower.last == Seq((99.0, 20.0), (100.0, 5.0), (101.0, 3.0)))
-    }
-  }
-
-  test("price alerts: repeated re-arms across batches still expire exactly once") {
-    // each batch carries a monotonically falling price → nothing
-    // resolves, every batch re-arms the expiry timeout for the same key;
-    // then ETH advances the watermark far past every tick's horizon
-    val out = alertsPerBatch(+1,
-      (0 to 3).map(i => Seq(PriceTick("BTC", 100.0 - i, ts(f"2024-01-01 00:00:0$i")))) ++
-        Seq(Seq(PriceTick("ETH", 1.0, ts("2024-01-01 00:05:00"))),
-          Seq(PriceTick("ETH", 0.5, ts("2024-01-01 00:10:00")))))
-    // one horizon alert per BTC tick, no duplicates; ETH's 1.0 expires
-    // too once 0.5@10:00 moves the watermark past its horizon
-    assert(out.last == ((0 to 3).map(i => (100.0 - i, 20.0)) :+ (1.0, 20.0)).sorted)
-  }
-
-  test("price alerts: a direction other than ±1 or a non-positive horizon is rejected") {
-    implicit val s = spark
-    val ticks = MemoryStream[PriceTick](spark).toDS()
-    Seq((0, 20.0), (2, 20.0), (1, 0.0), (-1, -1.0)).foreach { case (direction, horizon) =>
-      intercept[IllegalArgumentException](PriceAlerts.alerts(ticks, direction, horizon))
-    }
-  }
-
-  test("price alerts: quiet key expires via timer when other keys advance the watermark") {
-    val in = MemoryStream[PriceTick](spark)
-    implicit val s = spark
-    val higher = PriceAlerts.alerts(
-      in.toDS().withWatermark("event_time", "10 seconds"), direction = +1, horizonSec = 20.0)
-    val q = higher.writeStream.format("memory").queryName("alerts_quiet")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(PriceTick("BTC", 100.0, ts("2024-01-01 00:00:00")))
-      q.processAllAvailable()
-      // BTC goes quiet; ETH traffic advances the watermark past 0:00:20+10s
-      in.addData(PriceTick("ETH", 1.0, ts("2024-01-01 00:01:00")))
-      q.processAllAvailable()
-      in.addData(PriceTick("ETH", 2.0, ts("2024-01-01 00:02:00")))
-      q.processAllAvailable()
-      val btc = spark.table("alerts_quiet").filter(col("symbol") === "BTC").collect()
-      assert(btc.length == 1 && btc.head.getAs[Double]("seconds_until") == 20.0)
-    } finally q.stop()
-  }
-
   test("stream-static enrichment join is stateless and broadcast") {
     import spark.implicits._
     val dim = Seq(("BTC", "crypto"), ("ETH", "crypto"), ("AAPL", "equity"))
@@ -564,25 +466,6 @@ class StreamingSpec extends SparkSpec {
       // first session covers both early ticks; the 90 s tick is its own
       assert(got("2024-01-01 00:00:00.0") == 2L)
       assert(got("2024-01-01 00:01:30.0") == 1L)
-    } finally q.stop()
-  }
-
-  test("price alerts: successor beyond horizon does not resolve, tick expires at horizon") {
-    val in = MemoryStream[PriceTick](spark)
-    implicit val s = spark
-    val higher = PriceAlerts.alerts(
-      in.toDS().withWatermark("event_time", "10 seconds"), direction = +1, horizonSec = 20.0)
-    val q = higher.writeStream.format("memory").queryName("alerts_beyond")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(
-        PriceTick("BTC", 100.0, ts("2024-01-01 00:00:00")),
-        PriceTick("BTC", 200.0, ts("2024-01-01 00:00:25"))) // higher but past horizon
-      q.processAllAvailable()
-      in.addData(PriceTick("BTC", 1.0, ts("2024-01-01 00:01:00"))) // advance watermark
-      q.processAllAvailable()
-      val first = spark.table("alerts_beyond").filter(col("price") === 100.0).collect()
-      assert(first.length == 1 && first.head.getAs[Double]("seconds_until") == 20.0)
     } finally q.stop()
   }
 

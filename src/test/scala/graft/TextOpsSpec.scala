@@ -126,8 +126,8 @@ class TextOpsSpec extends SparkSpec {
     val hs = Seq(a, b, c).toDF("text")
       .select(GraftFunctions.simhash64(TextOps.tokens(col("text"))).as("h"))
       .as[Long].collect()
-    assert(HashKernels.hamming64(hs(0), hs(1)) <= 12)
-    assert(HashKernels.hamming64(hs(0), hs(2)) > 12)
+    assert(java.lang.Long.bitCount(hs(0) ^ hs(1)) <= 12)
+    assert(java.lang.Long.bitCount(hs(0) ^ hs(2)) > 12)
   }
   private def extract(html: String): String = {
     import spark.implicits._
@@ -284,46 +284,57 @@ class TextOpsSpec extends SparkSpec {
     assert(run(TextOps.registrableDomain, "sub.example.co.uk.") == "example.co.uk")
   }
 
-  test("extractLinks: all three quote styles, multiple anchors, no-href anchors") {
+  /** [[TextOps.domainLinkEdges]] over one page per `(markup, edges)`
+    * case, page i at `https://p<i>.org/`: each page's edges must be the
+    * case's dst → n_links map, with "self" for the page's own domain. */
+  private def assertPageEdges(cases: (String, Map[String, Long])*): Unit = {
     import spark.implicits._
-    def links(m: String): Seq[String] =
-      Seq(m).toDF("m").select(TextOps.extractLinks(col("m")))
-        .as[Seq[String]].collect().head
-    assert(links("""<a href="https://x.com/a">a</a> <a href='b.html'>b</a>""")
-      .sorted == Seq("b.html", "https://x.com/a"))
-    // unquoted values terminate at whitespace or '>'
-    assert(links("<a href=/p/q.html>r</a>") == Seq("/p/q.html"))
-    assert(links("<a href=x.html class=y>r</a>") == Seq("x.html"))
-    // case-insensitive tag/attr; attributes before href are skipped
-    assert(links("""<A CLASS='k' HREF='/up'>u</A>""") == Seq("/up"))
-    // no-href anchors and non-anchor tags contribute nothing
-    assert(links("""<a name="x">t</a> <img src="i.png"> plain""") == Nil)
-    // empty href extracts as "" (classified away by linkDomain)
-    assert(links("""<a href="">e</a>""") == Seq(""))
-    // multiple dq anchors in one document all extract
-    assert(links("""<a href="1">x</a><a href="2">y</a>""") == Seq("1", "2"))
+    val pages = cases.map(_._1).zipWithIndex
+      .map { case (m, i) => (s"https://p$i.org/", m) }.toDF("url", "markup")
+    val got = TextOps.domainLinkEdges(pages, "markup", "url").collect()
+      .groupBy(_.getString(0)).map { case (src, rs) =>
+        src -> rs.map(r =>
+          (if (r.getString(1) == src) "self" else r.getString(1)) -> r.getLong(2)).toMap
+      }
+    cases.zipWithIndex.foreach { case ((m, want), i) =>
+      assert(got.getOrElse(s"p$i.org", Map.empty) == want, m)
+    }
   }
 
-  test("extractLinks: rel=nofollow anchors drop in every quote style") {
-    import spark.implicits._
-    def links(m: String): Seq[String] =
-      Seq(m).toDF("m").select(TextOps.extractLinks(col("m")))
-        .as[Seq[String]].collect().head
-    // all three rel quote styles, rel before or after href
-    assert(links("<a rel=nofollow href=/p/q.html>r</a>") == Nil)
-    assert(links("""<a rel='nofollow' href='/x'>r</a>""") == Nil)
-    assert(links("""<a rel="nofollow" href="/y">r</a>""") == Nil)
-    assert(links("""<a href="/z" rel="nofollow">r</a>""") == Nil)
-    // multi-token rel values still count as nofollow
-    assert(links("""<a rel="nofollow sponsored" href="/s">r</a>""") == Nil)
-    assert(links("""<a rel="noopener nofollow" href="/o">r</a>""") == Nil)
-    // a followed sibling anchor is untouched by the strip
-    assert(links(
-      """<a rel=nofollow href="/no">n</a><a href="/yes">y</a>""") ==
-      Seq("/yes"))
-    // rel values WITHOUT nofollow keep their href
-    assert(links("""<a rel="noopener" href="/ok">r</a>""") == Seq("/ok"))
-    assert(links("<a rel=author href=/a>r</a>") == Seq("/a"))
+  test("domainLinkEdges: all three href quote styles, multiple and no-href anchors") {
+    assertPageEdges(
+      """<a href="https://x.com/a">a</a> <a href='b.html'>b</a>""" ->
+        Map("x.com" -> 1L, "self" -> 1L),
+      // unquoted values terminate at whitespace or '>'
+      "<a href=https://u.com/p/q.html>r</a>" -> Map("u.com" -> 1L),
+      "<a href=//v.com class=y>r</a>" -> Map("v.com" -> 1L),
+      // case-insensitive tag/attr; attributes before href are skipped
+      """<A CLASS='k' HREF='https://up.com/'>u</A>""" -> Map("up.com" -> 1L),
+      // no-href anchors and non-anchor tags contribute nothing
+      """<a name="x">t</a> <img src="https://i.com/i.png"> plain""" -> Map.empty,
+      // an empty href extracts as "" and linkDomain classifies it away
+      """<a href="">e</a>""" -> Map.empty,
+      // multiple dq anchors in one document all extract
+      """<a href="1">x</a><a href="2">y</a><a href="https://two.com/">z</a>""" ->
+        Map("self" -> 2L, "two.com" -> 1L))
+  }
+
+  test("domainLinkEdges: rel=nofollow anchors drop in every quote style") {
+    assertPageEdges(
+      // all three rel quote styles, rel before or after href
+      "<a rel=nofollow href=https://a.com/q.html>r</a>" -> Map.empty,
+      """<a rel='nofollow' href='https://b.com/'>r</a>""" -> Map.empty,
+      """<a rel="nofollow" href="https://c.com/">r</a>""" -> Map.empty,
+      """<a href="https://d.com/" rel="nofollow">r</a>""" -> Map.empty,
+      // multi-token rel values still count as nofollow
+      """<a rel="nofollow sponsored" href="/s">r</a>""" -> Map.empty,
+      """<a rel="noopener nofollow" href="/o">r</a>""" -> Map.empty,
+      // a followed sibling anchor is untouched by the strip
+      """<a rel=nofollow href="https://no.com/">n</a><a href="https://yes.com/">y</a>""" ->
+        Map("yes.com" -> 1L),
+      // rel values WITHOUT nofollow keep their href
+      """<a rel="noopener" href="https://ok.com/">r</a>""" -> Map("ok.com" -> 1L),
+      "<a rel=author href=/a>r</a>" -> Map("self" -> 1L))
   }
 
   test("baseHrefDomain: first base tag's host, else null; relative bases ignored") {
