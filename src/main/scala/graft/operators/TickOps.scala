@@ -294,13 +294,12 @@ object TickOps {
 
   /** z = (price - avg) / std, forced to 0.0 when std is 0/null/NaN — the
     * guard runs *before* the division (reference zscore_calculator.py:124-133). */
+  def zscoreOf(price: Column, avg: Column, std: Column): Column =
+    when(std === 0.0 || std.isNull || isnan(std), lit(0.0)).otherwise((price - avg) / std)
+
+  /** [[zscoreOf]] of each row's price, avg_price and std_price, as zscore_price. */
   def zscore(joined: DataFrame): DataFrame =
-    joined.withColumn(
-      "zscore_price",
-      when(
-        col("std_price") === 0.0 || col("std_price").isNull || isnan(col("std_price")),
-        lit(0.0))
-        .otherwise((col("price") - col("avg_price")) / col("std_price")))
+    joined.withColumn("zscore_price", zscoreOf(col("price"), col("avg_price"), col("std_price")))
 
   /** Re-nest z-scores per (timestamp, symbol)
     * (reference zscore_calculator.py:145-155). */
@@ -312,9 +311,4 @@ object TickOps {
         col("event_time").cast(StringType).as("timestamp"),
         col("symbol"),
         col("zscores"))
-
-  /** JSON-encode a record for a Kafka sink
-    * (reference moving_statistic.py:116-118). */
-  def toKafkaJson(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(to_json(struct(cols.map(col): _*)).as("value"))
 }

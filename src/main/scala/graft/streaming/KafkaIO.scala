@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.Row
 
 /** Kafka source/sink builders with the reference's operational options
@@ -36,15 +38,25 @@ object KafkaIO {
       .option("failOnDataLoss", "false")
       .load()
 
-  /** The Kafka writer of both jobs: 5 s processing-time trigger, explicit
-    * checkpoint (reference moving_statistic.py:123-131). Each micro-batch
-    * is encoded to Kafka rows (a `value` column, optionally `key`) and
-    * appended to `topic` by a batch write inside `foreachBatch`, so
-    * `encode` may run batch-only operators such as the jobs' re-nesting
-    * aggregation (SURVEY.md §4 H1). Caller picks output mode. */
+  /** A pipeline topic's Kafka record for each row of `df`. Its value is
+    * the reference's JSON: `time` as a timestamp string named `timestamp`,
+    * the symbol and the `body` column. Its key is
+    * `<time, epoch ms>|<symbol>` (null for a null symbol), so Kafka's
+    * partitioner puts every record of one (time, symbol) in one partition,
+    * in publish order. */
+  def record(df: DataFrame, time: String, body: String): DataFrame =
+    df.select(
+      concat(unix_millis(col(time)).cast(StringType), lit("|"), col("symbol")).as("key"),
+      to_json(struct(col(time).cast(StringType).as("timestamp"), col("symbol"), col(body))).as("value"))
+
+  /** The Kafka writer of both jobs: Spark's streaming sink with a 5 s
+    * processing-time trigger and an explicit checkpoint (reference
+    * moving_statistic.py:123-131). `df` is already encoded to Kafka rows
+    * (a `value` column, optionally `key`). Delivery is at-least-once: a
+    * batch replayed after a crash is written again. Caller picks output
+    * mode. */
   def sink(
       df: DataFrame,
-      encode: DataFrame => DataFrame,
       brokers: String,
       topic: String,
       checkpointDir: String,
@@ -52,15 +64,10 @@ object KafkaIO {
       triggerInterval: String = "5 seconds",
       format: String = "kafka"): DataStreamWriter[Row] =
     df.writeStream
+      .format(format)
       .outputMode(outputMode)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerInterval))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        encode(batch).write
-          .mode("append") // DSv2 rejects the default ErrorIfExists
-          .format(format)
-          .option("kafka.bootstrap.servers", brokers)
-          .option("topic", topic)
-          .save()
-      }
+      .option("kafka.bootstrap.servers", brokers)
+      .option("topic", topic)
 }

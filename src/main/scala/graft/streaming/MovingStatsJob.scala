@@ -7,7 +7,6 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.sql.types.StringType
 
 import graft.model.Models.WindowStats
 import graft.operators.TickOps
@@ -32,7 +31,8 @@ import graft.operators.TickOps
   */
 object MovingStatsJob {
 
-  // Single-valued; kept, with both jobs' `mode` parameter, because streambench passes it positionally.
+  // Selects nothing (both jobs write through the streaming sink); kept, with both jobs' `mode`
+  // parameter, because streambench passes it positionally.
   sealed trait H1Mode
   object H1Mode {
     case object ForeachBatch extends H1Mode
@@ -159,17 +159,13 @@ object MovingStatsJob {
     }
   }
 
-  /** The moving topic's record. Its value is the reference's JSON: the
-    * window end as a timestamp string, the symbol and the nested windows.
-    * Its key is `<window end, epoch ms>|<symbol>` (null for a null symbol),
-    * so Kafka's partitioner puts every version of one (window end, symbol)
-    * in one partition, in publish order, and [[ZScoreJob]] reads the pair
-    * with string functions instead of decoding the value. */
-  def nested(moving: DataFrame): DataFrame =
-    moving.select(
-      concat(unix_millis(col("window_timestamp")).cast(StringType), lit("|"), col("symbol")).as("key"),
-      to_json(struct(col("window_timestamp").cast(StringType).as("timestamp"), col("symbol"),
-        col("windows"))).as("value"))
+  /** The moving topic's record ([[KafkaIO.record]]): the value holds the
+    * window end, the symbol and the nested windows; the key
+    * `<window end, epoch ms>|<symbol>` puts every version of one
+    * (window end, symbol) in one partition, in publish order, and
+    * [[ZScoreJob]] reads the pair with string functions instead of
+    * decoding the value. */
+  def nested(moving: DataFrame): DataFrame = KafkaIO.record(moving, "window_timestamp", "windows")
 
   def run(
       spark: SparkSession,
@@ -182,7 +178,7 @@ object MovingStatsJob {
       startingOffsets: String = "latest",
       triggerInterval: String = "5 seconds"): StreamingQuery = {
     val raw = KafkaIO.source(spark, brokers, inTopic, startingOffsets, format)
-    KafkaIO.sink(statsStream(raw), nested, brokers, outTopic, checkpointDir,
+    KafkaIO.sink(nested(statsStream(raw)), brokers, outTopic, checkpointDir,
       "update", triggerInterval, format).start()
   }
 }

@@ -13,8 +13,8 @@ import graft.model.Models
 import graft.operators.TickOps
 
 /** Streaming z-score job: `btc-price` ⋈ `btc-price-moving` →
-  * per-(tick, window) z-scores → re-nested → `btc-price-zscore`
-  * (reference src/Tranforms/zscore_calculator.py).
+  * one record of per-(tick, window) z-scores per (tick time, symbol) →
+  * `btc-price-zscore` (reference src/Tranforms/zscore_calculator.py).
   *
   * The reference's join is an inner equi-join on
   * (event_time == window end, symbol) — equality, not a range: only ticks
@@ -29,10 +29,18 @@ import graft.operators.TickOps
   * Ends and ticks at or below it are evicted, and later input is dropped
   * and counted in `numRowsDroppedByWatermark`.
   *
+  * The operator emits one row per (window end, symbol) it paired in a
+  * batch: the prices of the ticks and the version's body. That is the
+  * reference's second aggregation (zscore_calculator.py:145-155, the
+  * re-nest per (timestamp, symbol)) done by the operator itself, so what
+  * follows is one projection — decode the windows, z-score each
+  * (price, window) — and the JSON encode, written by Spark's streaming
+  * sink (SURVEY.md §4 H1).
+  *
   * A moving record is read from its key (`<window end, epoch ms>|<symbol>`,
   * [[MovingStatsJob.nested]]) with string functions; the record body rides
-  * along undecoded, and only the emitted rows have their `windows` decoded
-  * and exploded. A record whose key is null or does not parse (one written
+  * along undecoded, and only the emitted rows have their `windows`
+  * decoded. A record whose key is null or does not parse (one written
   * before the moving job keyed its records) is dropped and counted in the
   * observed metric `zscore_moving_keys.unkeyed_dropped`.
   */
@@ -56,8 +64,10 @@ object ZScoreJob {
     * ticks, all above the watermark. */
   final case class Held(versions: Seq[Version], ticks: Seq[Boundary])
 
-  /** A boundary tick paired with its window end's newest version. */
-  final case class Matched(event_time: Timestamp, symbol: String, price: Option[Double], body: Array[Byte])
+  /** The prices of a window end's boundary ticks, paired with the end's
+    * newest version. */
+  final case class Paired(event_time: Timestamp, symbol: String, prices: Seq[Option[Double]],
+      body: Array[Byte])
 
   /** The moving-stats topic's records as (event_time = window end, symbol,
     * version = Kafka offset, undecoded body), read from the Kafka key
@@ -77,11 +87,14 @@ object ZScoreJob {
       .filter(col("event_time").isNotNull)
   }
 
-  /** ticks ⋈ moving records → per-window z-score rows; shared by streaming
-    * and tests. Only ticks on the slide grid can equal a window end, so
-    * the others are dropped after the watermark has seen them. The emitted
-    * rows' windows are decoded after the operator
-    * (reference zscore_calculator.py:84-97). */
+  /** ticks ⋈ moving records → the z-score topic's columns: event_time,
+    * symbol and `zscores`, every (window, price) pair's
+    * (window, zscore_price); shared by streaming and tests. Only ticks on
+    * the slide grid can equal a window end, so the others are dropped
+    * after the watermark has seen them. The emitted rows' windows are
+    * decoded after the operator (reference zscore_calculator.py:84-133);
+    * a body without windows, which the moving job never writes, gives a
+    * row without entries. */
   def zscores(ticks: DataFrame, moving: DataFrame): DataFrame = {
     val spark = ticks.sparkSession
     import spark.implicits._
@@ -93,23 +106,27 @@ object ZScoreJob {
         lit(null).cast(BinaryType).as("body"))
     val versions = moving.select(col("symbol"), col("event_time"), lit(null).cast(DoubleType).as("price"),
       col("version"), col("body"))
-    val matched = boundary.union(versions)
+    // windows outermost: the optimizer inlines a decode referenced inside
+    // a lambda, which would parse the body once per price
+    val windows = from_json(col("body").cast(StringType), movingWindowsSchema).getField("windows")
+    boundary.union(versions)
       .groupBy(col("symbol")).as[String, Input]
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(latest)
-      .toDF()
-    TickOps.zscore(TickOps.flattenWindows(matched
-      .withColumn("windows", from_json(col("body").cast(StringType), movingWindowsSchema).getField("windows"))
-      .drop("body")))
+      .select(col("event_time"), col("symbol"),
+        flatten(transform(windows, w => transform(col("prices"), p => struct(
+          w.getField("window").as("window"),
+          TickOps.zscoreOf(p, w.getField("avg_price"), w.getField("std_price")).as("zscore_price")))))
+          .as("zscores"))
   }
 
   /** Fold a symbol's rows into its state: per window end the version with
     * the highest offset wins, and a version whose body equals the held one
-    * (a replayed moving batch) replaces it without emitting. Emit each
+    * (a replayed moving batch) replaces it without emitting. Pair each
     * arriving tick with its end's version, and each held tick whose end
-    * got a changed version. Then evict ends and ticks at or below the
-    * watermark; the event-time timeout wakes the symbol when the watermark
-    * reaches the earliest one left. */
-  private def latest(symbol: String, rows: Iterator[Input], state: GroupState[Held]): Iterator[Matched] = {
+    * got a changed version, and emit one row per end paired. Then evict
+    * ends and ticks at or below the watermark; the event-time timeout
+    * wakes the symbol when the watermark reaches the earliest one left. */
+  private def latest(symbol: String, rows: Iterator[Input], state: GroupState[Held]): Iterator[Paired] = {
     val held = state.getOption.getOrElse(Held(Nil, Nil))
     val versions = mutable.HashMap.empty[Long, Version] ++ held.versions.iterator.map(v => v.end_ms -> v)
     val incoming = mutable.HashMap.empty[Long, Version]
@@ -131,9 +148,9 @@ object ZScoreJob {
       }
     }
 
-    def pair(t: Boundary, v: Version) = Matched(new Timestamp(t.end_ms), symbol, t.price, v.body)
-    val emitted = held.ticks.filter(t => changed(t.end_ms)).map(t => pair(t, versions(t.end_ms))) ++
-      arrived.flatMap(t => versions.get(t.end_ms).map(pair(t, _)))
+    val paired = held.ticks.filter(t => changed(t.end_ms)) ++ arrived.filter(t => versions.contains(t.end_ms))
+    val emitted = paired.groupBy(_.end_ms)
+      .map { case (end, ts) => Paired(new Timestamp(end), symbol, ts.map(_.price), versions(end).body) }
 
     val wm = state.getCurrentWatermarkMs()
     val kept = Held(versions.valuesIterator.filter(_.end_ms > wm).toVector.sortBy(_.end_ms),
@@ -149,8 +166,10 @@ object ZScoreJob {
     emitted.iterator
   }
 
-  def nested(flat: DataFrame): DataFrame =
-    TickOps.toKafkaJson(TickOps.nestZScores(flat), Seq("timestamp", "symbol", "zscores"))
+  /** The z-score topic's record ([[KafkaIO.record]]): the value holds the
+    * tick time, the symbol and the z-scores; the key is
+    * `<tick time, epoch ms>|<symbol>`. */
+  def nested(zscores: DataFrame): DataFrame = KafkaIO.record(zscores, "event_time", "zscores")
 
   def run(
       spark: SparkSession,
@@ -167,7 +186,7 @@ object ZScoreJob {
       KafkaIO.source(spark, brokers, priceTopic, startingOffsets, format))
     val moving = parseMoving(
       KafkaIO.source(spark, brokers, movingTopic, startingOffsets, format))
-    KafkaIO.sink(zscores(ticks, moving), nested, brokers, outTopic, checkpointDir,
+    KafkaIO.sink(nested(zscores(ticks, moving)), brokers, outTopic, checkpointDir,
       "append", triggerInterval, format).start()
   }
 }

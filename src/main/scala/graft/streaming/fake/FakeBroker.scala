@@ -38,7 +38,6 @@ object FakeBroker {
 
   private val topics = mutable.LinkedHashMap[String, Array[PartitionLog]]()
   private val roundRobin = mutable.HashMap[String, Int]()
-  private val committedByTopic = mutable.HashMap[String, Array[Long]]()
 
   /** Reference default: 3 partitions, RF 1 (setup_transform.py:83-131).
     * Idempotent, like `kafka-topics --create --if-not-exists`. */
@@ -49,7 +48,7 @@ object FakeBroker {
   }
 
   def deleteTopic(topic: String): Unit = synchronized {
-    topics.remove(topic); roundRobin.remove(topic); committedByTopic.remove(topic)
+    topics.remove(topic); roundRobin.remove(topic)
   }
 
   def listTopics(): Seq[String] = synchronized { topics.keys.toSeq }
@@ -114,15 +113,4 @@ object FakeBroker {
       log.records.remove(0, drop)
       log.startOffset = ns
     }
-
-  /** Offsets acknowledged by the streaming engine's `commit` callback —
-    * observability only (Spark checkpoints its own offsets; this lets
-    * specs assert the engine really advanced). */
-  def recordCommit(topic: String, offsets: Array[Long]): Unit = synchronized {
-    committedByTopic(topic) = offsets.clone()
-  }
-
-  def committed(topic: String): Option[Array[Long]] = synchronized {
-    committedByTopic.get(topic).map(_.clone())
-  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
@@ -74,7 +74,6 @@ private[fake] class FakeKafkaTable extends Table with SupportsRead with Supports
   override def capabilities(): util.Set[TableCapability] = util.EnumSet.of(
     TableCapability.MICRO_BATCH_READ,
     TableCapability.STREAMING_WRITE,
-    TableCapability.BATCH_WRITE,
     // like the real Kafka sink: input frames carry (key, value[, ...]) in
     // STRING or BINARY, not the source's 7-column read schema — the write
     // builder validates shape itself
@@ -90,8 +89,7 @@ private[fake] class FakeKafkaTable extends Table with SupportsRead with Supports
         val starting = Option(options.get("startingOffsets")).getOrElse("latest")
         // Kafka's default is fail-fast on unretained offsets
         val failOnDataLoss = Option(options.get("failOnDataLoss")).forall(_.toBoolean)
-        val maxPerTrigger = Option(options.get("maxOffsetsPerTrigger")).map(_.toLong)
-        new FakeKafkaStream(topic, starting, failOnDataLoss, maxPerTrigger)
+        new FakeKafkaStream(topic, starting, failOnDataLoss)
       }
     }
 
@@ -108,7 +106,6 @@ private[fake] class FakeKafkaTable extends Table with SupportsRead with Supports
     new WriteBuilder with org.apache.spark.sql.internal.connector.SupportsStreamingUpdateAsAppend {
       override def build(): Write = new Write {
         override def toStreaming: StreamingWrite = new FakeKafkaWrite(topic, schema)
-        override def toBatch: BatchWrite = new FakeKafkaWrite(topic, schema)
       }
     }
   }
@@ -116,21 +113,9 @@ private[fake] class FakeKafkaTable extends Table with SupportsRead with Supports
 
 /** One micro-batch stream over a subscribed topic. Partition count is
   * fixed at topic creation (no dynamic partition discovery — the
-  * reference's topics are static 3-partition, setup_transform.py:92).
-  *
-  * Admission control: `maxOffsetsPerTrigger` (the Kafka source's
-  * backfill-throttling knob) bounds each micro-batch to N records,
-  * split across partitions proportionally to their backlog — a month of
-  * retained history replays as bounded batches instead of one giant
-  * first batch, which is what keeps state-store commits and shuffle
-  * spills flat during catch-up. */
-private[fake] class FakeKafkaStream(
-    topic: String, startingOffsets: String, failOnDataLoss: Boolean,
-    maxPerTrigger: Option[Long] = None)
-  extends MicroBatchStream
-  with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-
-  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
+  * reference's topics are static 3-partition, setup_transform.py:92). */
+private[fake] class FakeKafkaStream(topic: String, startingOffsets: String, failOnDataLoss: Boolean)
+  extends MicroBatchStream {
 
   override def initialOffset(): Offset = startingOffsets.toLowerCase match {
     case "earliest" => FakeKafkaOffset(FakeBroker.earliestOffsets(topic))
@@ -140,45 +125,6 @@ private[fake] class FakeKafkaStream(
   }
 
   override def latestOffset(): Offset = FakeKafkaOffset(FakeBroker.latestOffsets(topic))
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxPerTrigger.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
-
-  override def reportLatestOffset(): Offset = latestOffset()
-
-  /** Cap the batch end at `start + limit` records, allocating the budget
-    * across partitions proportionally to backlog (largest-remainder),
-    * exactly the real source's rate-limit split. */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val avail = FakeBroker.latestOffsets(topic)
-    val s = start.asInstanceOf[FakeKafkaOffset].offsets
-    limit match {
-      case mr: ReadMaxRows =>
-        val backlog = avail.indices.map(p => math.max(0L, avail(p) - math.max(s(p),
-          0L))).toArray
-        val total = backlog.sum
-        if (total <= mr.maxRows) FakeKafkaOffset(avail)
-        else {
-          val take = new Array[Long](backlog.length)
-          var given = 0L
-          backlog.indices.foreach { p =>
-            take(p) = backlog(p) * mr.maxRows / total
-            given += take(p)
-          }
-          // largest-remainder distribution of the integer leftovers,
-          // index-ordered for determinism
-          var left = mr.maxRows - given
-          backlog.indices
-            .sortBy(p => -(backlog(p) * mr.maxRows % total))
-            .foreach { p =>
-              if (left > 0 && take(p) < backlog(p)) { take(p) += 1; left -= 1 }
-            }
-          FakeKafkaOffset(avail.indices.map(p =>
-            math.max(s(p), 0L) + take(p)).toArray)
-        }
-      case _ => FakeKafkaOffset(avail)
-    }
-  }
 
   override def deserializeOffset(json: String): Offset = FakeKafkaOffset.fromJson(json)
 
@@ -201,8 +147,7 @@ private[fake] class FakeKafkaStream(
 
   override def createReaderFactory(): PartitionReaderFactory = new FakeKafkaReaderFactory
 
-  override def commit(end: Offset): Unit =
-    FakeBroker.recordCommit(topic, end.asInstanceOf[FakeKafkaOffset].offsets)
+  override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = ()
 }
@@ -244,30 +189,23 @@ private[fake] class FakeKafkaReaderFactory extends PartitionReaderFactory {
   }
 }
 
-/** Streaming + batch write in one: tasks publish as they write (the real
-  * Kafka sink's at-least-once contract — no transaction to roll back), so
-  * epoch/job commit and abort are no-ops. */
-private[fake] class FakeKafkaWrite(topic: String, schema: StructType)
-  extends StreamingWrite with BatchWrite {
+/** The streaming write: tasks publish as they write (the real Kafka
+  * sink's at-least-once contract — no transaction to roll back), so epoch
+  * commit and abort are no-ops. */
+private[fake] class FakeKafkaWrite(topic: String, schema: StructType) extends StreamingWrite {
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new FakeKafkaWriterFactory(topic, schema)
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new FakeKafkaWriterFactory(topic, schema)
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-  // both parents provide a default; tasks publish directly, no coordination
+  // tasks publish directly, no coordination
   override def useCommitCoordinator(): Boolean = false
 }
 
 private[fake] class FakeKafkaWriterFactory(topic: String, schema: StructType)
-  extends StreamingDataWriterFactory with DataWriterFactory {
+  extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    createWriter(partitionId, taskId)
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
       private val valueIdx = FakeKafka.resolveField(schema, "value", required = true).get
       private val keyIdx = FakeKafka.resolveField(schema, "key", required = false)

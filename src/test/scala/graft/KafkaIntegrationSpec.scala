@@ -67,7 +67,7 @@ class KafkaIntegrationSpec extends SparkSpec {
       val q = KafkaIO.sink(
         KafkaIO.source(spark, bs, in, "earliest")
           .select(col("key"), col("value")),
-        identity, bs, out, cp, "append", "0 seconds").start()
+        bs, out, cp, "append", "0 seconds").start()
       q.processAllAvailable()
       q.stop()
     }

@@ -152,50 +152,89 @@ class PlanShapeSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  /** The last executed plan of a started query, after checking that the
+    * query writes through Spark's streaming DSv2 sink (no `foreachBatch`)
+    * and runs exactly one stateful operator and no aggregate. */
+  private def streamingSinkPlan(q: org.apache.spark.sql.streaming.StreamingQuery) = {
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.datasources.v2.WriteToDataSourceV2Exec
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.execution.streaming.sources.ForeachBatchSink
+    val sq = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    assert(!sq.sink.isInstanceOf[ForeachBatchSink[_]], sq.sink)
+    val plan = sq.lastExecution.executedPlan
+    assert(plan.collect { case w: WriteToDataSourceV2Exec => w }.length == 1, plan)
+    assert(plan.collect { case s: StatefulOperator => s }.length == 1, plan)
+    assert(plan.collect {
+      case a: HashAggregateExec => a
+      case a: ObjectHashAggregateExec => a
+      case a: SortAggregateExec => a
+    }.isEmpty, plan)
+    assert(q.lastProgress.stateOperators.length == 1)
+    plan
+  }
+
   test("statsStream runs all six windows as one stateful aggregation with no Expand") {
-    // One per-symbol pane operator emits the nested records; a per-window
-    // window() topology would plan six StateStoreSaveExecs and six wide
-    // Expands, the explode-and-aggregate one a StateStoreSaveExec, and the
-    // collect_list re-nest an object-hash aggregate that falls back to sort.
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.execution.{ExpandExec, SparkPlan}
-    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    // One per-symbol pane operator emits the nested records, and the
+    // streaming sink writes their encode; a per-window window() topology
+    // would plan six StateStoreSaveExecs and six wide Expands, the
+    // explode-and-aggregate one a StateStoreSaveExec, and a collect_list
+    // re-nest an object-hash aggregate that falls back to sort.
+    import org.apache.spark.sql.execution.ExpandExec
     import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
     import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
-    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.{KafkaIO, MovingStatsJob}
+    import graft.streaming.fake.FakeBroker
     import spark.implicits._
+    FakeBroker.createTopic("plan-shape-moving")
     val in = MemoryStream[String](spark)
-    val encodePlans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
-    val q = graft.streaming.MovingStatsJob.statsStream(in.toDF()).writeStream
-      .queryName("stats_plan_shape").outputMode("update")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val encoded = graft.streaming.MovingStatsJob.nested(b)
-        encoded.collect() // a foreachBatch must read every partition
-        encodePlans.synchronized { encodePlans += encoded.queryExecution.sparkPlan }
-        ()
-      }.start()
+    val q = KafkaIO.sink(MovingStatsJob.nested(MovingStatsJob.statsStream(in.toDF())), "fake:9092",
+      "plan-shape-moving", java.nio.file.Files.createTempDirectory("graft-plan-shape").toString,
+      "update", "0 seconds", "fakekafka").start()
     try {
       in.addData("""{"symbol":"BTC","price":1.0,"event_time":"2024-01-01T00:00:02Z"}""")
       q.processAllAvailable()
-      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val plan = streamingSinkPlan(q)
       assert(plan.collect { case s: FlatMapGroupsWithStateExec => s }.length == 1, plan)
-      assert(encodePlans.nonEmpty)
-      (plan +: encodePlans.synchronized(encodePlans.toList)).foreach { p =>
-        assert(p.collect {
-          case s: StateStoreSaveExec => s
-          case e: ExpandExec => e
-          case a: ObjectHashAggregateExec => a
-          case a: SortAggregateExec => a
-        }.isEmpty, p)
-      }
-      assert(q.lastProgress.stateOperators.length == 1)
+      assert(plan.collect {
+        case s: StateStoreSaveExec => s
+        case e: ExpandExec => e
+      }.isEmpty, plan)
     } finally q.stop()
+  }
+
+  test("both jobs write through the streaming sink from one stateful operator: no foreachBatch, aggregate or z-score explode") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import graft.streaming.{MovingStatsJob, ZScoreJob}
+    import graft.streaming.fake.FakeBroker
+    val (price, moving, zout) = ("plan-shape-price", "plan-shape-btc-moving", "plan-shape-zscore")
+    Seq(price, moving, zout).foreach(FakeBroker.createTopic(_))
+    (0 until 30).foreach { i =>
+      val at = java.time.Instant.ofEpochSecond(1704067200L + i)
+      FakeBroker.publish(price, null,
+        s"""{"symbol":"BTC","price":${100.0 + i % 3},"event_time":"$at"}""".getBytes("UTF-8"))
+    }
+    def ckpt() = java.nio.file.Files.createTempDirectory("graft-plan-shape").toString
+    val qm = MovingStatsJob.run(spark, "fake:9092", price, moving, ckpt(), MovingStatsJob.H1Mode.ForeachBatch,
+      format = "fakekafka", startingOffsets = "earliest", triggerInterval = "0 seconds")
+    val qz = ZScoreJob.run(spark, "fake:9092", price, moving, zout, ckpt(), MovingStatsJob.H1Mode.ForeachBatch,
+      format = "fakekafka", startingOffsets = "earliest", triggerInterval = "0 seconds")
+    try {
+      qm.processAllAvailable()
+      qz.processAllAvailable()
+      streamingSinkPlan(qm)
+      val zplan = streamingSinkPlan(qz)
+      assert(zplan.collect { case g: GenerateExec => g }.isEmpty, zplan)
+      assert(FakeBroker.latestOffsets(zout).sum > 0, "the z-score job must have written")
+    } finally { qm.stop(); qz.stop() }
   }
 
   test("the z-score query pairs in one flatMapGroupsWithState with no join and no moving-side JSON parse") {
     // moving records are read from their key, so their JSON parse (the
     // windows' decode) runs only above the operator, on the emitted rows
-    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.catalyst.expressions.{JsonToStructs, LambdaFunction}
     import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
@@ -225,6 +264,11 @@ class PlanShapeSpec extends SparkSpec {
       assert(union.children.length == 2, union)
       assert(!parsesJson(union.children(1)), union.children(1))
       assert(parsesJson(plan), "the emitted rows' windows are decoded above the operator")
+      // once per emitted row, not once per price inside a lambda
+      assert(!plan.exists(_.expressions.exists(_.exists {
+        case l: LambdaFunction => l.function.exists(_.isInstanceOf[JsonToStructs])
+        case _ => false
+      })), plan)
       // the off-grid tick is filtered above the watermark, so it still
       // moves the watermark, as every tick moved the join's
       val maxSeen = q.recentProgress.toSeq.flatMap(p => Option(p.eventTime.get("max")))

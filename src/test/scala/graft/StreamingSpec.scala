@@ -13,7 +13,7 @@ import graft.streaming.{MovingStatsJob, ZScoreJob}
 
 /** Structured Streaming behavior driven synchronously with MemoryStream:
   * update-mode emission, watermark late-data policy, the z-score
-  * operator's equi-join semantics, H1 foreachBatch re-nesting, and
+  * operator's equi-join semantics, the moving record's JSON encode, and
   * watermarked stream deduplication. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -281,7 +281,7 @@ class StreamingSpec extends SparkSpec {
     s"""{"window":"30s","avg_price":$avg,"std_price":$std}"""
 
   /** A z-score query over MemoryStreams of ticks and keyed moving records,
-    * into a memory table. */
+    * into a memory table of (event_time, symbol, zscores). */
   private def zscoreQuery(name: String) = {
     val ticksIn = MemoryStream[PriceTick](spark)
     val movingIn = MemoryStream[(String, String, Long)](spark)
@@ -295,7 +295,10 @@ class StreamingSpec extends SparkSpec {
     df.collect().toSeq.map(r =>
       (r.getAs[Timestamp]("event_time").getTime, r.getAs[String]("window"), r.getAs[Double]("zscore_price"))).sorted
 
-  private def zRows(name: String): Seq[(Long, String, Double)] = zTriples(spark.table(name))
+  /** (tick ms, window, z) of every entry of a z-score query's records, sorted. */
+  private def zRows(name: String): Seq[(Long, String, Double)] =
+    zTriples(spark.table(name).select(col("event_time"), explode(col("zscores")).as("z"))
+      .select(col("event_time"), col("z.window"), col("z.zscore_price")))
 
   /** The batch path's (tick ms, window, z) for `ticks` against the
     * moving record values `values`: explode, equi-join, z-score. */
@@ -316,10 +319,9 @@ class StreamingSpec extends SparkSpec {
       ticksIn.addData(ticks: _*)
       movingIn.addData(rec)
       q.processAllAvailable()
-      val rows = spark.table("z_out").orderBy("window").collect()
-      assert(rows.length == 2) // one per window entry, only the boundary tick
-      assert(rows.map(_.getAs[Double]("zscore_price")).sorted.sameElements(Array(0.0, 2.0)))
-      assert(rows.forall(_.getAs[Double]("price") == 110.0))
+      // one entry per window, only the boundary tick's
+      assert(zRows("z_out").map(r => (r._1, r._3)).sorted ==
+        Seq((ticks.head.event_time.getTime, 0.0), (ticks.head.event_time.getTime, 2.0)))
       assert(zRows("z_out") == batchZ(ticks, Seq(rec._2)))
     } finally q.stop()
   }
@@ -401,20 +403,15 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("H1 foreachBatch re-nest: nested JSON output without chained stateful aggs") {
+  test("the moving records stream as the reference's nested JSON from one stateful operator") {
     val in = MemoryStream[String](spark)
-    val flat = MovingStatsJob.statsStream(in.toDF())
-    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q = flat.writeStream
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        seen ++= MovingStatsJob.nested(batch).select("value").as[String].collect()
-        ()
-      }
-      .start()
+    val q = MovingStatsJob.nested(MovingStatsJob.statsStream(in.toDF())).writeStream
+      .format("memory").queryName("mv_nested").outputMode(OutputMode.Update).start()
     try {
       in.addData(tickJson("BTCUSDT", 100.0, "2024-01-01T00:00:02.000Z"))
       q.processAllAvailable()
+      assert(q.lastProgress.stateOperators.length == 1)
+      val seen = spark.table("mv_nested").select("value").as[String].collect()
       assert(seen.nonEmpty)
       val js = seen.find(_.contains(""""window":"30s"""")).get
       assert(js.contains(""""symbol":"BTCUSDT"""") && js.contains(""""windows":["""))

@@ -175,15 +175,20 @@ class TickOpsSpec extends SparkSpec {
     assert(out.head.getAs[String]("timestamp") == "2024-01-01 00:00:10")
   }
 
-  test("toKafkaJson emits the reference's JSON shape") {
-    val nested = TickOps.nestWindows(
-      TickOps.slidingStats(
-        ticksDf(("BTC", 100.0, "2024-01-01 00:00:02")),
-        WindowConfig("30s", "30 seconds"), exact = true))
-    val json = TickOps.toKafkaJson(nested, Seq("timestamp", "symbol", "windows"))
-      .as[String].collect().head
-    assert(json.contains(""""symbol":"BTC""""))
-    assert(json.contains(""""windows":[{"window":"30s""""))
+  test("the job encoders write the reference's JSON, keyed <time ms>|<symbol>") {
+    val at = ts("2024-01-01 00:00:10")
+    val moving = Seq((at, "BTC", Seq(Models.WindowStats("30s", 100.0, 5.0))))
+      .toDF("window_timestamp", "symbol", "windows")
+    val zscores = Seq((at, "BTC", Seq(Models.ZScoreEntry("30s", 2.0))))
+      .toDF("event_time", "symbol", "zscores")
+    val Array(m) = graft.streaming.MovingStatsJob.nested(moving).collect()
+    assert(m.getString(0) == s"${at.getTime}|BTC")
+    assert(m.getString(1) == """{"timestamp":"2024-01-01 00:00:10","symbol":"BTC",""" +
+      """"windows":[{"window":"30s","avg_price":100.0,"std_price":5.0}]}""")
+    val Array(z) = graft.streaming.ZScoreJob.nested(zscores).collect()
+    assert(z.getString(0) == s"${at.getTime}|BTC")
+    assert(z.getString(1) == """{"timestamp":"2024-01-01 00:00:10","symbol":"BTC",""" +
+      """"zscores":[{"window":"30s","zscore_price":2.0}]}""")
   }
 
   test("from_json schema matches the declared reader schemas") {
